@@ -44,10 +44,7 @@ def make_job(regime: str, waves: int, budget: int) -> CrawlJob:
         kw.update(
             use_bloom=True,
             seen_filter="bloom",
-            prefilter_store="table",
-            probe_mode="routed",
             seen_horizon_waves=waves,
-            frontier_checkpoint="delta",
         )
     return CrawlJob(**kw)
 

@@ -139,9 +139,6 @@ def main() -> None:
                     help="pin each leg to cores*this many CPUs (0 = unpinned)."
                          " 4 gives local[2]->8 cores vs local[8]->32 cores:"
                          " resources scale exactly 4x, like real executors")
-    ap.add_argument("--frontier", default=None, choices=["full", "delta"],
-                    help="frontier checkpoint layout override"
-                         " (unset = CrawlJob default, currently delta)")
     ap.add_argument("--out", default="scaling_result.json",
                     help="result filename under BENCH/ (default overwrites"
                          " the canonical scaling_result.json — pass a"
@@ -149,7 +146,7 @@ def main() -> None:
     ap.add_argument("--regime", default="default", choices=["default", "full10"],
                     help="full10 = the complete 10^10-URL feature set ON:"
                          " seen prefilter (bloom) stored as a parquet shard"
-                         " table, routed probe forced, seen horizon aging,"
+                         " table, seen horizon aging,"
                          " flip-gated exact resolution, delta frontier —"
                          " the at-scale configuration integration-tested"
                          " only at toy scale before round 4")
@@ -165,19 +162,14 @@ def main() -> None:
             ExtensionFilter(excluded=frozenset({"tmp", "log", "bak", "pyc"})),
         ),
     )
-    if args.frontier is not None:
-        job_kw["frontier_checkpoint"] = args.frontier
     if args.regime == "full10":
         job_kw.update(
             use_bloom=True,
             seen_filter="bloom",
-            prefilter_store="table",
-            probe_mode="routed",
             seen_horizon_waves=args.waves,  # == waves run: the aging
             #   machinery (cohort tracking, horizon-filtered view) runs
             #   every wave but no cohort ages out inside the run, so
             #   outputs stay comparable to the default regime
-            frontier_checkpoint=job_kw.get("frontier_checkpoint", "delta"),
         )
     job = CrawlJob(**job_kw)
     seed_rows = None

@@ -98,11 +98,7 @@ def cmd_crawl(args: argparse.Namespace) -> None:
         salt_buckets=cfg.get("salt_buckets", 32),
         small_wave_threshold=cfg.get("small_wave_threshold", 100_000),
         broadcast_wave_threshold=cfg.get("broadcast_wave_threshold", 2_000_000),
-        frontier_checkpoint=_flag_over_config(
-            cfg, "frontier_checkpoint", args.frontier, "delta"
-        ),
         frontier_compact_every=cfg.get("frontier_compact_every", 8),
-        prefilter_store=cfg.get("prefilter_store", "memory"),
     )
     res = run_crawl(
         spark,
@@ -467,9 +463,6 @@ def main(argv: list[str] | None = None) -> None:
     c.add_argument("--bloom", action=argparse.BooleanOptionalAction,
                    default=None)
     c.add_argument("--resume", action="store_true")
-    c.add_argument("--frontier", default=None, choices=["full", "delta"],
-                   help="frontier checkpoint layout (delta = children-only"
-                        " writes + periodic compaction snapshots)")
     c.set_defaults(fn=cmd_crawl)
 
     s = sub.add_parser("stats", help="analytics over committed results")

@@ -1,32 +1,29 @@
-"""Storage-resident prefilter bank — the 10^10-URL home of the seen
-pre-filter (round-3 verdict "What's wrong" #1).
+"""Storage-resident prefilter bank — the one home of the seen-set
+prefilter (operators/dedup.py anti_join_seen's tier 1).
 
-The in-memory ShardedBloom/ShardedCuckoo banks are correct but live on
-the driver: at 10^10 seen URLs a 1%-FPP bloom bank is ~12 GB, and the
-driver both HOLDS it between waves and TRANSITS it every wave (delta
-banks collected back, shard tables re-shipped via createDataFrame for
-every merge and probe) — an O(bank-bytes)-per-wave flow that does not
-scale.  StoredBank moves the bank's home to a parquet table of shard
-blobs inside the checkpoint directory:
+At 10^10 seen URLs a 1%-FPP bloom bank is ~12 GB: it neither fits on
+the driver nor should transit it every wave.  StoredBank keeps the
+bank in a parquet table of shard blobs inside the checkpoint directory:
 
   {path}/v{K}/          parquet (shard int, payload binary,
                                  saturated boolean) — one row per shard
   {path}/meta.json      geometry + shard->version manifest + crawl
                         bookkeeping (n_added, cohorts, merged_upto)
 
-and every operation becomes an executor-side Spark job over that table:
+and every operation is an executor-side Spark job over that table:
 
   build       hash shards -> mapInPandas builds each shard's filter
-              locally -> .write.parquet(v0).  No collect — payload
-              bytes go executor -> storage, never through the driver.
+              (dedup.NumpyBloom or dedup.CuckooFilter) locally ->
+              .write.parquet(v0).  No collect — payload bytes go
+              executor -> storage, never through the driver.
   merge_delta the wave's seen-delta hashes COGROUP the bank scan
               FILTERED to the delta's touched shards; updated blobs
               land in a new version dir.  Job input ~ O(|delta| +
               touched shard blobs); untouched shards keep their old
               file (manifest pointer unchanged) — nothing is copied.
-  probe       dedup.cogroup_probe fed by the bank-table scan instead
-              of a driver createDataFrame: filter bytes flow
-              storage -> executors.
+              Cuckoo banks also delete (seen-horizon cohort aging).
+  probe       dedup.cogroup_probe fed by the bank-table scan: filter
+              bytes flow storage -> executors.
   compact     rewrites the latest blobs into one version dir when the
               manifest spans too many (merge-on-read -> snapshot, the
               same model as the delta frontier checkpoint).
@@ -36,13 +33,10 @@ shard->version dict (O(n_shards) ints) — never a payload byte.
 
 Crash-consistency: meta.json is written atomically (tmp + rename)
 AFTER each version dir, and records `merged_upto` = the last wave
-whose seen-delta is merged in; a resume reconciles by replaying the
-committed seen-deltas the bank missed (wave_loop.py), so the bank
-lags the exact seen table by at most one recoverable step.
-
-Replaces nothing in dedup.py — the in-memory bank remains the
-small-crawl fast path (no table IO per wave); CrawlJob.prefilter_store
-selects the home.  Reference parity: this is the durable analog of the
+whose seen-delta is merged in; a resume reopens the bank instead of
+rebuilding it and replays the committed seen-deltas it missed
+(wave_loop.py), so the bank lags the exact seen table by at most one
+recoverable step.  Reference parity: this is the durable analog of the
 reference's in-memory processed-paths set + DB probe
 (app/crawler/file_system_crawler.py:70,412-415).
 """
@@ -275,11 +269,6 @@ class StoredBank:
             n_bits=self.n_bits or None,
             n_hashes=self.n_hashes or None,
         )
-
-    def might_contain_df(self, df: DataFrame, col: str) -> DataFrame:
-        """df + _maybe_seen — parity/testing surface matching the
-        in-memory banks' might_contain semantics."""
-        return self.probe(df, col)
 
     # -- incremental maintenance --------------------------------------------
     def merge_delta(

@@ -1,40 +1,43 @@
-"""Seen-set dedup (J2) — exact anti-join anchored, bloom-accelerated.
+"""Seen-set dedup (J2) — exact anti-join anchored, prefilter-accelerated.
 
 The reference keeps an in-memory processed-paths set + a DB point probe
 (app/crawler/file_system_crawler.py:70,412-415;
 app/crawling_queue_consumer.py:111-115; app/database/data_manager.py:85-87).
-At 10^10 URLs neither fits one machine, so (north rule):
+At 10^10 URLs neither fits one machine, so the contract is two tiers:
 
-  tier 1 — broadcast **Bloom filter** over the seen set: a vectorized
-           numpy bit-array probe classifies each candidate as
-           definitely-unseen (bloom negative) or possibly-seen.
+  tier 1 — a sharded membership **prefilter** (bloom or cuckoo) tags
+           each candidate as definitely-unseen or possibly-seen.  The
+           bank lives in a parquet table of per-shard blobs
+           (operators/bankstore.StoredBank); the probe is a cogroup
+           that ships each task only its own shard (cogroup_probe).
   tier 2 — exact **left_anti join** against the `seen` table for the
-           possibly-seen minority.  The Bloom is only ever a
+           possibly-seen minority.  The prefilter is only ever a
            pre-filter: its false positives fall through to the exact
            join and are resolved there, never dropped (SURVEY §7.4 —
            FP => candidate wrongly dropped is the failure mode this
            two-tier split prevents).
 
-The definitely-unseen majority skips the shuffle entirely — the warm
+The definitely-unseen majority skips the exact join entirely — the warm
 re-run speedup the reference reports (156x, README.md:111-115)
-becomes "anti-join input shrinks to the bloom-positive fraction".
+becomes "anti-join input shrinks to the filter-positive fraction".
 
-Scale notes: the bit array is built distributedly (per-partition numpy
-OR via RDD treeAggregate — executors never ship raw URLs, only bit
-arrays) and broadcast once per wave.  At 10^10 URLs a single bloom is
-~12 GB at 1% FPP, past broadcast range — the deployment-scale design
-shards the bloom by host-hash into per-partition filters (the same
-two-tier contract per shard); the sandbox uses one shard.
+This module holds the shard kernels (NumpyBloom, CuckooFilter), the
+routed probe plan and the exact tier; bankstore.py owns the bank's
+storage, build and incremental maintenance.
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+if TYPE_CHECKING:
+    from fscrawler_spark.operators.bankstore import StoredBank
 
 
 class NumpyBloom:
@@ -95,9 +98,9 @@ class CuckooFilter:
     copy, every delete removes one, so fingerprint-colliding retained
     URLs keep their own copy.
 
-    Scale note: filters shard by h1-range (each shard built from its
-    own partition's hashes, no cross-shard evictions) — see
-    build_cuckoo / merge_cuckoo_delta.
+    Scale note: banks shard by pmod(h1, n_shards), each shard built
+    from its own partition's hashes (no cross-shard evictions) — see
+    bankstore.StoredBank.build / merge_delta.
     """
 
     def __init__(self, n_buckets: int, table: np.ndarray | None = None):
@@ -181,371 +184,10 @@ class CuckooFilter:
         return removed
 
 
-class ShardedCuckoo:
-    """Bank of cuckoo-filter shards keyed by pmod(h1, n_shards).
-
-    Each shard is built executor-side from only its own hashes (no
-    cross-shard evictions by construction), so the build is fully
-    distributed: the driver receives finished fingerprint tables, never
-    raw hashes.  FP-safety under saturation (round-1 advisory): a shard
-    whose eviction chains exhausted (dropped > 0) can no longer prove
-    "definitely unseen", so it degrades to answering True for every
-    probe — its candidates all fall through to the exact anti-join,
-    which is correct (just slower for that 1/n_shards slice) instead of
-    silently re-scheduling seen URLs.
-
-    capacity_items/n_added track the sizing contract for the
-    incremental-maintenance path (merge_cuckoo_delta): the bank is
-    built once sized for `capacity_items`, per-wave deltas insert into
-    the existing shard tables, and a full rebuild happens only when
-    n_added would exceed capacity (resize) — never per wave.
-    """
-
-    def __init__(
-        self,
-        n_shards: int,
-        shards: dict[int, CuckooFilter],
-        saturated: frozenset[int] = frozenset(),
-        per_shard_buckets: int | None = None,
-        capacity_items: int = 0,
-        n_added: int = 0,
-    ):
-        self.n_shards = int(n_shards)
-        self.shards = shards
-        self.saturated = frozenset(saturated)
-        self.per_shard_buckets = per_shard_buckets or (
-            next(iter(shards.values())).n_buckets if shards else 16
-        )
-        self.capacity_items = int(capacity_items)
-        self.n_added = int(n_added)
-
-    def total_bytes(self) -> int:
-        return sum(cf.table.nbytes for cf in self.shards.values())
-
-    def might_contain(self, h1: np.ndarray, h2: np.ndarray | None = None) -> np.ndarray:
-        h1 = np.asarray(h1, np.int64)
-        # numpy's % matches Spark's pmod for negative int64 (non-negative)
-        sid = h1 % np.int64(self.n_shards)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sid):
-            mask = sid == s
-            if int(s) in self.saturated:
-                out[mask] = True  # unreliable shard: everything "maybe seen"
-            elif int(s) in self.shards:
-                out[mask] = self.shards[int(s)].might_contain(h1[mask])
-            # else: no seen hash ever landed in shard s -> definitely unseen
-        return out
-
-    def delete_hashes(self, h1: np.ndarray) -> int:
-        """Aging/spill path: per-shard fingerprint deletes (skips
-        saturated shards — already degraded to pass-through)."""
-        h1 = np.asarray(h1, np.int64)
-        sid = h1 % np.int64(self.n_shards)
-        removed = 0
-        for s in np.unique(sid):
-            if int(s) in self.shards and int(s) not in self.saturated:
-                removed += self.shards[int(s)].delete_hashes(h1[sid == s])
-        return removed
-
-
-def build_cuckoo(
-    df: DataFrame, col: str, n_items: int, n_shards: int | None = None
-) -> ShardedCuckoo:
-    """Distributed sharded build from the xxhash64 of a column.
-
-    Shard-by-pmod(h1) -> repartition on the shard id -> each executor
-    builds its shards' fingerprint tables locally (Arrow-batched via
-    mapInPandas) -> only the finished tables return to the driver.
-    Nothing row-shaped crosses the wire and the driver never holds the
-    hash column (the round-1 toPandas() build was ~80 GB of int64s at
-    10^10 URLs — the exact driver-side bottleneck the north rule
-    forbids).  Per-shard dropped counts are checked: a shard that
-    overflowed is marked saturated and degrades to pass-through (see
-    ShardedCuckoo) rather than breaking the two-tier FP-safety contract.
-    """
-    spark = df.sparkSession
-    if n_shards is None:
-        n_shards = max(1, spark.sparkContext.defaultParallelism)
-    # 1.25x headroom over the uniform per-shard expectation keeps the
-    # load factor under the 0.84 sizing target despite hash jitter.
-    per_shard = max(64, int(n_items / n_shards * 1.25))
-
-    hashed = df.select(F.xxhash64(F.col(col)).alias("_h1")).withColumn(
-        "_s", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
-    )
-    parted = hashed.repartition(n_shards, "_s")
-
-    def build_shards(batches):
-        acc: dict[int, list[np.ndarray]] = {}
-        for pdf in batches:
-            for s, grp in pdf.groupby("_s"):
-                acc.setdefault(int(s), []).append(grp["_h1"].to_numpy(np.int64))
-        rows = []
-        for s, chunks in acc.items():
-            cf = CuckooFilter.sized_for(per_shard)
-            dropped = cf.add_hashes(np.concatenate(chunks))
-            rows.append((s, cf.n_buckets, cf.table.tobytes(), int(dropped)))
-        yield pd.DataFrame(
-            rows, columns=["shard", "n_buckets", "table", "dropped"]
-        )
-
-    built = parted.mapInPandas(
-        build_shards, "shard int, n_buckets int, table binary, dropped long"
-    ).collect()
-
-    shards: dict[int, CuckooFilter] = {}
-    saturated = set()
-    for r in built:
-        if r["shard"] in shards:  # invariant must survive python -O
-            raise RuntimeError("cuckoo shard split across partitions")
-        table = np.frombuffer(r["table"], dtype=np.uint16).reshape(-1, 4).copy()
-        shards[r["shard"]] = CuckooFilter(r["n_buckets"], table)
-        if r["dropped"] > 0:
-            saturated.add(r["shard"])
-    proto = CuckooFilter.sized_for(per_shard)
-    return ShardedCuckoo(
-        n_shards, shards, frozenset(saturated),
-        per_shard_buckets=proto.n_buckets, capacity_items=n_items,
-    )
-
-
-def merge_cuckoo_delta(
-    bank: ShardedCuckoo, df: DataFrame, col: str, op: str = "insert"
-) -> ShardedCuckoo:
-    """Incremental distributed maintenance: insert (or delete) one
-    cohort's hashes into the EXISTING shard tables without touching the
-    rest of the seen set.
-
-    Mechanics: the delta's JVM-computed hashes are grouped by shard and
-    COGROUPed with the bank's fingerprint tables, so each task receives
-    exactly (its shard's delta hashes, its shard's table) — 1/n_shards
-    of the bank per task, no broadcast, no full-seen rescan.  Only
-    shards that actually received delta rows return updated tables;
-    untouched shards keep their driver-held table.  op="delete" is the
-    epoch-aging path — sound ONLY when the evicted cohort leaves the
-    exact seen table in the same move (the wave loop's
-    seen_horizon_waves policy; see CuckooFilter's deletion contract).
-    A saturated shard stays pass-through: inserts/deletes into it are
-    no-ops by design.
-
-    Per-wave cost is O(|delta|) hash/shuffle plus one bank round-trip
-    over the network — vs the O(|seen|) full rebuild this replaces
-    (round-2 verdict, "What's wrong" #2).
-    """
-    spark = df.sparkSession
-    n_shards = bank.n_shards
-    per_shard_buckets = bank.per_shard_buckets
-    hashed = df.select(F.xxhash64(F.col(col)).alias("_h1")).withColumn(
-        "_s", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
-    )
-    tables = spark.createDataFrame(
-        [
-            (int(s), int(cf.n_buckets), cf.table.tobytes(), bool(s in bank.saturated))
-            for s, cf in bank.shards.items()
-        ]
-        or [(-1, 0, b"", False)],  # createDataFrame needs >=1 row; -1 never matches
-        "shard int, n_buckets int, table binary, saturated boolean",
-    )
-    insert = op == "insert"
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "shard": pd.Series([], dtype="int32"),
-                "n_buckets": pd.Series([], dtype="int32"),
-                "table": pd.Series([], dtype=object),
-                "saturated": pd.Series([], dtype=bool),
-            }
-        )
-        if left.empty:  # no delta for this shard: driver keeps its table
-            return empty
-        s = int(left["_s"].iloc[0])
-        if s < 0:
-            return empty
-        if right.empty:
-            cf = CuckooFilter(per_shard_buckets)
-            sat = False
-        else:
-            r = right.iloc[0]
-            cf = CuckooFilter(
-                int(r["n_buckets"]),
-                np.frombuffer(r["table"], np.uint16).reshape(-1, 4).copy(),
-            )
-            sat = bool(r["saturated"])
-        if not sat:
-            h = left["_h1"].to_numpy(np.int64)
-            if insert:
-                sat = cf.add_hashes(h) > 0
-            else:
-                cf.delete_hashes(h)
-        return pd.DataFrame(
-            {
-                "shard": [s],
-                "n_buckets": [cf.n_buckets],
-                "table": [cf.table.tobytes()],
-                "saturated": [sat],
-            }
-        )
-
-    updated = (
-        hashed.groupBy("_s")
-        .cogroup(tables.groupBy("shard"))
-        .applyInPandas(fn, "shard int, n_buckets int, table binary, saturated boolean")
-        .collect()
-    )
-    new_shards = dict(bank.shards)
-    new_sat = set(bank.saturated)
-    for r in updated:
-        new_shards[r["shard"]] = CuckooFilter(
-            r["n_buckets"],
-            np.frombuffer(r["table"], dtype=np.uint16).reshape(-1, 4).copy(),
-        )
-        if r["saturated"]:
-            new_sat.add(r["shard"])
-    return ShardedCuckoo(
-        n_shards, new_shards, frozenset(new_sat),
-        per_shard_buckets=per_shard_buckets,
-        capacity_items=bank.capacity_items, n_added=bank.n_added,
-    )
-
-
 def _hash_cols(df: DataFrame, col: str) -> DataFrame:
     return df.select(
         F.xxhash64(F.col(col)).alias("_h1"), F.hash(F.col(col)).cast("long").alias("_h2")
     )
-
-
-class ShardedBloom:
-    """Bank of bloom shards keyed by pmod(h1, n_shards) — the 10^10
-    deployment shape: one monolithic bloom at 1% FPP is ~12 GB (past
-    broadcast range); shards are independently buildable, independently
-    routable (the cogroup probe ships each task ONLY its shard — see
-    routed_probe), and independently refreshable per crawl epoch.  A
-    shard with no filter means no seen hash ever landed there
-    -> definitely unseen.
-
-    Incremental maintenance: bloom bit-OR is associative, so a bank
-    built from one wave's seen-delta with the SAME geometry (n_shards,
-    n_bits, n_hashes) merges into this bank shard-by-shard
-    (merge_delta) — per-wave cost O(|delta|), vs the O(|seen|) full
-    rebuild (round-2 verdict, "What's wrong" #2).  capacity_items is
-    the item count the geometry was sized for; exceeding it degrades
-    fpp, which is when the caller does the one real rebuild."""
-
-    def __init__(
-        self,
-        n_shards: int,
-        shards: dict[int, NumpyBloom],
-        n_bits: int | None = None,
-        n_hashes: int | None = None,
-        capacity_items: int = 0,
-        n_added: int = 0,
-    ):
-        self.n_shards = int(n_shards)
-        self.shards = shards
-        proto = next(iter(shards.values())) if shards else None
-        self.n_bits = int(n_bits if n_bits is not None else (proto.n_bits if proto else 64))
-        self.n_hashes = int(
-            n_hashes if n_hashes is not None else (proto.n_hashes if proto else 1)
-        )
-        self.capacity_items = int(capacity_items)
-        self.n_added = int(n_added)
-
-    @property
-    def geometry(self) -> tuple[int, int, int]:
-        return (self.n_shards, self.n_bits, self.n_hashes)
-
-    def total_bytes(self) -> int:
-        return sum(b.bits.nbytes for b in self.shards.values())
-
-    def merge_delta(self, delta: "ShardedBloom") -> None:
-        """Bitwise-OR a same-geometry delta bank into this one, in
-        place.  Only the delta's populated shards are touched."""
-        if delta.geometry != self.geometry:
-            raise RuntimeError(
-                f"bloom geometry mismatch: {delta.geometry} vs {self.geometry}"
-            )
-        for s, b in delta.shards.items():
-            mine = self.shards.get(s)
-            if mine is None:
-                self.shards[s] = b
-            else:
-                np.bitwise_or(mine.bits, b.bits, out=mine.bits)
-
-    def might_contain(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        h1 = np.asarray(h1, np.int64)
-        h2 = np.asarray(h2, np.int64)
-        sid = h1 % np.int64(self.n_shards)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sid):
-            if int(s) in self.shards:
-                mask = sid == s
-                out[mask] = self.shards[int(s)].might_contain(h1[mask], h2[mask])
-        return out
-
-
-def build_bloom(
-    df: DataFrame,
-    col: str,
-    n_items: int,
-    fpp: float = 0.01,
-    n_shards: int | None = None,
-    geometry: tuple[int, int, int] | None = None,
-) -> ShardedBloom:
-    """Distributed sharded build: repartition the JVM-computed hash
-    pairs on pmod(h1, n_shards), build each shard's bit array locally
-    (Arrow-batched), return only finished bit arrays to the driver —
-    rows never leave the executors.  Each shard is sized for its
-    expected share of n_items at the target fpp.
-
-    geometry=(n_shards, n_bits, n_hashes) overrides sizing: delta banks
-    destined for ShardedBloom.merge_delta MUST be built with the target
-    bank's geometry so the bit positions line up."""
-    spark = df.sparkSession
-    if geometry is not None:
-        n_shards, n_bits, n_hashes = geometry
-    else:
-        if n_shards is None:
-            n_shards = max(1, spark.sparkContext.defaultParallelism)
-        per_shard = max(64, int(n_items / n_shards * 1.25))
-        proto = NumpyBloom.sized_for(per_shard, fpp)
-        n_bits, n_hashes = proto.n_bits, proto.n_hashes
-
-    hashed = _hash_cols(df, col).withColumn(
-        "_s", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
-    )
-    parted = hashed.repartition(n_shards, "_s")
-
-    def build_shards(batches):
-        acc: dict[int, NumpyBloom] = {}
-        for pdf in batches:
-            for s, grp in pdf.groupby("_s"):
-                b = acc.setdefault(int(s), NumpyBloom(n_bits, n_hashes))
-                b.add_hashes(
-                    grp["_h1"].to_numpy(np.int64), grp["_h2"].to_numpy(np.int64)
-                )
-        yield pd.DataFrame(
-            [(s, b.bits.tobytes()) for s, b in acc.items()],
-            columns=["shard", "bits"],
-        )
-
-    built = parted.mapInPandas(build_shards, "shard int, bits binary").collect()
-    shards: dict[int, NumpyBloom] = {}
-    for r in built:
-        if r["shard"] in shards:  # invariant must survive python -O
-            raise RuntimeError("bloom shard split across partitions")
-        bits = np.frombuffer(r["bits"], dtype=np.uint64).copy()
-        shards[r["shard"]] = NumpyBloom(n_bits, n_hashes, bits)
-    return ShardedBloom(
-        n_shards, shards, n_bits, n_hashes, capacity_items=n_items
-    )
-
-
-# Above this many filter bytes, broadcasting the whole bank to every
-# executor beats its purpose (the 10^10 bank is ~12 GB); the routed
-# probe ships each task only its shard instead.
-ROUTED_PROBE_BYTES = 64 << 20
-
 
 def cogroup_probe(
     candidates: DataFrame,
@@ -557,15 +199,13 @@ def cogroup_probe(
     n_bits: int | None = None,
     n_hashes: int | None = None,
 ) -> DataFrame:
-    """The shard-routed probe PLAN, independent of where the bank
-    lives: candidates are grouped by pmod(h1, n_shards) and COGROUPed
-    with `tables` — any DataFrame of (shard int, payload binary,
-    saturated boolean) rows, one per populated shard.  Each task
-    receives exactly its shard's filter bytes; the whole bank never
-    broadcasts.  `routed_probe` feeds it a driver-memory bank via
-    createDataFrame; StoredBank (bankstore.py) feeds it the parquet
-    bank-table scan, so the filter bytes flow executor->executor and
-    the driver holds nothing."""
+    """The shard-routed probe plan: candidates are grouped by
+    pmod(h1, n_shards) and COGROUPed with `tables` — a DataFrame of
+    (shard int, payload binary, saturated boolean) rows, one per
+    populated shard (StoredBank feeds it the bank-table scan).  Each
+    task receives exactly its shard's filter bytes, so the bank never
+    broadcasts and never transits the driver.  A saturated shard
+    answers True for every probe; a shard with no row answers False."""
     base_cols = candidates.columns
     out_schema = T.StructType(
         list(candidates.schema.fields)
@@ -610,45 +250,6 @@ def cogroup_probe(
         .applyInPandas(fn, out_schema)
     )
 
-
-def routed_probe(
-    candidates: DataFrame, url_col: str, bank: "ShardedBloom | ShardedCuckoo"
-) -> DataFrame:
-    """Tag candidates with ``_maybe_seen`` via shard routing from a
-    DRIVER-MEMORY bank: the per-shard payloads ship once per probe via
-    createDataFrame and cogroup_probe routes each task exactly its
-    shard (round-2 verdict, "What's wrong" #3: the per-shard-routing
-    claim is the executed plan).  The candidate shuffle this costs is
-    slim frontier rows; at 10^10 seen URLs the bank (~12 GB) dwarfs any
-    wave's frontier, which is exactly when this path wins.
-
-    At deployment scale the bank's home is the parquet bank table
-    (bankstore.StoredBank.probe) — the same cogroup plan fed by a table
-    scan, so the payload bytes never transit the driver at all."""
-    spark = candidates.sparkSession
-    is_bloom = isinstance(bank, ShardedBloom)
-    if is_bloom:
-        rows = [(int(s), b.bits.tobytes(), False) for s, b in bank.shards.items()]
-    else:
-        rows = [
-            (int(s), cf.table.tobytes(), bool(s in bank.saturated))
-            for s, cf in bank.shards.items()
-        ]
-    tables = spark.createDataFrame(
-        rows or [(-1, b"", False)],  # createDataFrame needs >=1 row; -1 never matches
-        "shard int, payload binary, saturated boolean",
-    )
-    return cogroup_probe(
-        candidates,
-        url_col,
-        tables,
-        is_bloom=is_bloom,
-        n_shards=bank.n_shards,
-        n_bits=bank.n_bits if is_bloom else None,
-        n_hashes=bank.n_hashes if is_bloom else None,
-    )
-
-
 def _flip_resolve(maybe: DataFrame, seen: DataFrame, url_col: str) -> DataFrame:
     """`maybe` rows whose url is NOT in `seen`, computed WITHOUT
     shuffling the seen side.
@@ -680,23 +281,14 @@ def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
-    bloom: "NumpyBloom | CuckooFilter | ShardedBloom | ShardedCuckoo | None" = None,
-    probe_mode: str = "auto",
+    bloom: "StoredBank | None" = None,
     flip_broadcast: bool = False,
 ) -> DataFrame:
     """Rows of `candidates` whose url is NOT in `seen` — exact.
 
-    With a membership pre-filter (anything with a vectorized
-    ``might_contain(h1, h2)``), only filter-positive rows enter the
-    anti-join; negatives are provably unseen and bypass the shuffle.
-
-    probe_mode:
-      "broadcast" — ship the whole filter to every executor (cheapest
-          for small banks: no candidate shuffle);
-      "routed"    — shard-routed cogroup probe: each task receives only
-          its shard's bytes (the 10^10 path; see routed_probe);
-      "auto"      — routed when the bank is sharded and exceeds
-          ROUTED_PROBE_BYTES, else broadcast.
+    With a prefilter bank (`bloom`, a bankstore.StoredBank of either
+    kind), only filter-positive rows enter the anti-join; negatives are
+    provably unseen and bypass it.
 
     flip_broadcast: resolve the exact membership via _flip_resolve
     (seen is scanned, never shuffled) — set it when the candidate side
@@ -709,36 +301,7 @@ def anti_join_seen(
             seen.select(F.col(url_col).alias(url_col)), url_col, "left_anti"
         )
 
-    if hasattr(bloom, "bank_df"):  # StoredBank: parquet-resident, probe
-        # is always shard-routed off the table scan (the bank never
-        # materializes on the driver, so broadcast is not an option);
-        # exact resolution below is shared with the in-memory banks
-        tagged = bloom.probe(candidates, url_col)
-    elif probe_mode == "routed" or (
-        probe_mode == "auto"
-        and isinstance(bloom, (ShardedBloom, ShardedCuckoo))
-        and bloom.total_bytes() > ROUTED_PROBE_BYTES
-    ):
-        if not isinstance(bloom, (ShardedBloom, ShardedCuckoo)):
-            raise RuntimeError("probe_mode='routed' requires a sharded bank")
-        tagged = routed_probe(candidates, url_col, bloom)
-    else:
-        sc = candidates.sparkSession.sparkContext
-        b_obj = sc.broadcast(bloom)
-
-        @pandas_udf(T.BooleanType())
-        def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            out = b_obj.value.might_contain(
-                h1.to_numpy(np.int64), h2.to_numpy(np.int64)
-            )
-            return pd.Series(out)
-
-        tagged = candidates.withColumn(
-            "_maybe_seen",
-            might_contain(
-                F.xxhash64(F.col(url_col)), F.hash(F.col(url_col)).cast("long")
-            ),
-        )
+    tagged = bloom.probe(candidates, url_col)
     sure_new = tagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = tagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
     if flip_broadcast:

@@ -126,12 +126,17 @@ def registered_domains(
     matching suffix from ``suffixes``), null when the host IS a bare
     suffix or matches none.
 
-    The Mozilla-PSL algorithm every crawler runs for per-SITE (not
-    per-subdomain) politeness, dedup scoping, and frontier statistics:
-    'a.b.src.example' and 'www.src.example' are one registrant.  A
-    naive "last two labels" split is wrong for multi-label suffixes
-    ('x.co.example' registers at THREE labels) — hence longest-match
-    against the suffix dictionary.
+    Per-SITE (not per-subdomain) grouping for politeness, dedup
+    scoping, and frontier statistics: 'a.b.src.example' and
+    'www.src.example' are one registrant.  A naive "last two labels"
+    split is wrong for multi-label suffixes ('x.co.example' registers
+    at THREE labels) — hence longest-match against the suffix list.
+
+    Only literal suffix entries are matched, compared label-for-label
+    and case-insensitively.  This is the core of the Mozilla PSL
+    algorithm, not all of it: PSL wildcard (``*.ck``) and exception
+    (``!www.ck``) rules are NOT supported — such an entry is treated
+    as a literal string that no real host label matches.
 
     Scale shape: the match runs on DISTINCT lower-cased hosts
     (10^7-10^8 rows at web scale, orders of magnitude below the URL

@@ -30,13 +30,19 @@ def write_bucketed(
     n_buckets: int,
     sort: bool = True,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) managed parquet
-    table.  ``saveAsTable`` is required — bucketing metadata lives in
-    the catalog, not the files."""
+    """Persist ``df`` as a bucketed (and bucket-sorted) parquet table.
+    ``saveAsTable`` is required — bucketing metadata lives in the
+    catalog, not the files.  With ``path`` the table is EXTERNAL: its
+    files live there instead of under the session's warehouse dir, so
+    files a killed run left behind cannot block a rerun (a managed
+    table refuses a non-empty location)."""
     w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *key_cols)
     if sort:
         w = w.sortBy(*key_cols)
+    if path is not None:
+        w = w.option("path", path)
     w.saveAsTable(table)
 
 

@@ -26,7 +26,9 @@ class CrawlJob:
         crawl_delay_tokens overrides per host.
     wave_cap — optional global scheduled-URL cap per wave (bounded
         queue maxsize analog, app/config/config.py:129-131).
-    use_bloom — two-tier seen-set probe (operators/dedup.py).
+    use_bloom — two-tier seen-set probe: a stored prefilter bank in
+        front of the exact anti-join (operators/dedup.py,
+        operators/bankstore.py).
     respect_robots — apply robots deny prefixes before scheduling.
     """
 
@@ -55,9 +57,9 @@ class CrawlJob:
     notify_filters: tuple[FilterSpec, ...] = field(default_factory=tuple)
     invert: bool = False
     use_bloom: bool = False
-    # "bloom" | "cuckoo" — which membership pre-filter accelerates the
-    # seen anti-join when use_bloom is set (cuckoo supports deletion —
-    # the aging/spill path; see operators/dedup.py)
+    # "bloom" | "cuckoo" — which membership pre-filter the stored bank
+    # holds when use_bloom is set (cuckoo supports deletion — the
+    # seen-horizon aging path; see operators/dedup.py)
     seen_filter: str = "bloom"
     bloom_fpp: float = 0.01
     respect_robots: bool = True
@@ -78,37 +80,15 @@ class CrawlJob:
     # the exact ranked count — not the pending frontier size, so a huge
     # frontier with a tight budget keeps the fast broadcast path.)
     broadcast_wave_threshold: int = 2_000_000
-    # Flip the EXACT tier of the seen anti-join to the seen-scan-only
-    # broadcast semi/anti pair (dedup._flip_resolve) only when the seen
-    # table is at least this many times the pending frontier.  Above
-    # the ratio the plain left_anti sort-merge re-shuffles a seen side
-    # far bigger than the candidates (the 10^10-seen regime — the flip
-    # removes that entirely); below it the two sides are comparable, a
-    # same-size SMJ is cheap, and two per-wave driver broadcasts are
-    # pure overhead (measured: +67% plan_build on the 4N scaling leg
-    # when flipping at seen:frontier ~ 2:1).  The frontier must also be
-    # under broadcast_wave_threshold for the flip to be safe.
-    flip_seen_factor: float = 4.0
-    # Seen-prefilter probe routing (operators/dedup.py anti_join_seen):
-    # "auto" broadcasts small banks and shard-routes big ones; "routed"
-    # / "broadcast" force a path (tests / known deployments).
-    probe_mode: str = "auto"
     # The prefilter bank is built once sized for factor x current seen
     # count, then maintained incrementally from per-wave deltas; a full
     # rebuild happens only when the count outgrows capacity (geometric
     # doubling -> O(log n) rebuilds over a crawl, amortized O(n)).
     prefilter_capacity_factor: float = 8.0
-    # Where the prefilter bank lives.  "memory": driver-held
-    # ShardedBloom/ShardedCuckoo — fastest for small crawls (no table
-    # IO per wave) but the bank transits the driver on every merge and
-    # probe.  "table": parquet table of shard blobs inside the
-    # checkpoint dir (operators/bankstore.StoredBank) — build, delta
-    # merge and probe are executor-side jobs touching O(|delta| +
-    # touched shards) bytes, the driver never holds a payload, and a
-    # resumed crawl reloads the bank instead of rebuilding it.  The
-    # 10^10 deployment setting (a ~12 GB bank neither fits nor should
-    # transit the driver).
-    prefilter_store: str = "memory"
+    # Accepted only as "table" (the bank's one home: a parquet table of
+    # shard blobs in the checkpoint dir, operators/bankstore.StoredBank);
+    # any other value raises ValueError.
+    prefilter_store: str = "table"
     # Re-crawl horizon: a URL seen in wave w blocks re-scheduling for
     # the next seen_horizon_waves waves, then ages out of BOTH the
     # exact seen table and the prefilter (cuckoo: incremental cohort
@@ -119,37 +99,24 @@ class CrawlJob:
     # are evicted from the cuckoo bank (aging is lazy: stale filter
     # positives are safe — they just fall through to the exact join).
     cuckoo_age_load: float = 0.7
-    # Repartition+persist the pages table by url once before the loop
-    # so non-broadcast fetch joins never re-shuffle the html side (the
-    # bucketed-table analog; r02 advisory on wave_loop fetch_join).
-    prepartition_pages: bool = False
-    # Frontier checkpoint layout.  "full" rewrites the entire pending
-    # frontier every wave — simple, read == write, but O(|frontier|)
-    # write volume per wave: at the 10^10-row frontier the north star
-    # targets that is ~1 TB of object-store writes per wave while the
-    # actual change is ~1000x smaller (hosts x budget consumed rows +
-    # the wave's children).  "delta" writes only the wave's discovered
-    # children (the consumed rows are already recorded in the seen
-    # delta — no second copy) plus a full compaction snapshot every
-    # frontier_compact_every waves: the Iceberg merge-on-read model.
-    # In-loop lineage is truncated with localCheckpoint (executor-local
-    # blocks, released at each compaction); resume replays the last
-    # snapshot + deltas + per-wave seen anti-joins (exact under
-    # seen_horizon_waves aging too, because the replay applies the same
-    # horizon-filtered seen view wave by wave).  Delta is the default —
-    # outputs are identical (pytest-pinned), it measured 25-30% faster
-    # wall on deferred-dominated crawls and neutral otherwise
-    # (BENCH/BASELINE.md round-3 A/B) — "full" remains for debugging
-    # and for stores where read-simplicity beats write volume.
-    frontier_checkpoint: str = "delta"
+    # Frontier checkpoint layout: non-compaction waves write only the
+    # wave's discovered children (frontier_delta/wave=K — the consumed
+    # rows are already recorded in the seen delta), and every
+    # frontier_compact_every-th wave writes a full snapshot
+    # (frontier/wave=K): the Iceberg merge-on-read model, O(wave) write
+    # volume instead of O(|frontier|).  1 = a full snapshot every wave.
+    # In-loop lineage is truncated with localCheckpoint (released at
+    # each compaction); resume replays the last snapshot + deltas +
+    # per-wave seen anti-joins (exact under seen_horizon_waves aging
+    # too).  Outputs do not depend on the setting (pytest-pinned).
     frontier_compact_every: int = 8
-    # Parquet codec for the per-wave checkpoint writes (storage.py;
-    # lz4_raw = the parquet-standard LZ4 frame, readable by DuckDB/Arrow
-    # — Spark's plain "lz4" writes hadoop-framed files they reject).
-    # Checkpoints are write-once/read-once: lz4 halves encode CPU vs
-    # snappy at ~5-10% bigger files.  Use zstd when checkpoints land on
-    # remote object storage and network bytes dominate.
-    checkpoint_codec: str = "lz4_raw"
+
+    def __post_init__(self) -> None:
+        if self.prefilter_store != "table":
+            raise ValueError(
+                f"prefilter_store={self.prefilter_store!r}: the prefilter "
+                "bank lives only in the checkpoint table ('table')"
+            )
 
 
 def accept_seeds(seed_rows: list[dict]) -> list[dict]:

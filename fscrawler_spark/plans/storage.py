@@ -26,16 +26,16 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Parquet codec for the per-wave data writes.  Checkpoints are
+# write-once/read-next-wave, so cheap-and-fast beats dense: lz4_raw cuts
+# encode CPU vs snappy at slightly larger files, and unlike Spark's
+# hadoop-framed "lz4" it is the parquet-standard frame DuckDB/Arrow read.
+CHECKPOINT_CODEC = "lz4_raw"
+
 
 @dataclass
 class CheckpointStore:
     root: str
-    # Parquet codec for the per-wave data writes.  Checkpoints are
-    # write-once/read-next-wave, so cheap-and-fast beats dense: lz4_raw
-    # cuts encode CPU vs snappy at slightly larger files.  On a
-    # real cluster with remote object storage, flip to zstd (network
-    # bytes dominate); the knob is CrawlJob.checkpoint_codec.
-    codec: str = "lz4_raw"
 
     def _dir(self, table: str, wave: int) -> str:
         return os.path.join(self.root, table, f"wave={wave}")
@@ -74,7 +74,7 @@ class CheckpointStore:
             name, df = name_df
             t0 = _time.time()
             df.write.mode("overwrite").option(
-                "compression", self.codec
+                "compression", CHECKPOINT_CODEC
             ).parquet(self._dir(name, wave))
             return f"write_{name}", round(_time.time() - t0, 3)
 

@@ -53,18 +53,25 @@ from fscrawler_spark.functions.urls import (
 )
 from fscrawler_spark.functions.extract import extract_hrefs_udf
 from fscrawler_spark.operators.bankstore import StoredBank
-from fscrawler_spark.operators.dedup import (
-    anti_join_seen,
-    build_bloom,
-    build_cuckoo,
-    merge_cuckoo_delta,
-)
+from fscrawler_spark.operators.dedup import anti_join_seen
 from fscrawler_spark.operators.links import expand_from_hrefs
 from fscrawler_spark.operators.politeness import politeness_take, wave_rank
 from fscrawler_spark.plans.job import CrawlJob, accept_seeds
 from fscrawler_spark.plans.storage import CheckpointStore
 
 _FRONTIER_COLS = ["url", "host", "depth", "priority", "seed_id"]
+
+# Flip the EXACT tier of the seen anti-join to the seen-scan-only
+# broadcast semi/anti pair (dedup._flip_resolve) only when the seen
+# table is at least this many times the pending frontier.  Above the
+# ratio the plain left_anti sort-merge re-shuffles a seen side far
+# bigger than the candidates (the 10^10-seen regime — the flip removes
+# that entirely); below it the two sides are comparable, a same-size
+# SMJ is cheap, and two per-wave driver broadcasts are pure overhead
+# (measured: +67% plan_build on the 4N scaling leg when flipping at
+# seen:frontier ~ 2:1).  The frontier must also be under
+# CrawlJob.broadcast_wave_threshold for the flip to be safe.
+FLIP_SEEN_FACTOR = 4.0
 
 
 @dataclass
@@ -230,6 +237,125 @@ def reconstruct_frontier(
     return fr
 
 
+def _open_bank(
+    spark: SparkSession,
+    store: CheckpointStore,
+    job: CrawlJob,
+    wave: int,
+    reload: bool,
+    seen_df: DataFrame,
+    seen_count: int,
+) -> tuple[StoredBank, dict]:
+    """The prefilter bank for wave `wave`, plus its log record.
+
+    reload (first wave of a resume): reopen the bank a previous run
+    left in the checkpoint dir — at 10^10 URLs the reload-vs-rebuild
+    difference is the whole seen set.  Its merged_upto lineage says
+    which committed seen-deltas it already holds; any it missed (killed
+    between wave commit and bank save) are replayed as ordinary delta
+    merges.  Otherwise (fresh crawl, a changed seen_filter, or a
+    capacity resize) this is the ONLY full build, sized with
+    prefilter_capacity_factor headroom."""
+    path = os.path.join(store.root, "prefilter")
+    if reload and StoredBank.exists(path):
+        bank = StoredBank.open(path)
+        if bank.kind == job.seen_filter:
+            replayed = 0
+            for w in store.committed_waves():
+                if bank.merged_upto < w < wave:
+                    d = store.read_seen_delta(spark, w)
+                    dn = d.count()
+                    # lineage rides the merge's atomic save: a crash
+                    # mid-replay never leaves a delta half-claimed
+                    bank.merge_delta(
+                        d, "url", "insert",
+                        meta_updates={
+                            "n_added": bank.n_added + dn,
+                            "cohorts": {**bank.cohorts, w: dn},
+                            "merged_upto": w,
+                        },
+                    )
+                    replayed += dn
+            return bank, {"action": "loaded", "rows_hashed": replayed}
+    capacity = max(int(job.prefilter_capacity_factor * max(seen_count, 1)), 4096)
+    bank = StoredBank.build(
+        seen_df, "url", path,
+        kind=job.seen_filter, n_items=capacity, fpp=job.bloom_fpp,
+    )
+    cohorts = {}
+    if job.seen_filter == "cuckoo" and job.seen_horizon_waves is not None:
+        # aging needs per-cohort row counts; footer counts only, and
+        # only on the O(log n) full builds
+        lo = wave - job.seen_horizon_waves
+        cohorts = {
+            w: store.read_seen_delta(spark, w).count()
+            for w in store.committed_waves()
+            if w >= lo
+        }
+    bank.n_added, bank.merged_upto, bank.cohorts = seen_count, wave - 1, cohorts
+    bank.save()
+    return bank, {"action": "full_build", "rows_hashed": seen_count}
+
+
+def _maintain_bank(
+    spark: SparkSession,
+    store: CheckpointStore,
+    job: CrawlJob,
+    bank: StoredBank,
+    wave: int,
+) -> dict:
+    """Fold wave `wave`'s committed seen delta into the bank and return
+    the log record.  The merge is an executor-side cogroup against the
+    touched shards' blobs only; the lineage (n_added, cohorts,
+    merged_upto — what lets a resumed run reload instead of rebuild)
+    rides the same atomic meta write that repoints the payloads.  The
+    O(|seen|) work happens only on capacity resizes: action
+    "rebuild_scheduled" tells the caller to drop the bank so the next
+    filtered wave does a full build."""
+    delta = store.read_seen_delta(spark, wave)
+    delta_n = delta.count()  # footer count, cheap
+    log: dict = {}
+    # epoch aging FIRST (cuckoo + horizon): once projected load crosses
+    # the threshold, evict cohorts past the re-crawl horizon — they
+    # leave the exact seen table via _committed_seen in the same move,
+    # so filter and table age in lockstep (FP-safety) — and the freed
+    # slots can absorb the delta, avoiding a resize rebuild entirely.
+    if job.seen_filter == "cuckoo" and job.seen_horizon_waves is not None:
+        evicted = []
+        while (
+            bank.cohorts
+            and bank.n_added + delta_n > job.cuckoo_age_load * bank.capacity_items
+        ):
+            oldest = min(bank.cohorts)
+            if oldest >= (wave + 1) - job.seen_horizon_waves:
+                break  # oldest cohort still inside the horizon
+            kept = dict(bank.cohorts)
+            evict_n = kept.pop(oldest)
+            # eviction bookkeeping rides the atomic save — a crash can
+            # never double-delete the cohort on resume (cuckoo false
+            # negatives)
+            bank.merge_delta(
+                store.read_seen_delta(spark, oldest), "url", "delete",
+                meta_updates={"n_added": bank.n_added - evict_n, "cohorts": kept},
+            )
+            evicted.append(oldest)
+        if evicted:
+            log["evicted_cohorts"] = evicted
+    if bank.n_added + delta_n > bank.capacity_items:
+        log.update(action="rebuild_scheduled", rows_hashed=delta_n)
+    else:
+        bank.merge_delta(
+            delta, "url", "insert",
+            meta_updates={
+                "n_added": bank.n_added + delta_n,
+                "cohorts": {**bank.cohorts, wave: delta_n},
+                "merged_upto": wave,
+            },
+        )
+        log.update(action="delta_merge", rows_hashed=delta_n)
+    return log
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -248,19 +374,8 @@ def run_crawl(
     speedup via the DB probe) becomes "every previously-examined URL
     drops at the first anti-join"."""
     store = CheckpointStore(
-        checkpoint_dir or tempfile.mkdtemp(prefix="fsc_ckpt_"),
-        codec=job.checkpoint_codec,
+        checkpoint_dir or tempfile.mkdtemp(prefix="fsc_ckpt_")
     )
-
-    pages_prepartitioned = False
-    if job.prepartition_pages:
-        # Bucketed-table analog: hash-partition the fat side by the join
-        # key ONCE, so every later non-broadcast fetch join reuses this
-        # partitioning and only the slim scheduled side crosses an
-        # exchange — html bytes never re-shuffle per wave.
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        pages = pages.repartition(nparts, "url").persist()
-        pages_prepartitioned = True
 
     # Page metadata view (no html) — Catalyst prunes the binary column out
     # of every pass except the fetch join.  `size` must still read html
@@ -322,7 +437,6 @@ def run_crawl(
             spark, store, wave_now, job.seen_horizon_waves, seen_init
         )
 
-    delta_mode = job.frontier_checkpoint == "delta"
     lc_frontiers: list[DataFrame] = []  # localCheckpoints freed at compaction
 
     start_wave = 0
@@ -333,7 +447,7 @@ def run_crawl(
         if store.has_full_frontier(lw):
             frontier = store.read_frontier(spark, lw)
         else:
-            # delta-mode checkpoint whose last wave wasn't a compaction:
+            # the last wave wasn't a compaction:
             # replay (last snapshot + children deltas + seen anti-joins)
             frontier = reconstruct_frontier(
                 spark, store, lw, seeds_to_frontier(spark, seed_rows),
@@ -366,11 +480,10 @@ def run_crawl(
         if seen_init is not None and -1 >= lo:
             seen_wave_counts[-1] = seen_init.count()
 
-    # Seen-prefilter bank: built ONCE (sized with capacity headroom),
-    # then maintained incrementally from per-wave seen deltas — the
-    # per-wave O(|seen|) full rebuild was round 2's top scale-killer.
-    prefilter = None
-    prefilter_cohorts: dict[int, int] = {}  # cohort wave -> rows inserted
+    # Seen-prefilter bank: opened or built on the first filtered wave,
+    # then maintained incrementally from per-wave seen deltas; dropped
+    # (None) when a capacity resize needs the next wave's full build.
+    prefilter: StoredBank | None = None
 
     waves_run = start_wave
     all_timings: list[dict] = []
@@ -393,87 +506,15 @@ def run_crawl(
         prefilter_probe_log: dict | None = None
         if seen_df is not None:
             if job.use_bloom and prefilter is None:
-                # the ONLY full build: first filtered wave, or a
-                # capacity resize scheduled by the maintenance step.
-                # prefilter_store="table" first tries to RELOAD the
-                # parquet bank a previous run left in the checkpoint
-                # dir (resume only — at 10^10 URLs the reload-vs-
-                # rebuild difference is the whole seen set): the bank's
-                # merged_upto lineage says which committed seen-deltas
-                # it already contains; any it missed (killed between
-                # wave commit and bank save) are replayed as ordinary
-                # delta merges.
-                capacity = max(
-                    int(job.prefilter_capacity_factor * max(seen_count, 1)), 4096
+                prefilter, prefilter_probe_log = _open_bank(
+                    spark, store, job, wave, resume and wave == start_wave,
+                    seen_df, seen_count,
                 )
-                if job.prefilter_store == "table":
-                    bank_path = os.path.join(store.root, "prefilter")
-                    if (
-                        resume
-                        and wave == start_wave
-                        and StoredBank.exists(bank_path)
-                    ):
-                        cand_bank = StoredBank.open(bank_path)
-                        if cand_bank.kind == job.seen_filter:
-                            replayed = 0
-                            for w in store.committed_waves():
-                                if cand_bank.merged_upto < w < wave:
-                                    d = store.read_seen_delta(spark, w)
-                                    dn = d.count()
-                                    # lineage rides the merge's atomic
-                                    # save: a crash mid-replay never
-                                    # leaves a delta half-claimed
-                                    cand_bank.merge_delta(
-                                        d, "url", "insert",
-                                        meta_updates={
-                                            "n_added": cand_bank.n_added + dn,
-                                            "cohorts": {
-                                                **cand_bank.cohorts, w: dn
-                                            },
-                                            "merged_upto": w,
-                                        },
-                                    )
-                                    replayed += dn
-                            prefilter = cand_bank
-                            prefilter_cohorts = dict(prefilter.cohorts)
-                            prefilter_probe_log = {
-                                "action": "loaded", "rows_hashed": replayed,
-                            }
-                    if prefilter is None:
-                        prefilter = StoredBank.build(
-                            seen_df, "url", bank_path,
-                            kind=job.seen_filter, n_items=capacity,
-                            fpp=job.bloom_fpp,
-                        )
-                        prefilter.n_added = seen_count
-                        prefilter.merged_upto = wave - 1
-                elif job.seen_filter == "cuckoo":
-                    prefilter = build_cuckoo(seen_df, "url", capacity)
-                else:
-                    prefilter = build_bloom(seen_df, "url", capacity, job.bloom_fpp)
-                if prefilter_probe_log is None:
-                    prefilter.n_added = seen_count
-                    prefilter_cohorts = {}
-                    if job.seen_filter == "cuckoo" and job.seen_horizon_waves is not None:
-                        # aging needs per-cohort row counts; footer counts only,
-                        # and only on the O(log n) full builds
-                        lo = wave - job.seen_horizon_waves
-                        prefilter_cohorts = {
-                            w: store.read_seen_delta(spark, w).count()
-                            for w in store.committed_waves()
-                            if w >= lo
-                        }
-                    if hasattr(prefilter, "save"):
-                        prefilter.cohorts = dict(prefilter_cohorts)
-                        prefilter.save()
-                    prefilter_probe_log = {
-                        "action": "full_build", "rows_hashed": seen_count,
-                    }
             elif job.use_bloom:
                 prefilter_probe_log = {"action": "reuse", "rows_hashed": 0}
             # Exact-resolution strategy: when the pending frontier is
             # broadcast-bounded AND the seen table dwarfs it
-            # (flip_seen_factor), flip the anti-join so the seen table
+            # (FLIP_SEEN_FACTOR), flip the anti-join so the seen table
             # is scanned but NEVER shuffled (at 10^10 seen URLs the
             # plain left_anti re-shuffles all of seen every wave —
             # Spark cannot broadcast-build the left side of an anti).
@@ -481,10 +522,9 @@ def run_crawl(
             # per-wave broadcasts, so the gate keeps it.
             new = anti_join_seen(
                 queued, seen_df, "url", prefilter,
-                probe_mode=job.probe_mode,
                 flip_broadcast=(
                     frontier_n <= job.broadcast_wave_threshold
-                    and seen_count >= job.flip_seen_factor * max(frontier_n, 1)
+                    and seen_count >= FLIP_SEEN_FACTOR * max(frontier_n, 1)
                 ),
             )
         else:
@@ -603,10 +643,9 @@ def run_crawl(
         # (about to be materialized anyway) decides exactly — so a huge
         # frontier with a small budget keeps the fast broadcast probe.
         # In the non-broadcast regime a shuffled join exchanges the
-        # ENTIRE pages side, html included, every wave (the r02-flagged
-        # comment here claimed otherwise) — job.prepartition_pages
-        # hash-partitions pages by url once outside the loop so that
-        # exchange disappears and only the slim side shuffles.
+        # ENTIRE pages side, html included, every wave, unless the
+        # caller passes pages already hash-partitioned by url (then
+        # only the slim side shuffles).
         can_broadcast = resolve_can_broadcast(
             frontier_n,
             job.wave_cap,
@@ -687,13 +726,11 @@ def run_crawl(
             extracted.select("url", "hrefs", "depth", "seed_id")
         )
         merged = _merge_frontier(children, deferred)
-        # Delta mode checkpoints only `children` on non-compaction waves:
-        # the consumed frontier rows are already recorded in the seen
-        # delta, so children are the wave's ONLY new frontier
-        # information — O(wave) write volume instead of O(|frontier|).
-        compact = (not delta_mode) or (
-            (wave + 1) % max(job.frontier_compact_every, 1) == 0
-        )
+        # Non-compaction waves checkpoint only `children`: the consumed
+        # frontier rows are already recorded in the seen delta, so
+        # children are the wave's ONLY new frontier information —
+        # O(wave) write volume instead of O(|frontier|).
+        compact = (wave + 1) % max(job.frontier_compact_every, 1) == 0
 
         # --- commit wave ---------------------------------------------------
         seen_delta_parts = [scheduled.select("url"), skipped.select("url"),
@@ -782,8 +819,8 @@ def run_crawl(
         wave_timings["lineage_commit"] = round(_time.time() - t_lc, 3)
 
         # Truncate frontier lineage (no exponential plan growth across
-        # waves).  Full/compaction waves re-read the committed snapshot
-        # (resume path == normal path).  Delta waves localCheckpoint the
+        # waves).  Compaction waves re-read the committed snapshot
+        # (resume path == normal path).  Other waves localCheckpoint the
         # merged frame instead — executor-local blocks, no second full
         # write — BEFORE the caches below are released so the merge
         # reads warm data; accumulated blocks are released at the next
@@ -805,86 +842,11 @@ def run_crawl(
         wave_timings["reload_state"] = round(_time.time() - t0, 3)
 
         # --- prefilter incremental maintenance ---------------------------
-        # Merge ONLY this wave's seen delta into the held bank (bloom:
-        # same-geometry build + bitwise OR; cuckoo: cogroup insert into
-        # the existing shard tables).  The O(|seen|) work happens only
-        # on capacity resizes — scheduled here, executed as the next
-        # wave's full build.
         if prefilter is not None:
             t0 = _time.time()
-            stored_bank = hasattr(prefilter, "bank_df")
-            delta_df = store.read_seen_delta(spark, wave)
-            delta_n = delta_df.count()  # footer count, cheap
-            upd_log: dict = {}
-            # epoch aging FIRST (cuckoo + horizon): once projected load
-            # crosses the threshold, evict cohorts past the re-crawl
-            # horizon — they leave the exact seen table via _load_seen
-            # in the same move, so filter and table age in lockstep
-            # (FP-safety) — and the freed slots can absorb the delta,
-            # avoiding a resize rebuild entirely.
-            if job.seen_filter == "cuckoo" and job.seen_horizon_waves is not None:
-                evicted = []
-                while (
-                    prefilter_cohorts
-                    and prefilter.n_added + delta_n
-                    > job.cuckoo_age_load * prefilter.capacity_items
-                ):
-                    oldest = min(prefilter_cohorts)
-                    if oldest >= (wave + 1) - job.seen_horizon_waves:
-                        break  # oldest cohort still inside the horizon
-                    old_delta = store.read_seen_delta(spark, oldest)
-                    if stored_bank:
-                        evict_n = prefilter_cohorts.pop(oldest)
-                        # eviction bookkeeping rides the atomic save —
-                        # a crash can never double-delete the cohort on
-                        # resume (cuckoo false negatives)
-                        prefilter.merge_delta(
-                            old_delta, "url", "delete",
-                            meta_updates={
-                                "n_added": prefilter.n_added - evict_n,
-                                "cohorts": dict(prefilter_cohorts),
-                            },
-                        )
-                    else:
-                        prefilter = merge_cuckoo_delta(
-                            prefilter, old_delta, "url", "delete"
-                        )
-                        prefilter.n_added -= prefilter_cohorts.pop(oldest)
-                    evicted.append(oldest)
-                if evicted:
-                    upd_log["evicted_cohorts"] = evicted
-            if prefilter.n_added + delta_n > prefilter.capacity_items:
+            upd_log = _maintain_bank(spark, store, job, prefilter, wave)
+            if upd_log["action"] == "rebuild_scheduled":
                 prefilter = None
-                upd_log.update(action="rebuild_scheduled", rows_hashed=delta_n)
-            else:
-                if stored_bank:
-                    # executor-side cogroup against the touched shards'
-                    # blobs only — the bank never transits the driver;
-                    # the lineage (merged_upto/cohorts, so a resumed
-                    # run reloads instead of rebuilds) rides the same
-                    # atomic meta write that repoints the payloads
-                    prefilter.merge_delta(
-                        delta_df, "url", "insert",
-                        meta_updates={
-                            "n_added": prefilter.n_added + delta_n,
-                            "cohorts": {**prefilter_cohorts, wave: delta_n},
-                            "merged_upto": wave,
-                        },
-                    )
-                elif job.seen_filter == "cuckoo":
-                    prefilter = merge_cuckoo_delta(
-                        prefilter, delta_df, "url", "insert"
-                    )
-                    prefilter.n_added += delta_n
-                else:
-                    prefilter.merge_delta(
-                        build_bloom(
-                            delta_df, "url", delta_n, geometry=prefilter.geometry
-                        )
-                    )
-                    prefilter.n_added += delta_n
-                prefilter_cohorts[wave] = delta_n
-                upd_log.update(action="delta_merge", rows_hashed=delta_n)
             upd_log["secs"] = round(_time.time() - t0, 3)
             wave_timings["prefilter_update"] = upd_log
         if prefilter_probe_log is not None:
@@ -892,7 +854,7 @@ def run_crawl(
         wave_timings["plan_build"] = _plan_build_s
         wave_timings["wall"] = round(_wtime.time() - _wave_t0, 3)
         all_timings.append(wave_timings)
-        # bloom sizing + flip gate: examined-this-wave = everything
+        # bank sizing + flip gate: examined-this-wave = everything
         # except deferred rows (still queued) and the 'fetched'
         # cache-warm duplicate of 'scheduled'.  With a horizon, the
         # count is re-derived from the in-horizon cohorts so aged-out
@@ -912,8 +874,6 @@ def run_crawl(
     pages_meta.unpersist()
     if rules_arr is not None:
         rules_arr.unpersist()
-    if pages_prepartitioned:
-        pages.unpersist()
     # Release frontier localCheckpoint blocks accumulated since the
     # last compaction (r03 advisory: a crawl ending on a non-compaction
     # wave pinned up to frontier_compact_every-1 frontier copies in

@@ -1,15 +1,17 @@
-"""Storage-resident prefilter bank (operators/bankstore.py) — the
-round-4 closure of "the bank transits the driver every wave":
+"""Storage-resident prefilter bank (operators/bankstore.py) — the one
+home of the seen prefilter; the bank never transits the driver:
 
-* probe parity: the table-scan-fed cogroup probe classifies exactly
-  like the in-memory banks (two-tier correctness vs the exact join);
+* probe parity: the two-tier result (table-scan-fed cogroup probe +
+  exact tier) equals the exact join;
+* one blob row per shard: a probe task holds 1/n_shards of the bank;
 * O(touched) maintenance: a delta merge writes ONLY the touched
   shards' blobs to the new version dir and leaves every other shard's
   file untouched on disk;
 * plan pruning: a shard-restricted bank read pushes the shard filter
   into the parquet scan;
 * the driver never holds payload bytes (meta.json is ints only);
-* wave-loop e2e parity + resume-reload (no rebuild) + cohort aging.
+* wave-loop e2e parity with the exact-only crawl + resume-reload (no
+  rebuild) + cohort aging.
 """
 
 from __future__ import annotations
@@ -54,6 +56,20 @@ def test_stored_probe_two_tier_parity(spark, tmp_path, kind):
         .count()
     )
     assert missed == 0
+
+
+def test_stored_bank_one_row_per_shard(spark, tmp_path):
+    """The bank table has exactly one blob row per shard, so a cogroup
+    probe task holds 1/n_shards of the bank's bytes by construction;
+    per-shard payload must be well under the bank total."""
+    bank = StoredBank.build(
+        _urls(spark, 0, 4000), "url", str(tmp_path / "bank"),
+        kind="bloom", n_items=8000, n_shards=8,
+    )
+    rows = bank.bank_df(spark).collect()
+    assert sorted(int(r["shard"]) for r in rows) == list(range(8))
+    per_shard = max(len(r["payload"]) for r in rows)
+    assert per_shard * 4 <= sum(len(r["payload"]) for r in rows)
 
 
 def test_stored_merge_touches_only_delta_shards(spark, tmp_path):
@@ -215,16 +231,17 @@ def _order(res, spark):
 def test_crawl_stored_bank_e2e_parity(
     spark, pages_df, robots_df, tiny, tmp_path, kind
 ):
-    base = dict(politeness_budget=4, max_waves=4, use_bloom=True, seen_filter=kind)
-    r_mem = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, prefilter_store="memory"),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "mem"),
+    base = dict(politeness_budget=4, max_waves=4)
+    r_exact = run_crawl(
+        spark, pages_df, tiny["seeds"], CrawlJob(**base, use_bloom=False),
+        robots=robots_df, checkpoint_dir=str(tmp_path / "exact"),
     )
     r_tab = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, prefilter_store="table"),
+        spark, pages_df, tiny["seeds"],
+        CrawlJob(**base, use_bloom=True, seen_filter=kind),
         robots=robots_df, checkpoint_dir=str(tmp_path / "tab"),
     )
-    assert _order(r_mem, spark) == _order(r_tab, spark)
+    assert _order(r_exact, spark) == _order(r_tab, spark)
     # the bank table lives inside the checkpoint dir and was
     # incrementally maintained (one build + per-wave delta merges)
     assert StoredBank.exists(str(tmp_path / "tab" / "prefilter"))
@@ -237,9 +254,7 @@ def test_crawl_stored_bank_e2e_parity(
 def test_crawl_stored_bank_resume_reloads_not_rebuilds(
     spark, pages_df, robots_df, tiny, tmp_path
 ):
-    base = dict(
-        politeness_budget=4, use_bloom=True, prefilter_store="table",
-    )
+    base = dict(politeness_budget=4, use_bloom=True)
     ck = str(tmp_path / "ck")
     run_crawl(
         spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=2),
@@ -252,9 +267,10 @@ def test_crawl_stored_bank_resume_reloads_not_rebuilds(
     actions = [t.get("prefilter", {}).get("action") for t in r2.timings]
     assert actions[0] == "loaded", f"resume rebuilt the bank: {actions}"
     assert "full_build" not in actions
-    # resumed run == one uninterrupted run
+    # resumed run == one uninterrupted exact-only run
     r_full = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=5),
+        spark, pages_df, tiny["seeds"],
+        CrawlJob(politeness_budget=4, max_waves=5, use_bloom=False),
         robots=robots_df, checkpoint_dir=str(tmp_path / "full"),
     )
     assert _order(r2, spark) == _order(r_full, spark)
@@ -266,7 +282,7 @@ def test_crawl_stored_bank_reload_replays_missed_delta(
     """Crash between wave commit and bank save: the bank's merged_upto
     lags the committed waves; the resume reconcile replays the missing
     seen-delta before probing."""
-    base = dict(politeness_budget=4, use_bloom=True, prefilter_store="table")
+    base = dict(politeness_budget=4, use_bloom=True)
     ck = str(tmp_path / "ck")
     run_crawl(
         spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=3),
@@ -287,7 +303,8 @@ def test_crawl_stored_bank_reload_replays_missed_delta(
     # filter: double-inserted fingerprints only cost false-positive rate)
     assert first["rows_hashed"] > 0
     r_full = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=5),
+        spark, pages_df, tiny["seeds"],
+        CrawlJob(politeness_budget=4, max_waves=5, use_bloom=False),
         robots=robots_df, checkpoint_dir=str(tmp_path / "full"),
     )
     assert _order(r2, spark) == _order(r_full, spark)
@@ -305,7 +322,6 @@ def test_crawl_stored_cuckoo_horizon_aging_parity(
         spark, pages_df, tiny["seeds"],
         CrawlJob(
             **base, use_bloom=True, seen_filter="cuckoo",
-            prefilter_store="table",
             prefilter_capacity_factor=40.0, cuckoo_age_load=0.01,
         ),
         robots=robots_df, checkpoint_dir=str(tmp_path / "tab"),
@@ -323,10 +339,10 @@ def test_crawl_full10_regime_parity(
     spark, pages_df, robots_df, tiny, tmp_path
 ):
     """The COMPLETE 10^10-URL knob set, on together (VERDICT r3 #6):
-    stored bloom bank + forced routed probe + horizon aging machinery +
-    flip-gated exact resolution + delta frontier.  With the horizon ==
-    max_waves no cohort ages out inside the run, so the schedule must
-    equal the all-defaults crawl exactly."""
+    stored bloom bank + horizon aging machinery + flip-gated exact
+    resolution + delta frontier.  With the horizon == max_waves no
+    cohort ages out inside the run, so the schedule must equal the
+    all-defaults crawl exactly."""
     base = dict(politeness_budget=4, max_waves=4)
     r_def = run_crawl(
         spark, pages_df, tiny["seeds"], CrawlJob(**base),
@@ -336,8 +352,7 @@ def test_crawl_full10_regime_parity(
         spark, pages_df, tiny["seeds"],
         CrawlJob(
             **base, use_bloom=True, seen_filter="bloom",
-            prefilter_store="table", probe_mode="routed",
-            seen_horizon_waves=4, frontier_checkpoint="delta",
+            seen_horizon_waves=4,
         ),
         robots=robots_df, checkpoint_dir=str(tmp_path / "f10"),
     )

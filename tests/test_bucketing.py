@@ -18,7 +18,7 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_bucketed_join_is_shuffle_free(spark, no_broadcast):
+def test_bucketed_join_is_shuffle_free(spark, no_broadcast, tmp_path):
     a = spark.range(0, 2000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("va")
     )
@@ -27,8 +27,10 @@ def test_bucketed_join_is_shuffle_free(spark, no_broadcast):
     )
     spark.sql("DROP TABLE IF EXISTS bkt_a")
     spark.sql("DROP TABLE IF EXISTS bkt_b")
-    write_bucketed(a, "bkt_a", ["k"], 8)
-    write_bucketed(b, "bkt_b", ["k"], 8)
+    # external tables under tmp_path: nothing lands in the cwd's
+    # spark-warehouse/, so a killed run cannot fail the next one
+    write_bucketed(a, "bkt_a", ["k"], 8, path=str(tmp_path / "bkt_a"))
+    write_bucketed(b, "bkt_b", ["k"], 8, path=str(tmp_path / "bkt_b"))
     try:
         ba, bb = read_bucketed(spark, "bkt_a"), read_bucketed(spark, "bkt_b")
         j = ba.join(bb, "k").select("k", "va", "vb")

@@ -4,33 +4,36 @@ wiring that makes "not given" distinguishable (default=None)."""
 
 from __future__ import annotations
 
+import pytest
+
 from fscrawler_spark.cli import _flag_over_config, main
+from fscrawler_spark.plans.job import CrawlJob
 
 
 def test_flag_beats_config_beats_default():
-    cfg = {"frontier_checkpoint": "full"}
+    cfg = {"use_bloom": True}
     # flag given -> flag wins over config
-    assert _flag_over_config(cfg, "frontier_checkpoint", "delta", "delta") == "delta"
+    assert _flag_over_config(cfg, "use_bloom", False, False) is False
     # flag not given -> config wins over default
-    assert _flag_over_config(cfg, "frontier_checkpoint", None, "delta") == "full"
+    assert _flag_over_config(cfg, "use_bloom", None, False) is True
     # neither -> default
-    assert _flag_over_config({}, "frontier_checkpoint", None, "delta") == "delta"
+    assert _flag_over_config({}, "use_bloom", None, False) is False
 
 
-def test_frontier_flag_default_is_none_marker(monkeypatch):
-    """--frontier must default to None so cmd_crawl can tell 'not
-    given' from an explicit choice (the precedence above relies on it)."""
-    captured = {}
+def test_frontier_flag_removed(monkeypatch):
+    """The frontier layout comes only from config
+    (frontier_compact_every); the old --frontier flag is rejected."""
+    monkeypatch.setattr("fscrawler_spark.cli.cmd_crawl", lambda a: None)
+    with pytest.raises(SystemExit):
+        main(["crawl", "--pages", "p.parquet", "--checkpoint", "/tmp/ck",
+              "--frontier", "full"])
 
-    def fake_cmd_crawl(args):
-        captured["frontier"] = args.frontier
 
-    monkeypatch.setattr("fscrawler_spark.cli.cmd_crawl", fake_cmd_crawl)
-    base = ["crawl", "--pages", "p.parquet", "--checkpoint", "/tmp/ck"]
-    main(base)
-    assert captured["frontier"] is None
-    main(base + ["--frontier", "full"])
-    assert captured["frontier"] == "full"
+def test_prefilter_store_memory_raises():
+    """The prefilter bank has one home, the checkpoint table."""
+    with pytest.raises(ValueError):
+        CrawlJob(prefilter_store="memory")
+    assert CrawlJob().prefilter_store == "table"
 
 
 def test_budget_waves_bloom_flags_are_none_markers(monkeypatch):

@@ -251,10 +251,10 @@ def test_checkpoint_files_duckdb_readable(spark, engine):
         f"SELECT count(*) FROM read_parquet('{root}/results/*/*.parquet')"
     ).fetchone()[0]
     assert n_duck == n_spark and n_spark > 0
-    # frontier layout depends on CrawlJob.frontier_checkpoint: "full"
-    # writes frontier/wave=K snapshots, "delta" (the default) writes
-    # frontier_delta/wave=K children plus periodic snapshots — whatever
-    # exists must be plain DuckDB-readable parquet
+    # frontier layout depends on CrawlJob.frontier_compact_every:
+    # compaction waves write frontier/wave=K snapshots, the others
+    # frontier_delta/wave=K children — whatever exists must be plain
+    # DuckDB-readable parquet
     import os
 
     frontier_dirs = [

@@ -5,10 +5,11 @@ is recomposable at ANY wave as
 
     frontier_{w+1} = merge(children_w, frontier_w ANTI seen_as_of_{w+1})
 
-These tests pin (a) crawl-output equivalence with full mode, (b) exact
-replay equivalence per wave, (c) resume from a non-compaction wave,
-(d) replay under seen_horizon_waves aging, and (e) the write-volume
-reduction itself."""
+A snapshot every wave (frontier_compact_every=1, "full" below) is the
+reference layout.  These tests pin (a) crawl-output equivalence with
+it, (b) exact replay equivalence per wave, (c) resume from a
+non-compaction wave, (d) replay under seen_horizon_waves aging, and
+(e) the write-volume reduction itself."""
 
 from __future__ import annotations
 
@@ -29,13 +30,12 @@ _FILTERS = (
 
 JOB_FULL = CrawlJob(
     politeness_budget=5, max_waves=4, skip_filters=_FILTERS,
-    frontier_checkpoint="full",
+    frontier_compact_every=1,  # a full snapshot every wave
 )
 JOB_DELTA = CrawlJob(
     politeness_budget=5,
     max_waves=4,
     skip_filters=_FILTERS,
-    frontier_checkpoint="delta",
     frontier_compact_every=3,  # waves 0,1,3 delta; wave 2 compaction
 )
 
@@ -141,10 +141,8 @@ def test_delta_mode_replay_under_seen_horizon_aging(
         politeness_budget=5, max_waves=5, skip_filters=_FILTERS,
         seen_horizon_waves=2,
     )
-    jf = CrawlJob(**base, frontier_checkpoint="full")
-    jd = CrawlJob(
-        **base, frontier_checkpoint="delta", frontier_compact_every=5
-    )
+    jf = CrawlJob(**base, frontier_compact_every=1)
+    jd = CrawlJob(**base, frontier_compact_every=5)
     full = run_crawl(
         spark, pages_df, tiny["seeds"], jf, robots=robots_df,
         checkpoint_dir=str(tmp_path_factory.mktemp("fr_h_full")),

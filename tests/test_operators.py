@@ -6,14 +6,26 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from fscrawler_spark.operators.bankstore import StoredBank
 from fscrawler_spark.operators.dedup import (
     NumpyBloom,
     anti_join_seen,
-    build_bloom,
     exact_duplicate_groups,
 )
 from fscrawler_spark.operators.politeness import politeness_take
 from fscrawler_spark.operators.topk import global_row_number, top_k_per_group
+
+
+def _fresh_urls(spark, n):
+    return spark.range(n).select(
+        F.concat(F.lit("http://fresh.example/q"), F.col("id").cast("string"))
+        .alias("url")
+    )
+
+
+def _maybe_seen_share(bank, df):
+    tagged = bank.probe(df, "url")
+    return tagged.where(F.col("_maybe_seen")).count() / tagged.count()
 
 
 def _frontier(spark, n_hosts=5, per_host=20, hot=200):
@@ -96,7 +108,7 @@ def test_numpy_bloom_no_false_negatives():
     assert fpp < 0.05
 
 
-def test_anti_join_with_bloom_equals_exact(spark):
+def test_anti_join_with_bloom_equals_exact(spark, tmp_path):
     cand = spark.createDataFrame(
         [(f"http://h/{i}",) for i in range(500)], "url string"
     )
@@ -104,34 +116,26 @@ def test_anti_join_with_bloom_equals_exact(spark):
         [(f"http://h/{i}",) for i in range(0, 500, 3)], "url string"
     )
     exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
-    bloom = build_bloom(seen, "url", 200)
+    bloom = StoredBank.build(seen, "url", str(tmp_path / "bank"), n_items=200)
     two_tier = {r["url"] for r in anti_join_seen(cand, seen, bloom=bloom).collect()}
     assert two_tier == exact
     assert len(exact) == 333
 
 
-def test_sharded_bloom_build_no_false_negatives(spark):
-    """Distributed sharded bloom (the 10^10 deployment shape): every
-    seen hash probes True, fresh hashes stay near the spec fpp."""
-    import numpy as np
-
-    from fscrawler_spark.operators.dedup import build_bloom
-
+def test_sharded_bloom_build_no_false_negatives(spark, tmp_path):
+    """Distributed sharded bloom bank (the 10^10 deployment shape):
+    every seen url probes maybe-seen, fresh urls stay near the spec
+    fpp."""
     seen = spark.createDataFrame(
         [(f"http://s{i % 9}.example/p{i}",) for i in range(8000)], "url string"
     )
-    sb = build_bloom(seen, "url", 8000, fpp=0.01, n_shards=8)
-    assert sb.n_shards == 8 and len(sb.shards) == 8
-    hp = seen.select(
-        F.xxhash64("url").alias("h1"), F.hash("url").cast("long").alias("h2")
-    ).collect()
-    h1 = np.array([r["h1"] for r in hp], np.int64)
-    h2 = np.array([r["h2"] for r in hp], np.int64)
-    assert sb.might_contain(h1, h2).all(), "sharded bloom false negative"
-    rng = np.random.default_rng(13)
-    q1 = rng.integers(-(2**62), 2**62, 20000)
-    q2 = rng.integers(-(2**31), 2**31, 20000)
-    assert sb.might_contain(q1, q2).mean() < 0.05
+    bank = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"),
+        kind="bloom", n_items=8000, fpp=0.01, n_shards=8,
+    )
+    assert bank.n_shards == 8 and len(bank.shard_versions) == 8
+    assert _maybe_seen_share(bank, seen) == 1.0, "sharded bloom false negative"
+    assert _maybe_seen_share(bank, _fresh_urls(spark, 20000)) < 0.05
 
 
 def test_global_row_number(spark):
@@ -264,62 +268,47 @@ def test_cuckoo_filter_membership_and_delete():
     assert cf.might_contain(victims).mean() < 0.05  # victims mostly gone
 
 
-def test_anti_join_with_cuckoo_equals_exact(spark):
-    from fscrawler_spark.operators.dedup import build_cuckoo
-
+def test_anti_join_with_cuckoo_equals_exact(spark, tmp_path):
     cand = spark.createDataFrame([(f"http://h/{i}",) for i in range(500)], "url string")
     seen = spark.createDataFrame([(f"http://h/{i}",) for i in range(0, 500, 3)], "url string")
     exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
-    cf = build_cuckoo(seen, "url", 200)
+    cf = StoredBank.build(seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=200)
     two_tier = {r["url"] for r in anti_join_seen(cand, seen, bloom=cf).collect()}
     assert two_tier == exact
 
 
-def test_sharded_cuckoo_build_no_false_negatives(spark):
+def test_sharded_cuckoo_build_no_false_negatives(spark, tmp_path):
     """Distributed sharded build (r01: the old build collected every
-    hash to the driver): every seen hash must probe True in the sharded
-    bank regardless of which executor built its shard."""
-    import numpy as np
-
-    from fscrawler_spark.operators.dedup import build_cuckoo
-
+    hash to the driver): every seen url must probe maybe-seen in the
+    sharded bank regardless of which executor built its shard."""
     seen = spark.createDataFrame(
         [(f"http://s{i % 7}.example/p{i}",) for i in range(5000)], "url string"
     )
-    cf = build_cuckoo(seen, "url", 5000, n_shards=8)
-    assert cf.n_shards == 8 and len(cf.shards) == 8 and not cf.saturated
-    h1 = np.array(
-        [r["_h1"] for r in seen.select(F.xxhash64("url").alias("_h1")).collect()],
-        np.int64,
+    cf = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=5000, n_shards=8
     )
-    assert cf.might_contain(h1).all(), "sharded build produced a false negative"
-    # unseen hashes mostly negative (the pre-filter actually filters)
-    rng = np.random.default_rng(11)
-    fresh = rng.integers(-(2**62), 2**62, 20000)
-    assert cf.might_contain(fresh).mean() < 0.05
+    assert cf.n_shards == 8 and len(cf.shard_versions) == 8
+    assert cf.bank_df(spark).where("saturated").count() == 0
+    assert _maybe_seen_share(cf, seen) == 1.0, "sharded build produced a false negative"
+    # unseen urls mostly negative (the pre-filter actually filters)
+    assert _maybe_seen_share(cf, _fresh_urls(spark, 20000)) < 0.05
 
 
-def test_sharded_cuckoo_saturation_degrades_safely(spark):
+def test_sharded_cuckoo_saturation_degrades_safely(spark, tmp_path):
     """A shard whose eviction chains exhaust (dropped items) must flip
     to pass-through True — never claim 'definitely unseen' for an item
     it may have dropped (r01 advisory: the dropped count was ignored)."""
-    import numpy as np
-
-    from fscrawler_spark.operators.dedup import build_cuckoo
-
     seen = spark.createDataFrame(
         [(f"http://h/{i}",) for i in range(3000)], "url string"
     )
-    # lie about n_items so each shard is sized for ~64 items but holds ~3000
-    cf = build_cuckoo(seen, "url", n_items=1, n_shards=1)
-    assert cf.saturated, "undersized filter must report saturation"
-    h1 = np.array(
-        [r["_h1"] for r in seen.select(F.xxhash64("url").alias("_h1")).collect()],
-        np.int64,
+    # lie about n_items so the one shard is sized for ~64 items but holds ~3000
+    cf = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=1, n_shards=1
     )
-    assert cf.might_contain(h1).all()
-    rng = np.random.default_rng(5)
-    assert cf.might_contain(rng.integers(-(2**62), 2**62, 1000)).all(), (
+    (row,) = cf.bank_df(spark).select("saturated").collect()
+    assert row["saturated"], "undersized filter must report saturation"
+    assert _maybe_seen_share(cf, seen) == 1.0
+    assert _maybe_seen_share(cf, _fresh_urls(spark, 1000)) == 1.0, (
         "saturated shard must answer True for everything"
     )
 

@@ -1,31 +1,26 @@
 """Round-3 scale mechanics (r02 verdict items 2/3/7/8 + advisories):
 
-- incremental seen-prefilter maintenance: the per-wave filter job reads
-  ONLY the wave's seen delta (never the full seen set), full rebuilds
-  happen only on capacity resizes, and results stay identical to the
-  exact-only run;
-- shard-routed probe: broadcast vs routed parity, and the routed path's
-  1/n_shards payload contract;
+- incremental seen-prefilter maintenance on the stored bank: a delta
+  merge equals a full build over seen + delta (bloom), lands every
+  fingerprint and is multiset-safe under delete (cuckoo); the per-wave
+  filter job reads ONLY the wave's seen delta (never the full seen
+  set), full rebuilds happen only on capacity resizes, and results
+  stay identical to the exact-only run;
 - seen-horizon aging: cuckoo cohort eviction in lockstep with the exact
   table, re-crawl actually occurs, parity with the no-filter run;
 - scheduled-bound broadcast guard;
-- prepartitioned pages: no exchange above the cached html side in the
-  non-broadcast fetch join.
+- pages pre-partitioned by url: no exchange above the cached html side
+  in the non-broadcast fetch join;
+- flipped exact resolution: parity, and seen is never shuffled.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from fscrawler_spark.operators.dedup import (
-    anti_join_seen,
-    build_bloom,
-    build_cuckoo,
-    merge_cuckoo_delta,
-    routed_probe,
-)
+from fscrawler_spark.operators.bankstore import StoredBank
+from fscrawler_spark.operators.dedup import anti_join_seen
 from fscrawler_spark.plans.job import CrawlJob
 from fscrawler_spark.plans.wave_loop import (
     fetch_join,
@@ -40,99 +35,81 @@ def _urls(spark, lo, hi, prefix="http://h/"):
     )
 
 
+def _shard_payloads(spark, bank):
+    return {
+        int(r["shard"]): bytes(r["payload"]) for r in bank.bank_df(spark).collect()
+    }
+
+
+def _occupancy(spark, bank):
+    """Filled cuckoo slots across the bank's latest blobs."""
+    return sum(
+        int((np.frombuffer(p, np.uint16) != 0).sum())
+        for p in _shard_payloads(spark, bank).values()
+    )
+
+
+def _all_maybe_seen(bank, df):
+    return bank.probe(df, "url").where(~F.col("_maybe_seen")).count() == 0
+
+
 # --------------------------------------------------------------------------
 # incremental bloom / cuckoo maintenance (unit level)
 
 
-def test_bloom_delta_merge_equals_full_rebuild(spark):
+def test_bloom_delta_merge_equals_full_rebuild(spark, tmp_path):
     seen = _urls(spark, 0, 500)
     delta = _urls(spark, 500, 700)
-    b0 = build_bloom(seen, "url", 2000, n_shards=8)
-    b0.merge_delta(build_bloom(delta, "url", 200, geometry=b0.geometry))
-    bfull = build_bloom(seen.unionByName(delta), "url", 2000, n_shards=8)
-    assert set(b0.shards) == set(bfull.shards)
-    for s in bfull.shards:
-        assert np.array_equal(b0.shards[s].bits, bfull.shards[s].bits), s
+    b0 = StoredBank.build(
+        seen, "url", str(tmp_path / "inc"), kind="bloom", n_items=2000, n_shards=8
+    )
+    b0.merge_delta(delta, "url", "insert")
+    bfull = StoredBank.build(
+        seen.unionByName(delta), "url", str(tmp_path / "full"),
+        kind="bloom", n_items=2000, n_shards=8,
+    )
+    assert (b0.n_bits, b0.n_hashes) == (bfull.n_bits, bfull.n_hashes)
+    inc, full = _shard_payloads(spark, b0), _shard_payloads(spark, bfull)
+    assert set(inc) == set(full)
+    for s in full:
+        assert inc[s] == full[s], s
 
 
-def test_bloom_geometry_mismatch_raises(spark):
-    seen = _urls(spark, 0, 100)
-    b0 = build_bloom(seen, "url", 1000, n_shards=4)
-    b1 = build_bloom(seen, "url", 1000, n_shards=8)
-    with pytest.raises(RuntimeError):
-        b0.merge_delta(b1)
-
-
-def test_cuckoo_delta_insert_and_probe_power(spark):
+def test_cuckoo_delta_insert_and_probe_power(spark, tmp_path):
     seen = _urls(spark, 0, 500)
     delta = _urls(spark, 500, 700)
-    c0 = build_cuckoo(seen, "url", 4000, n_shards=8)
-    occ0 = sum((cf.table != 0).sum() for cf in c0.shards.values())
-    c1 = merge_cuckoo_delta(c0, delta, "url", "insert")
-    occ1 = sum((cf.table != 0).sum() for cf in c1.shards.values())
-    assert occ1 == occ0 + 200  # every delta fingerprint landed
-    assert not c1.saturated
+    bank = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=4000, n_shards=8
+    )
+    occ0 = _occupancy(spark, bank)
+    bank.merge_delta(delta, "url", "insert")
+    assert _occupancy(spark, bank) == occ0 + 200  # every delta fingerprint landed
+    assert bank.bank_df(spark).where("saturated").count() == 0
     # inserted cohort now has full pre-filter coverage
-    tagged = routed_probe(delta, "url", c1).collect()
+    tagged = bank.probe(delta, "url").collect()
     assert all(r["_maybe_seen"] for r in tagged) and len(tagged) == 200
 
 
-def test_cuckoo_cohort_delete_is_multiset_safe(spark):
+def test_cuckoo_cohort_delete_is_multiset_safe(spark, tmp_path):
     seen = _urls(spark, 0, 500)
     delta = _urls(spark, 500, 700)
-    c1 = merge_cuckoo_delta(
-        build_cuckoo(seen, "url", 4000, n_shards=8), delta, "url", "insert"
+    bank = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=4000, n_shards=8
     )
-    c2 = merge_cuckoo_delta(c1, delta, "url", "delete")
-    # occupancy returns exactly to the pre-insert level
-    assert sum((cf.table != 0).sum() for cf in c2.shards.values()) == sum(
-        (cf.table != 0).sum()
-        for cf in build_cuckoo(seen, "url", 4000, n_shards=8).shards.values()
-    )
-    # retained cohort keeps FULL coverage (no false negatives from the
-    # delete — the multiset property)
-    kept = routed_probe(seen, "url", c2).collect()
-    assert all(r["_maybe_seen"] for r in kept)
-
-
-# --------------------------------------------------------------------------
-# shard-routed probe
-
-
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_routed_probe_parity_with_broadcast(spark, kind):
-    seen = _urls(spark, 0, 600)
-    cand = _urls(spark, 300, 900)
-    bank = (
-        build_bloom(seen, "url", 2400, n_shards=8)
-        if kind == "bloom"
-        else build_cuckoo(seen, "url", 2400, n_shards=8)
-    )
-    exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
-    bcast = {
-        r["url"]
-        for r in anti_join_seen(
-            cand, seen, bloom=bank, probe_mode="broadcast"
-        ).collect()
-    }
-    routed = {
-        r["url"]
-        for r in anti_join_seen(
-            cand, seen, bloom=bank, probe_mode="routed"
-        ).collect()
-    }
-    assert bcast == exact and routed == exact
-
-
-def test_routed_probe_ships_one_shard_per_task(spark):
-    """The routed path's payload table has exactly one row per shard, so
-    a cogroup task holds 1/n_shards of the bank's bytes by construction;
-    per-shard payload must be well under the bank total."""
-    seen = _urls(spark, 0, 4000)
-    bank = build_bloom(seen, "url", 8000, n_shards=8)
-    per_shard = max(b.bits.nbytes for b in bank.shards.values())
-    assert len(bank.shards) == 8
-    assert per_shard * 4 <= bank.total_bytes()  # >=4 real shards' worth
+    occ0 = _occupancy(spark, bank)
+    # insert twice, delete once: one copy of each fingerprint remains,
+    # so every url stays covered
+    bank.merge_delta(delta, "url", "insert")
+    bank.merge_delta(delta, "url", "insert")
+    bank.merge_delta(delta, "url", "delete")
+    assert _occupancy(spark, bank) == occ0 + 200
+    assert _all_maybe_seen(bank, delta)
+    # the second delete returns occupancy exactly to the pre-insert
+    # level, and the retained cohort keeps FULL coverage (no false
+    # negatives from the delete — the multiset property)
+    bank.merge_delta(delta, "url", "delete")
+    assert _occupancy(spark, bank) == occ0
+    assert _all_maybe_seen(bank, seen)
 
 
 # --------------------------------------------------------------------------
@@ -171,27 +148,6 @@ def test_crawl_prefilter_delta_only_and_parity(
     for u in upd:
         assert u["action"] == "delta_merge"
         assert u["rows_hashed"] < total_seen
-
-
-def test_crawl_routed_probe_e2e_parity(spark, pages_df, robots_df, tiny, tmp_path):
-    base = dict(politeness_budget=4, max_waves=4, use_bloom=True)
-    r_b = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, probe_mode="broadcast"),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "b"),
-    )
-    r_r = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, probe_mode="routed"),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "r"),
-    )
-    a = {
-        (r["url"], r["wave"], r["rank_in_wave"])
-        for r in r_b.results(spark).collect()
-    }
-    b = {
-        (r["url"], r["wave"], r["rank_in_wave"])
-        for r in r_r.results(spark).collect()
-    }
-    assert a == b
 
 
 # --------------------------------------------------------------------------
@@ -265,7 +221,7 @@ def test_resolve_can_broadcast_uses_tightest_cheap_bound():
 
 
 # --------------------------------------------------------------------------
-# prepartitioned pages: fat side never re-shuffles
+# pages pre-partitioned by url: fat side never re-shuffles
 
 
 def test_prepartitioned_pages_no_fat_side_exchange(spark):
@@ -296,7 +252,7 @@ def test_prepartitioned_pages_no_fat_side_exchange(spark):
 # flipped exact resolution: seen is scanned, never shuffled
 
 
-def test_flip_resolve_parity(spark):
+def test_flip_resolve_parity(spark, tmp_path):
     seen = _urls(spark, 0, 600)
     cand = _urls(spark, 300, 900)
     exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
@@ -304,21 +260,16 @@ def test_flip_resolve_parity(spark):
         r["url"]
         for r in anti_join_seen(cand, seen, flip_broadcast=True).collect()
     }
-    bank = build_bloom(seen, "url", 2400, n_shards=8)
-    flip_bloom = {
+    bank = StoredBank.build(
+        seen, "url", str(tmp_path / "bank"), kind="bloom", n_items=2400, n_shards=8
+    )
+    flip_bank = {
         r["url"]
         for r in anti_join_seen(
-            cand, seen, bloom=bank, probe_mode="broadcast",
-            flip_broadcast=True,
+            cand, seen, bloom=bank, flip_broadcast=True
         ).collect()
     }
-    flip_routed = {
-        r["url"]
-        for r in anti_join_seen(
-            cand, seen, bloom=bank, probe_mode="routed", flip_broadcast=True
-        ).collect()
-    }
-    assert flip == exact and flip_bloom == exact and flip_routed == exact
+    assert flip == exact and flip_bank == exact
 
 
 def test_flip_resolve_never_shuffles_seen(spark, tmp_path):
