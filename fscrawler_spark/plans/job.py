@@ -105,8 +105,8 @@ class CrawlJob:
     # frontier_compact_every-th wave writes a full snapshot
     # (frontier/wave=K): the Iceberg merge-on-read model, O(wave) write
     # volume instead of O(|frontier|).  1 = a full snapshot every wave.
-    # In-loop lineage is truncated with localCheckpoint (released at
-    # each compaction); resume replays the last snapshot + deltas +
+    # In-loop lineage is truncated with localCheckpoint (released when
+    # the next one exists); resume replays the last snapshot + deltas +
     # per-wave seen anti-joins (exact under seen_horizon_waves aging
     # too).  Outputs do not depend on the setting (pytest-pinned).
     frontier_compact_every: int = 8

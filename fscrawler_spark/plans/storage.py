@@ -53,9 +53,11 @@ class CheckpointStore:
         frontier_kind: str = "full",
     ) -> dict[str, float | str]:
         """Write the wave's three data tables concurrently (independent
-        Spark jobs; shared cached stages are computed once under the
-        block manager's per-partition locks).  Returns per-write wall
-        seconds.  NOT a commit — commit_wave() writes the marker.
+        Spark jobs).  The wave loop hands in frames built on its
+        checkpointed leaves, so each write scans those leaves and runs
+        only its own projection, union or merge on top — no upstream
+        stage is shared or recomputed.  Returns per-write wall seconds.
+        NOT a commit — commit_wave() writes the marker.
 
         frontier_kind: "full" writes the complete pending frontier to
         frontier/wave=K (read back directly); "delta" writes only the

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,7 +80,27 @@ class CrawlResult:
     store: CheckpointStore
     waves_run: int
     stats: dict = field(default_factory=dict)
-    # per-wave engine self-metrics: phase -> wall seconds
+    # One dict per wave; wall seconds unless noted.  Phase timers, each
+    # covering both building that phase's plan and materializing it:
+    #   admit          wave start -> `stat` checkpoint (bank open, seen
+    #                  anti-join, stat join, skip/robots classify)
+    #   schedule       -> `ranked` checkpoint (waterfill, politeness)
+    #   fetch_extract  -> `pre_rank` checkpoint (fetch join + UDFs)
+    #   rank           -> `extracted` checkpoint (wave_rank join-back)
+    # then
+    #   plan_build       wave start -> first materialization (the
+    #                    `stat` checkpoint); includes the bank open
+    #   collect_metrics  the per-status counter collect
+    #   write_results / write_seen / write_frontier  per-table writes
+    #   write_phase      the three concurrent writes together
+    #   frontier_kind    "full" | "delta" (a string, not seconds)
+    #   lineage_commit   lineage collect + metrics/marker commit
+    #   reload_state     next frontier + seen view, checkpoint release
+    #   prefilter        bank open/reuse record {action, rows_hashed}
+    #   prefilter_update bank maintenance record {action, rows_hashed,
+    #                    secs[, evicted_cohorts]}
+    #   wave             the wave number
+    #   wall             wave start -> end of the wave's bookkeeping
     timings: list[dict] = field(default_factory=list)
 
     def results(self, spark: SparkSession) -> DataFrame | None:
@@ -90,6 +111,21 @@ class CrawlResult:
 
     def metrics(self, spark: SparkSession) -> DataFrame | None:
         return self.store.read_metrics(spark)
+
+
+def _release(checkpointed: DataFrame | None) -> None:
+    """Free a localCheckpoint's executor blocks now.  DataFrame.unpersist()
+    does nothing here: a checkpointed frame's plan is a LogicalRDD leaf,
+    not a cached relation, so the leaf's RDD is unpersisted instead."""
+    if checkpointed is not None:
+        checkpointed._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def _lap(timings: dict, phase: str, since: float) -> float:
+    """Record `phase` as the wall seconds since `since`; return now."""
+    now = time.time()
+    timings[phase] = round(now - since, 3)
+    return now
 
 
 def seeds_to_frontier(spark: SparkSession, seed_rows: list[dict]) -> DataFrame:
@@ -116,7 +152,7 @@ def resolve_can_broadcast(
     """Decide the fetch-join strategy from the SCHEDULED set's bound
     (r02 advisory): the pending-frontier size is a cheap upper bound, a
     wave_cap is a tighter one, and only when both exceed the threshold
-    is the exact scheduled count (one traversal of the already-persisted
+    is the exact scheduled count (one scan of the already-checkpointed
     ranked frame) consulted — so a huge frontier under a tight budget
     keeps the fast broadcast probe without ever calling the counter."""
     if frontier_n <= threshold:
@@ -372,7 +408,16 @@ def run_crawl(
     seen_init: optional pre-existing seen-set (url column) for warm
     re-crawls — the reference's warm re-run (README.md:111-115, 156x
     speedup via the DB probe) becomes "every previously-examined URL
-    drops at the first anti-join"."""
+    drops at the first anti-join".
+
+    Each wave materializes at four points — `stat`, `ranked`,
+    `pre_rank`, `extracted` — with localCheckpoint(eager=True), so every
+    later query of the wave plans over a one-node leaf instead of the
+    nested DAG above it; non-compaction frontiers are checkpointed the
+    same way.  These checkpoints live in executor block storage and are
+    NOT recomputable: a lost executor fails the wave, and resume replays
+    it from the last commit marker (nothing of an uncommitted wave is
+    ever read back).  All of them are released before this returns."""
     store = CheckpointStore(
         checkpoint_dir or tempfile.mkdtemp(prefix="fsc_ckpt_")
     )
@@ -437,7 +482,10 @@ def run_crawl(
             spark, store, wave_now, job.seen_horizon_waves, seen_init
         )
 
-    lc_frontiers: list[DataFrame] = []  # localCheckpoints freed at compaction
+    # the current frontier when it is a localCheckpoint (None when it
+    # is a committed snapshot or the seed list); released as soon as
+    # the next frontier exists
+    frontier_ckpt: DataFrame | None = None
 
     start_wave = 0
     seen_count = 0
@@ -453,7 +501,7 @@ def run_crawl(
                 spark, store, lw, seeds_to_frontier(spark, seed_rows),
                 horizon=job.seen_horizon_waves, seen_init=seen_init,
             ).localCheckpoint(eager=True)
-            lc_frontiers.append(frontier)
+            frontier_ckpt = frontier
         frontier_n = frontier.count()  # parquet-footer count, cheap
         seen_df = _load_seen(start_wave)
         seen_count = seen_df.count() if seen_df is not None else 0
@@ -487,13 +535,13 @@ def run_crawl(
 
     waves_run = start_wave
     all_timings: list[dict] = []
-    import time as _wtime
 
     gwb_carry = 0  # carryover credit (driver state; reset on resume)
     for wave in range(start_wave, job.max_waves):
         if frontier_n == 0:
             break
-        _wave_t0 = _wtime.time()
+        _wave_t0 = time.time()
+        phase_s: dict = {}  # phase timers (see CrawlResult.timings)
         waves_run = wave + 1
         # Adaptive physical path: small pending frontiers skip the salt
         # phase and use the single-window rank (same results, fewer jobs).
@@ -531,14 +579,15 @@ def run_crawl(
             new = queued
 
         # --- stat join + classification ----------------------------------
-        # persisted: consumed by missing/skipped/authorized branches, the
-        # seen delta and the metrics aggregate (one compute, many readers).
-        # The REP decision is baked in as a boolean column BEFORE the
-        # persist, so the rules join + longest-match lambdas run exactly
-        # once per row — every downstream branch is then a pure filter
-        # on the cache.  (r02's hit-set shape — broadcast joins +
-        # groupBy(url) + semi/anti join-backs, re-executed per consumer
-        # — was re-measured as the whole of round 2's crawl regression.)
+        # checkpointed: consumed by missing/skipped/authorized branches,
+        # the seen delta and the metrics aggregate (one compute, many
+        # readers).  The REP decision is baked in as a boolean column
+        # BEFORE the checkpoint, so the rules join + longest-match
+        # lambdas run exactly once per row — every downstream branch is
+        # then a pure filter on a one-node leaf.  (r02's hit-set shape —
+        # broadcast joins + groupBy(url) + semi/anti join-backs,
+        # re-executed per consumer — was re-measured as the whole of
+        # round 2's crawl regression.)
         stat_raw = _stat_join(new, pages_meta)
         if rules_arr is not None:
             # Longest-match REP as a projection: denied iff the longest
@@ -574,7 +623,12 @@ def run_crawl(
             )
         else:
             stat_raw = stat_raw.withColumn("_rep_denied", F.lit(False))
-        stat = stat_raw.persist()
+        # Driver-side lazy-DAG construction + any eager jobs before it
+        # (prefilter build) — everything between wave start and the
+        # first materialization.
+        _plan_build_s = round(time.time() - _wave_t0, 3)
+        stat = stat_raw.localCheckpoint(eager=True)
+        t_phase = _lap(phase_s, "admit", _wave_t0)
         missing = stat.where(F.col("is_missing"))
         present = stat.where(~F.col("is_missing")).drop("is_missing")
 
@@ -593,8 +647,8 @@ def run_crawl(
         # the allocations to the per-host window as its budget dim.
         # Demand is capped at each host's politeness/crawl-delay budget
         # first, so waterfill never allocates tokens a host cannot
-        # spend.  The demand rollup re-reads the PERSISTED `stat`
-        # frame (one cached-scan + map-side count per wave); the level
+        # spend.  The demand rollup re-reads the CHECKPOINTED `stat`
+        # frame (one leaf scan + map-side count per wave); the level
         # search itself runs on distinct demand values only.
         hb_wave = host_budgets
         gwb_eff = None
@@ -628,7 +682,8 @@ def run_crawl(
             hb_wave,
             salt_buckets,
             job.wave_cap,
-        ).persist()
+        ).localCheckpoint(eager=True)
+        t_phase = _lap(phase_s, "schedule", t_phase)
         scheduled = ranked.where(F.col("scheduled")).drop("scheduled", "host_rank")
         deferred = ranked.where(~F.col("scheduled")).select(*_FRONTIER_COLS)
 
@@ -639,9 +694,9 @@ def run_crawl(
         # is a HARD hint though: past the threshold it would OOM the
         # driver.  The guard keys off the SCHEDULED set (r02 advisory):
         # frontier_n bounds it cheaply; a tight wave_cap bounds it
-        # tighter; past both, one count over the persisted ranked frame
-        # (about to be materialized anyway) decides exactly — so a huge
-        # frontier with a small budget keeps the fast broadcast probe.
+        # tighter; past both, one count over the checkpointed ranked
+        # frame decides exactly — so a huge frontier with a small
+        # budget keeps the fast broadcast probe.
         # In the non-broadcast regime a shuffled join exchanges the
         # ENTIRE pages side, html included, every wave, unless the
         # caller passes pages already hash-partitioned by url (then
@@ -678,19 +733,20 @@ def run_crawl(
             .withColumn("rating", content_rating(name, F.col("url")))
             .drop("html")  # the binary never crosses a shuffle
         )
-        # persisted BEFORE ranking: results write, link expansion, metrics
-        # and wave_rank's passes all read the extracted set; the html
-        # scan + UDFs must run exactly once per wave.
-        pre_rank = extracted.persist()
+        # checkpointed BEFORE ranking: wave_rank's passes and the
+        # join-back both read the extracted set, and the html scan +
+        # UDFs must run exactly once per wave.
+        pre_rank = extracted.localCheckpoint(eager=True)
+        t_phase = _lap(phase_s, "fetch_extract", t_phase)
         # Rank a SLIM projection and join it back: the heavy text/hrefs
         # columns never pass through the rank exchange (the single-
         # partition sort at small waves, the range exchange at large
-        # ones), so every downstream consumer keeps the cache's parallel
-        # partitioning.  The rank map is politeness-bounded (<= hosts x
-        # budget slim rows per wave) — broadcast below the same wave
-        # threshold as the fetch join; above it, plain equi-join (the
-        # rank map is 2 slim columns, so the shuffle is cheap relative
-        # to the wave itself).
+        # ones), so every downstream consumer keeps the checkpoint's
+        # parallel partitioning.  The rank map is politeness-bounded
+        # (<= hosts x budget slim rows per wave) — broadcast below the
+        # same wave threshold as the fetch join; above it, plain
+        # equi-join (the rank map is 2 slim columns, so the shuffle is
+        # cheap relative to the wave itself).
         slim_ranked = wave_rank(
             pre_rank.select("priority", "host", "url"), small=small
         ).select("url", "rank_in_wave")
@@ -700,8 +756,9 @@ def run_crawl(
             )
             .withColumn("wave", F.lit(wave))
             .withColumn("n_links", F.size("hrefs"))
-            .persist()
+            .localCheckpoint(eager=True)
         )
+        _lap(phase_s, "rank", t_phase)
 
         results_wave = extracted.where(
             F.coalesce(notify_pred, F.lit(True))
@@ -750,20 +807,10 @@ def run_crawl(
         ).unionByName(error_rows, allowMissingColumns=True)
 
         # One aggregation action yields every wave counter (A2 analog).
-        # Runs concurrently with the wave writes (independent job over
-        # the same cached intermediates).
-        import time as _time
-
-        # Driver-side lazy-DAG construction + any pre-collect eager jobs
-        # (prefilter build, broadcast-guard count) — everything between
-        # wave start and the first materialization.
-        _plan_build_s = round(_time.time() - _wave_t0, 3)
-
         status_counts_df = (
             scheduled.select(F.lit("scheduled").alias("s"), "size")
-            # 'fetched' duplicates 'scheduled' informationally, but pulls
-            # the extracted cache (fetch join + UDFs + rank) into this
-            # single warm-up job so the writes below are IO-only.
+            # 'fetched' duplicates 'scheduled' informationally; the
+            # metrics table carries it, the seen accounting skips it
             .unionByName(extracted.select(F.lit("fetched").alias("s"), "size"))
             .unionByName(skipped.select(F.lit("skipped").alias("s"), "size"))
             .unionByName(missing.select(F.lit("missing").alias("s"), "size"))
@@ -777,14 +824,13 @@ def run_crawl(
             .groupBy("s")
             .agg(F.count("*").alias("n"), F.sum("size").alias("bytes"))
         )
-        # Metrics collect FIRST: one job materializes every persisted
-        # intermediate, so the three concurrent writes that follow all
-        # hit warm caches.  (Overlapping collect with the writes was
-        # measured slower — cache-lock contention on first computation.)
-        t_collect = _time.time()
+        # Every input below reads checkpointed leaves: the collect and
+        # the three concurrent writes each run only their own operators
+        # on top, never the wave's upstream passes again.
+        t_collect = time.time()
         status_counts = status_counts_df.collect()
-        t_collect = round(_time.time() - t_collect, 3)
-        t_write = _time.time()
+        t_collect = round(time.time() - t_collect, 3)
+        t_write = time.time()
         wave_timings = store.write_wave_data(
             wave,
             results=results_out,
@@ -792,8 +838,9 @@ def run_crawl(
             frontier=merged if compact else children,
             frontier_kind="full" if compact else "delta",
         )
-        wave_timings["write_phase"] = round(_time.time() - t_write, 3)
+        wave_timings["write_phase"] = round(time.time() - t_write, 3)
         wave_timings["collect_metrics"] = t_collect
+        wave_timings.update(phase_s)
         wave_timings["wave"] = wave
         stats = {r["s"]: {"n": r["n"], "bytes": r["bytes"] or 0} for r in status_counts}
         if gwb_eff is not None and job.global_budget_carryover:
@@ -807,8 +854,8 @@ def run_crawl(
             (wave, f"{k}_{m}", int(v[m])) for k, v in stats.items() for m in ("n", "bytes")
         ] or [(wave, "empty", 0)]
         # per-partition lineage counters (north rule: checkpoints carry
-        # per-partition lineage) — one cheap agg over the warm cache
-        t_lc = _time.time()
+        # per-partition lineage) — one cheap agg over the extracted leaf
+        t_lc = time.time()
         lineage_rows = [
             (wave, int(r["pid"]), int(r["rows"]), int(r["bytes"] or 0))
             for r in extracted.groupBy(F.spark_partition_id().alias("pid"))
@@ -816,49 +863,46 @@ def run_crawl(
             .collect()
         ]
         store.commit_wave(wave, metrics_rows, stats, lineage_rows)
-        wave_timings["lineage_commit"] = round(_time.time() - t_lc, 3)
+        wave_timings["lineage_commit"] = round(time.time() - t_lc, 3)
 
         # Truncate frontier lineage (no exponential plan growth across
         # waves).  Compaction waves re-read the committed snapshot
         # (resume path == normal path).  Other waves localCheckpoint the
         # merged frame instead — executor-local blocks, no second full
-        # write — BEFORE the caches below are released so the merge
-        # reads warm data; accumulated blocks are released at the next
-        # compaction (reference drop -> ContextCleaner unpersists the
-        # checkpointed RDDs asynchronously).
-        t0 = _time.time()
-        if not compact:
-            frontier = merged.localCheckpoint(eager=True)
-            lc_frontiers.append(frontier)
-        for cached in (stat, ranked, pre_rank, extracted):
-            cached.unpersist()
+        # write — BEFORE the wave's checkpoints it reads are released.
+        # Only then is the previous frontier released: commit_wave is
+        # past, so nothing reads this wave's candidates again.
+        t0 = time.time()
         if compact:
             frontier = store.read_frontier(spark, wave)
-            for f in lc_frontiers:
-                f.unpersist()
-            lc_frontiers.clear()
-        frontier_n = frontier.count()  # parquet-footer count, cheap
+        else:
+            frontier = merged.localCheckpoint(eager=True)
+        _release(frontier_ckpt)
+        frontier_ckpt = None if compact else frontier
+        for ckpt in (stat, ranked, pre_rank, extracted):
+            _release(ckpt)
+        frontier_n = frontier.count()  # footer / leaf count, cheap
         seen_df = _load_seen(wave + 1)
-        wave_timings["reload_state"] = round(_time.time() - t0, 3)
+        wave_timings["reload_state"] = round(time.time() - t0, 3)
 
         # --- prefilter incremental maintenance ---------------------------
         if prefilter is not None:
-            t0 = _time.time()
+            t0 = time.time()
             upd_log = _maintain_bank(spark, store, job, prefilter, wave)
             if upd_log["action"] == "rebuild_scheduled":
                 prefilter = None
-            upd_log["secs"] = round(_time.time() - t0, 3)
+            upd_log["secs"] = round(time.time() - t0, 3)
             wave_timings["prefilter_update"] = upd_log
         if prefilter_probe_log is not None:
             wave_timings["prefilter"] = prefilter_probe_log
         wave_timings["plan_build"] = _plan_build_s
-        wave_timings["wall"] = round(_wtime.time() - _wave_t0, 3)
+        wave_timings["wall"] = round(time.time() - _wave_t0, 3)
         all_timings.append(wave_timings)
         # bank sizing + flip gate: examined-this-wave = everything
         # except deferred rows (still queued) and the 'fetched'
-        # cache-warm duplicate of 'scheduled'.  With a horizon, the
-        # count is re-derived from the in-horizon cohorts so aged-out
-        # URLs stop counting (they ARE re-crawlable again).
+        # duplicate of 'scheduled'.  With a horizon, the count is
+        # re-derived from the in-horizon cohorts so aged-out URLs stop
+        # counting (they ARE re-crawlable again).
         wave_examined = sum(
             v["n"] for k, v in stats.items() if k not in ("deferred", "fetched")
         )
@@ -874,11 +918,5 @@ def run_crawl(
     pages_meta.unpersist()
     if rules_arr is not None:
         rules_arr.unpersist()
-    # Release frontier localCheckpoint blocks accumulated since the
-    # last compaction (r03 advisory: a crawl ending on a non-compaction
-    # wave pinned up to frontier_compact_every-1 frontier copies in
-    # executor storage).  The FINAL frontier stays referenced by the
-    # caller-visible plan only on non-compaction exits — keep its block.
-    for f in lc_frontiers[:-1]:
-        f.unpersist()
+    _release(frontier_ckpt)
     return CrawlResult(store=store, waves_run=waves_run, timings=all_timings)

@@ -250,6 +250,7 @@ print(json.dumps(out))
         r = subprocess.run(
             [sys.executable, "-c", code, cores],
             capture_output=True, text=True, cwd="/root/repo", timeout=420,
+            env={**os.environ, "SPARK_DRIVER_MEM": "2g"},
         )
         assert r.returncode == 0, r.stderr[-2000:]
         outs.append(json.loads(r.stdout.strip().splitlines()[-1]))

@@ -40,6 +40,21 @@ JOB_DELTA = CrawlJob(
 )
 
 
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _crawl(spark, *args, **kwargs):
+    """run_crawl that must leave no persisted block behind: every wave
+    checkpoint and frontier checkpoint is released before it returns.
+    (No NEW persisted RDD, rather than an equal count, so an older
+    test's RDD the context cleaner drops meanwhile cannot flake it.)"""
+    before = _persisted(spark)
+    res = run_crawl(spark, *args, **kwargs)
+    assert _persisted(spark) - before == set()
+    return res
+
+
 def _crawl_state(spark, res):
     order = {
         r["url"]: (r["wave"], r["rank_in_wave"])
@@ -65,11 +80,11 @@ def test_delta_mode_crawl_equals_full_mode(
 ):
     full_dir = str(tmp_path_factory.mktemp("fr_full"))
     delta_dir = str(tmp_path_factory.mktemp("fr_delta"))
-    full = run_crawl(
+    full = _crawl(
         spark, pages_df, tiny["seeds"], JOB_FULL, robots=robots_df,
         checkpoint_dir=full_dir,
     )
-    delta = run_crawl(
+    delta = _crawl(
         spark, pages_df, tiny["seeds"], JOB_DELTA, robots=robots_df,
         checkpoint_dir=delta_dir,
     )
@@ -113,18 +128,18 @@ def test_delta_mode_resume_from_noncompaction_wave(
     job4 = CrawlJob(**{**JOB_DELTA.__dict__, "frontier_compact_every": 4})
     full_dir = str(tmp_path_factory.mktemp("fr_res_full"))
     part_dir = str(tmp_path_factory.mktemp("fr_res_part"))
-    full = run_crawl(
+    full = _crawl(
         spark, pages_df, tiny["seeds"], JOB_FULL, robots=robots_df,
         checkpoint_dir=full_dir,
     )
-    half = run_crawl(
+    half = _crawl(
         spark, pages_df, tiny["seeds"],
         CrawlJob(**{**job4.__dict__, "max_waves": 2}),
         robots=robots_df, checkpoint_dir=part_dir,
     )
     assert half.store.last_wave() == 1
     assert not half.store.has_full_frontier(1)
-    resumed = run_crawl(
+    resumed = _crawl(
         spark, pages_df, tiny["seeds"], job4, robots=robots_df,
         checkpoint_dir=part_dir, resume=True,
     )
@@ -143,17 +158,17 @@ def test_delta_mode_replay_under_seen_horizon_aging(
     )
     jf = CrawlJob(**base, frontier_compact_every=1)
     jd = CrawlJob(**base, frontier_compact_every=5)
-    full = run_crawl(
+    full = _crawl(
         spark, pages_df, tiny["seeds"], jf, robots=robots_df,
         checkpoint_dir=str(tmp_path_factory.mktemp("fr_h_full")),
     )
     part_dir = str(tmp_path_factory.mktemp("fr_h_part"))
-    run_crawl(
+    _crawl(
         spark, pages_df, tiny["seeds"],
         CrawlJob(**{**jd.__dict__, "max_waves": 3}),
         robots=robots_df, checkpoint_dir=part_dir,
     )
-    resumed = run_crawl(
+    resumed = _crawl(
         spark, pages_df, tiny["seeds"], jd, robots=robots_df,
         checkpoint_dir=part_dir, resume=True,
     )

@@ -31,12 +31,14 @@ def test_end_to_end_example_runs(tmp_path):
     crawl -> curate -> pack -> WARC out) runs green in a fresh
     process and its stage counts are internally consistent."""
     import json
+    import os
     import subprocess
     import sys
 
     r = subprocess.run(
         [sys.executable, "examples/end_to_end.py", str(tmp_path / "tour")],
         capture_output=True, text=True, cwd="/root/repo", timeout=420,
+        env={**os.environ, "SPARK_DRIVER_MEM": "2g"},
     )
     assert r.returncode == 0, r.stderr[-2000:]
     s = json.loads(r.stdout.strip().splitlines()[-1])
