@@ -2011,7 +2011,11 @@ def q77_redirect_chains(spark, sf_dir):
             ).alias("dst"),
         )
     )
-    return resolve_redirect_chains(edges, "src", "dst").orderBy("src")
+    return (
+        resolve_redirect_chains(edges, "src", "dst")
+        .select("src", "final_dst", "hops")
+        .orderBy("src")
+    )
 
 
 def q78_budget_waterfill(spark, sf_dir):

@@ -8,8 +8,9 @@ line:  {"metric": ..., "value": <total sec>, "unit": "sec",
 The crawl benchmark runs the full wave loop on the deterministic
 "small" synthetic pages fixture (60k pages / 50 hosts + hot host) and
 reports urls_per_sec = scheduled+extracted URLs / crawl seconds — the
-BASELINE.json target metric.  The two-parallelism scaling evidence
-(local[8] vs local[32]) lives in BENCH/scaling.py -> BENCH/BASELINE.md.
+BASELINE.json target metric.  The history of the two-parallelism
+scaling campaigns (local[8] vs local[32]) is in BENCH/BASELINE.md; the
+per-layer performance reference is perfbench/.
 
 Analytic queries are timed with a noop-format write so every output
 column is computed (a bare count() would let Catalyst prune the work).

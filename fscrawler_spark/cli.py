@@ -92,7 +92,6 @@ def cmd_crawl(args: argparse.Namespace) -> None:
         notify_filters=tuple(build_filters(cfg.get("notify_filters", []))),
         invert=cfg.get("invert", False),
         use_bloom=_flag_over_config(cfg, "use_bloom", args.bloom, False),
-        seen_filter=cfg.get("seen_filter", "bloom"),
         bloom_fpp=cfg.get("bloom_fpp", 0.01),
         respect_robots=cfg.get("respect_robots", True),
         salt_buckets=cfg.get("salt_buckets", 32),

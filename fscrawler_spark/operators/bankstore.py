@@ -5,23 +5,23 @@ At 10^10 seen URLs a 1%-FPP bloom bank is ~12 GB: it neither fits on
 the driver nor should transit it every wave.  StoredBank keeps the
 bank in a parquet table of shard blobs inside the checkpoint directory:
 
-  {path}/v{K}/          parquet (shard int, payload binary,
-                                 saturated boolean) — one row per shard
-  {path}/meta.json      geometry + shard->version manifest + crawl
-                        bookkeeping (n_added, cohorts, merged_upto)
+  {path}/v{K}/          parquet (shard int, payload binary) — one
+                        bloom bit array per shard
+  {path}/meta.json      kind ("bloom") + geometry + shard->version
+                        manifest + crawl bookkeeping (n_added,
+                        merged_upto)
 
 and every operation is an executor-side Spark job over that table:
 
-  build       hash shards -> mapInPandas builds each shard's filter
-              (dedup.NumpyBloom or dedup.CuckooFilter) locally ->
-              .write.parquet(v0).  No collect — payload bytes go
-              executor -> storage, never through the driver.
+  build       hash shards -> mapInPandas builds each shard's
+              dedup.NumpyBloom locally -> .write.parquet(v0).  No
+              collect — payload bytes go executor -> storage, never
+              through the driver.
   merge_delta the wave's seen-delta hashes COGROUP the bank scan
               FILTERED to the delta's touched shards; updated blobs
               land in a new version dir.  Job input ~ O(|delta| +
               touched shard blobs); untouched shards keep their old
               file (manifest pointer unchanged) — nothing is copied.
-              Cuckoo banks also delete (seen-horizon cohort aging).
   probe       dedup.cogroup_probe fed by the bank-table scan: filter
               bytes flow storage -> executors.
   compact     rewrites the latest blobs into one version dir when the
@@ -52,14 +52,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fscrawler_spark.operators.dedup import (
-    CuckooFilter,
-    NumpyBloom,
-    _hash_cols,
-    cogroup_probe,
-)
+from fscrawler_spark.operators.dedup import NumpyBloom, _hash_cols, cogroup_probe
 
-BANK_SCHEMA = "shard int, payload binary, saturated boolean"
+BANK_SCHEMA = "shard int, payload binary"
 
 
 def _atomic_json(path: str, obj: dict) -> None:
@@ -75,11 +70,12 @@ class StoredBank:
 
     def __init__(self, path: str, meta: dict):
         self.path = path
-        self.kind = meta["kind"]  # "bloom" | "cuckoo"
+        # always "bloom" when written by this module; a reader must
+        # treat a bank of any other kind as absent
+        self.kind = meta["kind"]
         self.n_shards = int(meta["n_shards"])
         self.n_bits = int(meta.get("n_bits") or 0)
         self.n_hashes = int(meta.get("n_hashes") or 0)
-        self.per_shard_buckets = int(meta.get("per_shard_buckets") or 0)
         self.capacity_items = int(meta["capacity_items"])
         self.n_added = int(meta.get("n_added", 0))
         # shard -> version dir index holding that shard's LATEST blob
@@ -88,10 +84,6 @@ class StoredBank:
         }
         self.next_version = int(meta.get("next_version", 1))
         self.merged_upto = int(meta.get("merged_upto", -1))
-        # cohort wave -> rows inserted (cuckoo seen-horizon aging)
-        self.cohorts: dict[int, int] = {
-            int(k): int(v) for k, v in meta.get("cohorts", {}).items()
-        }
         # manifest spanning more live versions than this triggers an
         # auto-compaction on the next merge (bounds read fan-out)
         self.compact_span = int(meta.get("compact_span", 12))
@@ -111,13 +103,11 @@ class StoredBank:
                 "n_shards": self.n_shards,
                 "n_bits": self.n_bits,
                 "n_hashes": self.n_hashes,
-                "per_shard_buckets": self.per_shard_buckets,
                 "capacity_items": self.capacity_items,
                 "n_added": self.n_added,
                 "shard_versions": {str(k): v for k, v in self.shard_versions.items()},
                 "next_version": self.next_version,
                 "merged_upto": self.merged_upto,
-                "cohorts": {str(k): v for k, v in self.cohorts.items()},
                 "compact_span": self.compact_span,
             },
         )
@@ -153,27 +143,19 @@ class StoredBank:
         df: DataFrame,
         col: str,
         path: str,
-        kind: str = "bloom",
         n_items: int = 1,
         fpp: float = 0.01,
         n_shards: int | None = None,
     ) -> "StoredBank":
         """Distributed build straight to storage: hash shards ->
-        mapInPandas builds each shard's filter locally -> parquet v0.
-        The only driver materialization is the (shard, saturated)
-        manifest read-back — payload column pruned by Catalyst."""
+        mapInPandas builds each shard's bloom locally -> parquet v0.
+        The only driver materialization is the shard-id manifest
+        read-back — payload column pruned by Catalyst."""
         spark = df.sparkSession
         if n_shards is None:
             n_shards = max(1, spark.sparkContext.defaultParallelism)
-        per_shard = max(64, int(n_items / n_shards * 1.25))
-        if kind == "bloom":
-            proto = NumpyBloom.sized_for(per_shard, fpp)
-            n_bits, n_hashes, psb = proto.n_bits, proto.n_hashes, 0
-        elif kind == "cuckoo":
-            proto = CuckooFilter.sized_for(per_shard)
-            n_bits, n_hashes, psb = 0, 0, proto.n_buckets
-        else:
-            raise ValueError(f"unknown bank kind {kind!r}")
+        proto = NumpyBloom.sized_for(max(64, int(n_items / n_shards * 1.25)), fpp)
+        n_bits, n_hashes = proto.n_bits, proto.n_hashes
 
         shutil.rmtree(path, ignore_errors=True)  # stale versions from a prior bank
         os.makedirs(path, exist_ok=True)
@@ -182,7 +164,6 @@ class StoredBank:
             "_s", F.pmod(F.col("_h1"), F.lit(n_shards)).cast("int")
         )
         parted = hashed.repartition(n_shards, "_s")
-        is_bloom = kind == "bloom"
 
         def build_shards(batches):
             acc: dict[int, list[pd.DataFrame]] = {}
@@ -191,36 +172,27 @@ class StoredBank:
                     acc.setdefault(int(s), []).append(grp)
             rows = []
             for s, chunks in acc.items():
-                h1 = np.concatenate(
-                    [c["_h1"].to_numpy(np.int64) for c in chunks]
+                b = NumpyBloom(n_bits, n_hashes)
+                b.add_hashes(
+                    np.concatenate([c["_h1"].to_numpy(np.int64) for c in chunks]),
+                    np.concatenate([c["_h2"].to_numpy(np.int64) for c in chunks]),
                 )
-                if is_bloom:
-                    b = NumpyBloom(n_bits, n_hashes)
-                    h2 = np.concatenate(
-                        [c["_h2"].to_numpy(np.int64) for c in chunks]
-                    )
-                    b.add_hashes(h1, h2)
-                    rows.append((s, b.bits.tobytes(), False))
-                else:
-                    cf = CuckooFilter(psb)
-                    dropped = cf.add_hashes(h1)
-                    rows.append((s, cf.table.tobytes(), dropped > 0))
-            yield pd.DataFrame(rows, columns=["shard", "payload", "saturated"])
+                rows.append((s, b.bits.tobytes()))
+            yield pd.DataFrame(rows, columns=["shard", "payload"])
 
         vdir = os.path.join(path, "v0")
         parted.mapInPandas(build_shards, BANK_SCHEMA).write.mode(
             "overwrite"
         ).parquet(vdir)
-        # manifest read-back: shard+saturated only (payloads pruned)
+        # manifest read-back: shard ids only (payloads pruned)
         built = spark.read.parquet(vdir).select("shard").collect()
         bank = cls(
             path,
             {
-                "kind": kind,
+                "kind": "bloom",
                 "n_shards": n_shards,
                 "n_bits": n_bits,
                 "n_hashes": n_hashes,
-                "per_shard_buckets": psb,
                 "capacity_items": n_items,
                 "shard_versions": {str(int(r["shard"])): 0 for r in built},
             },
@@ -236,7 +208,8 @@ class StoredBank:
         per live version dir, scan it filtered to the shards whose
         manifest pointer is that version — the isin predicate pushes
         into the parquet scan, so a merge touching k shards reads ~k
-        blobs, not the bank."""
+        blobs, not the bank.  Only (shard, payload) is read, so a blob
+        file carrying further columns reads the same."""
         byver: dict[int, list[int]] = {}
         want = None if shards is None else set(shards)
         for s, v in self.shard_versions.items():
@@ -245,7 +218,9 @@ class StoredBank:
         parts = []
         for v, ss in sorted(byver.items()):
             parts.append(
-                spark.read.parquet(self._vdir(v)).where(F.col("shard").isin(ss))
+                spark.read.parquet(self._vdir(v))
+                .where(F.col("shard").isin(ss))
+                .select("shard", "payload")
             )
         if not parts:
             return spark.createDataFrame([], BANK_SCHEMA)
@@ -264,10 +239,9 @@ class StoredBank:
             candidates,
             url_col,
             self.bank_df(candidates.sparkSession),
-            is_bloom=(self.kind == "bloom"),
             n_shards=self.n_shards,
-            n_bits=self.n_bits or None,
-            n_hashes=self.n_hashes or None,
+            n_bits=self.n_bits,
+            n_hashes=self.n_hashes,
         )
 
     # -- incremental maintenance --------------------------------------------
@@ -275,25 +249,18 @@ class StoredBank:
         self,
         delta: DataFrame,
         col: str,
-        op: str = "insert",
+        *,
         meta_updates: dict | None = None,
     ) -> None:
-        """Cogroup one cohort's hashes with ONLY the touched shards'
-        blobs; write updated blobs to a new version dir; repoint the
-        manifest.  op="delete" is the cuckoo epoch-aging path (sound
-        only when the cohort leaves the exact seen table in the same
-        move — see CuckooFilter's deletion contract in dedup.py).
-        Saturated shards stay pass-through: no new blob is written and
-        the manifest keeps the old (saturated) row.
+        """Insert `delta`'s urls: cogroup their hashes with ONLY the
+        touched shards' blobs; write updated blobs to a new version
+        dir; repoint the manifest.
 
-        meta_updates (attrs like merged_upto/cohorts/n_added) are
-        applied in the SAME atomic meta.json write that repoints the
-        payloads: a crash can never leave a bank whose blobs contain a
-        cohort its lineage does not claim (resume would replay the
-        delta — double-inserting, or double-DELETING on the aging path,
-        which would break the no-false-negative contract)."""
-        if op == "delete" and self.kind == "bloom":
-            raise ValueError("bloom banks cannot delete; use kind='cuckoo'")
+        meta_updates (attrs like merged_upto/n_added) are applied in
+        the SAME atomic meta.json write that repoints the payloads: a
+        crash can never leave a bank whose blobs contain a delta its
+        lineage does not claim, so a resume replays exactly the deltas
+        the bank is missing."""
         spark = delta.sparkSession
         # persisted: the touched-shard collect below and the cogroup
         # write both consume it — without the cache the delta would be
@@ -313,61 +280,26 @@ class StoredBank:
                 self.save()
             return
         bank_side = self.bank_df(spark, shards=touched)
-        kind, n_bits, n_hashes, psb = (
-            self.kind, self.n_bits, self.n_hashes, self.per_shard_buckets,
-        )
-        insert = op == "insert"
-        is_bloom = kind == "bloom"
+        n_bits, n_hashes = self.n_bits, self.n_hashes
 
         def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "shard": pd.Series([], dtype="int32"),
-                    "payload": pd.Series([], dtype=object),
-                    "saturated": pd.Series([], dtype=bool),
-                }
-            )
             if left.empty:
-                return empty
-            s = int(left["_s"].iloc[0])
-            sat = False
-            if right.empty:
-                if not insert:
-                    return empty  # delete from a shard with no blob: no-op
-                filt = (
-                    NumpyBloom(n_bits, n_hashes)
-                    if is_bloom
-                    else CuckooFilter(psb)
+                return pd.DataFrame(
+                    {
+                        "shard": pd.Series([], dtype="int32"),
+                        "payload": pd.Series([], dtype=object),
+                    }
                 )
-            else:
-                r = right.iloc[0]
-                if bool(r["saturated"]):
-                    return empty  # degraded shard stays pass-through
-                if is_bloom:
-                    filt = NumpyBloom(
-                        n_bits,
-                        n_hashes,
-                        np.frombuffer(r["payload"], np.uint64).copy(),
-                    )
-                else:
-                    filt = CuckooFilter(
-                        len(r["payload"]) // 8,  # 4 u16 slots per bucket
-                        np.frombuffer(r["payload"], np.uint16)
-                        .reshape(-1, 4)
-                        .copy(),
-                    )
-            h1 = left["_h1"].to_numpy(np.int64)
-            if is_bloom:
-                filt.add_hashes(h1, left["_h2"].to_numpy(np.int64))
-                payload = filt.bits.tobytes()
-            else:
-                if insert:
-                    sat = filt.add_hashes(h1) > 0
-                else:
-                    filt.delete_hashes(h1)
-                payload = filt.table.tobytes()
+            bits = (
+                None if right.empty
+                else np.frombuffer(right.iloc[0]["payload"], np.uint64).copy()
+            )
+            b = NumpyBloom(n_bits, n_hashes, bits)
+            b.add_hashes(
+                left["_h1"].to_numpy(np.int64), left["_h2"].to_numpy(np.int64)
+            )
             return pd.DataFrame(
-                {"shard": [s], "payload": [payload], "saturated": [sat]}
+                {"shard": [int(left["_s"].iloc[0])], "payload": [b.bits.tobytes()]}
             )
 
         v = self.next_version

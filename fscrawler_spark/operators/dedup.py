@@ -5,9 +5,8 @@ The reference keeps an in-memory processed-paths set + a DB point probe
 app/crawling_queue_consumer.py:111-115; app/database/data_manager.py:85-87).
 At 10^10 URLs neither fits one machine, so the contract is two tiers:
 
-  tier 1 — a sharded membership **prefilter** (bloom or cuckoo) tags
-           each candidate as definitely-unseen or possibly-seen.  The
-           bank lives in a parquet table of per-shard blobs
+  tier 1 — a sharded bloom **prefilter** tags each candidate as
+           definitely-unseen or possibly-seen.  The bank lives in a parquet table of per-shard blobs
            (operators/bankstore.StoredBank); the probe is a cogroup
            that ships each task only its own shard (cogroup_probe).
   tier 2 — exact **left_anti join** against the `seen` table for the
@@ -15,15 +14,17 @@ At 10^10 URLs neither fits one machine, so the contract is two tiers:
            pre-filter: its false positives fall through to the exact
            join and are resolved there, never dropped (SURVEY §7.4 —
            FP => candidate wrongly dropped is the failure mode this
-           two-tier split prevents).
+           two-tier split prevents).  A URL aged out of `seen` by a
+           re-crawl horizon is just such a stale positive until the
+           next bank rebuild drops it.
 
 The definitely-unseen majority skips the exact join entirely — the warm
 re-run speedup the reference reports (156x, README.md:111-115)
 becomes "anti-join input shrinks to the filter-positive fraction".
 
-This module holds the shard kernels (NumpyBloom, CuckooFilter), the
-routed probe plan and the exact tier; bankstore.py owns the bank's
-storage, build and incremental maintenance.
+This module holds the shard kernel (NumpyBloom), the routed probe
+plan and the exact tier; bankstore.py owns the bank's storage, build
+and incremental maintenance.
 """
 
 from __future__ import annotations
@@ -79,111 +80,6 @@ class NumpyBloom:
         return probe.all(axis=1)
 
 
-class CuckooFilter:
-    """Cuckoo filter over JVM-computed xxhash64 values: 16-bit
-    fingerprints, 4-slot buckets, partial-key cuckoo hashing
-    (b2 = b1 xor H(fp)).  Unlike the Bloom filter it supports DELETE —
-    the property that backs the wave loop's seen-horizon aging: when a
-    URL cohort (crawl epoch) crosses the re-crawl horizon it is evicted
-    from the filter by fingerprint.
-
-    Deletion contract (corrected in round 3): deleting a cohort from
-    the filter is ONLY sound if the same cohort simultaneously leaves
-    the exact `seen` table the anti-join probes (the wave loop's
-    seen_horizon_waves policy does exactly that — aged URLs become
-    re-crawlable, the standard crawl-epoch semantic).  Deleting from
-    the filter alone would create false negatives — a still-seen URL
-    probing "definitely unseen" and bypassing the exact join.  Deleting
-    inserted items is multiset-safe: every insert adds one fingerprint
-    copy, every delete removes one, so fingerprint-colliding retained
-    URLs keep their own copy.
-
-    Scale note: banks shard by pmod(h1, n_shards), each shard built
-    from its own partition's hashes (no cross-shard evictions) — see
-    bankstore.StoredBank.build / merge_delta.
-    """
-
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None):
-        self.n_buckets = int(n_buckets)
-        self.table = table if table is not None else np.zeros(
-            (self.n_buckets, 4), dtype=np.uint16
-        )
-
-    @classmethod
-    def sized_for(cls, n_items: int, load: float = 0.84) -> "CuckooFilter":
-        n_buckets = 1 << max(4, int(np.ceil(np.log2(max(n_items, 1) / (4 * load)))))
-        return cls(n_buckets)
-
-    def _fp(self, h1: np.ndarray) -> np.ndarray:
-        fp = ((h1.astype(np.uint64) >> np.uint64(40)) & np.uint64(0xFFFF)).astype(
-            np.uint16
-        )
-        fp[fp == 0] = 1  # 0 is the empty-slot sentinel
-        return fp
-
-    def _b1(self, h1: np.ndarray) -> np.ndarray:
-        return (h1.astype(np.uint64) % np.uint64(self.n_buckets)).astype(np.int64)
-
-    def _b2(self, b1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        mixed = fp.astype(np.uint64) * np.uint64(0x5BD1E995)
-        return ((b1.astype(np.uint64) ^ mixed) % np.uint64(self.n_buckets)).astype(
-            np.int64
-        )
-
-    def add_hashes(self, h1: np.ndarray, h2: np.ndarray | None = None) -> int:
-        """Insert; returns number of items dropped after eviction chains
-        exhaust (callers should size for <=0.84 load so this stays 0)."""
-        fps, b1s = self._fp(np.asarray(h1, np.int64)), self._b1(np.asarray(h1, np.int64))
-        dropped = 0
-        rng = np.random.Generator(np.random.PCG64(7))  # deterministic kicks
-        for fp, b in zip(fps, b1s):
-            cur_fp, cur_b = fp, b
-            placed = False
-            for _ in range(500):  # eviction chain cap
-                for bucket in (cur_b, self._b2(np.array([cur_b]), np.array([cur_fp]))[0]):
-                    empty = np.nonzero(self.table[bucket] == 0)[0]
-                    if empty.size:
-                        self.table[bucket, empty[0]] = cur_fp
-                        placed = True
-                        break
-                if placed:
-                    break
-                # kick a random resident from b2 and retry with it
-                victim_b = self._b2(np.array([cur_b]), np.array([cur_fp]))[0]
-                slot = int(rng.integers(0, 4))
-                cur_fp, self.table[victim_b, slot] = (
-                    self.table[victim_b, slot].copy(), cur_fp
-                )
-                cur_b = victim_b
-            if not placed:
-                dropped += 1
-        return dropped
-
-    def might_contain(self, h1: np.ndarray, h2: np.ndarray | None = None) -> np.ndarray:
-        h1 = np.asarray(h1, np.int64)
-        fp, b1 = self._fp(h1), self._b1(h1)
-        b2 = self._b2(b1, fp)
-        in1 = (self.table[b1] == fp[:, None]).any(axis=1)
-        in2 = (self.table[b2] == fp[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete_hashes(self, h1: np.ndarray) -> int:
-        """Remove one matching fingerprint per item (spill/aging path);
-        returns how many were found and removed."""
-        h1 = np.asarray(h1, np.int64)
-        fp, b1 = self._fp(h1), self._b1(h1)
-        b2 = self._b2(b1, fp)
-        removed = 0
-        for f, ba, bb in zip(fp, b1, b2):
-            for bucket in (ba, bb):
-                slots = np.nonzero(self.table[bucket] == f)[0]
-                if slots.size:
-                    self.table[bucket, slots[0]] = 0
-                    removed += 1
-                    break
-        return removed
-
-
 def _hash_cols(df: DataFrame, col: str) -> DataFrame:
     return df.select(
         F.xxhash64(F.col(col)).alias("_h1"), F.hash(F.col(col)).cast("long").alias("_h2")
@@ -194,18 +90,17 @@ def cogroup_probe(
     url_col: str,
     tables: DataFrame,
     *,
-    is_bloom: bool,
     n_shards: int,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
+    n_bits: int,
+    n_hashes: int,
 ) -> DataFrame:
     """The shard-routed probe plan: candidates are grouped by
     pmod(h1, n_shards) and COGROUPed with `tables` — a DataFrame of
-    (shard int, payload binary, saturated boolean) rows, one per
-    populated shard (StoredBank feeds it the bank-table scan).  Each
-    task receives exactly its shard's filter bytes, so the bank never
-    broadcasts and never transits the driver.  A saturated shard
-    answers True for every probe; a shard with no row answers False."""
+    (shard int, payload binary) bloom-bit rows, one per populated
+    shard (StoredBank feeds it the bank-table scan).  Each task
+    receives exactly its shard's filter bytes, so the bank never
+    broadcasts and never transits the driver.  A shard with no row
+    answers False."""
     base_cols = candidates.columns
     out_schema = T.StructType(
         list(candidates.schema.fields)
@@ -222,25 +117,17 @@ def cogroup_probe(
         if left.empty:  # table-side sentinel/orphan shard: no candidates
             out["_maybe_seen"] = pd.Series([], dtype=bool)
             return out
-        h1 = left["_h1"].to_numpy(np.int64)
         if right.empty:
             # no seen hash ever landed in this shard -> definitely unseen
             maybe = np.zeros(len(left), dtype=bool)
-        elif bool(right.iloc[0]["saturated"]):
-            maybe = np.ones(len(left), dtype=bool)  # degraded shard
-        elif is_bloom:
+        else:
             b = NumpyBloom(
                 n_bits, n_hashes,
                 np.frombuffer(right.iloc[0]["payload"], np.uint64).copy(),
             )
-            maybe = b.might_contain(h1, left["_h2"].to_numpy(np.int64))
-        else:
-            cf = CuckooFilter(
-                len(right.iloc[0]["payload"]) // 8,  # 4 u16 slots/bucket
-                np.frombuffer(right.iloc[0]["payload"], np.uint16)
-                .reshape(-1, 4).copy(),
+            maybe = b.might_contain(
+                left["_h1"].to_numpy(np.int64), left["_h2"].to_numpy(np.int64)
             )
-            maybe = cf.might_contain(h1)
         out["_maybe_seen"] = maybe
         return out
 
@@ -286,8 +173,7 @@ def anti_join_seen(
 ) -> DataFrame:
     """Rows of `candidates` whose url is NOT in `seen` — exact.
 
-    With a prefilter bank (`bloom`, a bankstore.StoredBank of either
-    kind), only filter-positive rows enter the anti-join; negatives are
+    With a prefilter bank (`bloom`, a bankstore.StoredBank), only filter-positive rows enter the anti-join; negatives are
     provably unseen and bypass it.
 
     flip_broadcast: resolve the exact membership via _flip_resolve

@@ -189,10 +189,10 @@ def resolve_redirect_chains(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 40,
 ) -> DataFrame:
     """Resolve HTTP-redirect chains to their terminal URL by pointer
-    doubling: (src, final_dst, hops) for every redirecting source.
+    doubling: (src, final_dst, hops, cycle) for every redirecting
+    source.
 
     The crawl-frontier step between fetch and dedup: a web crawl sees
     3xx chains (http → https → www → canonical) and must collapse every
@@ -204,9 +204,10 @@ def resolve_redirect_chains(
 
     ``edges`` must be a functional mapping — at most one out-edge per
     ``src`` (a URL redirects to exactly one place); duplicate sources
-    are collapsed deterministically to min(dst) first.  Chains must be
-    acyclic (real redirect loops are fetch errors, dropped upstream);
-    a cycle cannot converge and raises RuntimeError at ``max_rounds``.
+    are collapsed deterministically to min(dst) first.  A source whose
+    chain never terminates (it lies on a redirect loop or leads into
+    one) comes back flagged: ``cycle`` true, ``final_dst`` and ``hops``
+    null.  Every other row has ``cycle`` false.
 
     Algorithm: pointer jumping (the classic PRAM list-ranking step —
     f := f∘f each round), so a chain of length L resolves in ceil(log2
@@ -217,8 +218,14 @@ def resolve_redirect_chains(
     chains bounded by ~30 hops, that is 5 shuffle rounds over only the
     REDIRECTING rows (non-redirects never enter), each partitioned on
     the id key; localCheckpoint per round keeps the Catalyst plan flat
-    (same reasoning as connected_components above).  Convergence is the
-    exact join-match count reaching zero — every pointer is terminal.
+    (same reasoning as connected_components above).
+
+    Termination: a terminating chain visits each of the n collapsed
+    sources at most once, so it has at most n hops.  A non-terminating
+    one advances every round and doubles its hops, so it passes n
+    within ceil(log2(n+1)) rounds.  The loop stops once no row still
+    at or below n hops advances — every chain at or below the bound has
+    then converged, and exactly the rows past it never will.
     """
     cur = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("c"))
@@ -227,7 +234,8 @@ def resolve_redirect_chains(
         .select("s", "c", F.lit(1).cast("long").alias("hops"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    bound = F.lit(cur.count())
+    while True:
         rhs = cur.select(
             F.col("s").alias("rs"),
             F.col("c").alias("rc"),
@@ -243,20 +251,15 @@ def resolve_redirect_chains(
             )
             .localCheckpoint(eager=True)  # ONE execution of the round's join
         )
-        advanced = not step.where(F.col("adv")).isEmpty()
         cur = step.drop("adv")
-        if not advanced:
+        if step.where(F.col("adv") & (F.col("hops") <= bound)).isEmpty():
             break
-    else:
-        raise RuntimeError(
-            f"resolve_redirect_chains: no fixed point in {max_rounds} rounds "
-            "(cycle in the redirect graph, or chains longer than "
-            f"2^{max_rounds})"
-        )
+    cycle = F.col("hops") > bound
     return cur.select(
         F.col("s").alias(src),
-        F.col("c").alias("final_dst"),
-        F.col("hops"),
+        F.when(~cycle, F.col("c")).alias("final_dst"),
+        F.when(~cycle, F.col("hops")).alias("hops"),
+        cycle.alias("cycle"),
     )
 
 

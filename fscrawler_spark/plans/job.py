@@ -26,8 +26,8 @@ class CrawlJob:
         crawl_delay_tokens overrides per host.
     wave_cap — optional global scheduled-URL cap per wave (bounded
         queue maxsize analog, app/config/config.py:129-131).
-    use_bloom — two-tier seen-set probe: a stored prefilter bank in
-        front of the exact anti-join (operators/dedup.py,
+    use_bloom — two-tier seen-set probe: a stored bloom bank in front
+        of the exact anti-join (operators/dedup.py,
         operators/bankstore.py).
     respect_robots — apply robots deny prefixes before scheduling.
     """
@@ -57,10 +57,6 @@ class CrawlJob:
     notify_filters: tuple[FilterSpec, ...] = field(default_factory=tuple)
     invert: bool = False
     use_bloom: bool = False
-    # "bloom" | "cuckoo" — which membership pre-filter the stored bank
-    # holds when use_bloom is set (cuckoo supports deletion — the
-    # seen-horizon aging path; see operators/dedup.py)
-    seen_filter: str = "bloom"
     bloom_fpp: float = 0.01
     respect_robots: bool = True
     salt_buckets: int = 32
@@ -90,15 +86,11 @@ class CrawlJob:
     # any other value raises ValueError.
     prefilter_store: str = "table"
     # Re-crawl horizon: a URL seen in wave w blocks re-scheduling for
-    # the next seen_horizon_waves waves, then ages out of BOTH the
-    # exact seen table and the prefilter (cuckoo: incremental cohort
-    # delete; bloom: dropped at the next rebuild).  None = never
-    # re-crawl (reference semantics).
+    # the next seen_horizon_waves waves, then ages out of the exact
+    # seen table.  The bloom prefilter drops it at the next rebuild;
+    # until then its stale positive resolves in the exact tier.
+    # None = never re-crawl (reference semantics).
     seen_horizon_waves: int | None = None
-    # Load fraction of prefilter capacity above which expired cohorts
-    # are evicted from the cuckoo bank (aging is lazy: stale filter
-    # positives are safe — they just fall through to the exact join).
-    cuckoo_age_load: float = 0.7
     # Frontier checkpoint layout: non-compaction waves write only the
     # wave's discovered children (frontier_delta/wave=K — the consumed
     # rows are already recorded in the seen delta), and every

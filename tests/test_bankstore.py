@@ -11,7 +11,8 @@ home of the seen prefilter; the bank never transits the driver:
   into the parquet scan;
 * the driver never holds payload bytes (meta.json is ints only);
 * wave-loop e2e parity with the exact-only crawl + resume-reload (no
-  rebuild) + cohort aging.
+  rebuild), and a full build instead of a reload for a stored bank that
+  is not bloom.
 """
 
 from __future__ import annotations
@@ -35,13 +36,14 @@ def _urls(spark, lo, hi):
     )
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_stored_probe_two_tier_parity(spark, tmp_path, kind):
     seen = _urls(spark, 0, 600)
     cand = _urls(spark, 300, 900)
     bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind=kind, n_items=2400, n_shards=8
+        seen, "url", str(tmp_path / "bank"), n_items=2400, n_shards=8
     )
+    assert StoredBank.open(bank.path).kind == kind
     exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
     stored = {
         r["url"] for r in anti_join_seen(cand, seen, bloom=bank).collect()
@@ -64,7 +66,7 @@ def test_stored_bank_one_row_per_shard(spark, tmp_path):
     per-shard payload must be well under the bank total."""
     bank = StoredBank.build(
         _urls(spark, 0, 4000), "url", str(tmp_path / "bank"),
-        kind="bloom", n_items=8000, n_shards=8,
+        n_items=8000, n_shards=8,
     )
     rows = bank.bank_df(spark).collect()
     assert sorted(int(r["shard"]) for r in rows) == list(range(8))
@@ -75,7 +77,7 @@ def test_stored_bank_one_row_per_shard(spark, tmp_path):
 def test_stored_merge_touches_only_delta_shards(spark, tmp_path):
     seen = _urls(spark, 0, 500)
     bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind="bloom", n_items=4000, n_shards=8
+        seen, "url", str(tmp_path / "bank"), n_items=4000, n_shards=8
     )
     v0 = os.path.join(bank.path, "v0")
     v0_state = {
@@ -90,7 +92,7 @@ def test_stored_merge_touches_only_delta_shards(spark, tmp_path):
             F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("_s")
         ).distinct().collect()
     }
-    bank.merge_delta(delta, "url", "insert")
+    bank.merge_delta(delta, "url")
     v1 = os.path.join(bank.path, "v1")
     written = {
         int(r["shard"]) for r in spark.read.parquet(v1).select("shard").collect()
@@ -119,7 +121,7 @@ def test_stored_merge_touches_only_delta_shards(spark, tmp_path):
 def test_bank_df_pushes_shard_filter_into_scan(spark, tmp_path):
     bank = StoredBank.build(
         _urls(spark, 0, 400), "url", str(tmp_path / "bank"),
-        kind="bloom", n_items=1600, n_shards=8,
+        n_items=1600, n_shards=8,
     )
     one = bank.bank_df(spark, shards=[3])
     plan = one._jdf.queryExecution().executedPlan().toString()
@@ -131,7 +133,7 @@ def test_bank_df_pushes_shard_filter_into_scan(spark, tmp_path):
 def test_driver_holds_no_payload_bytes(spark, tmp_path):
     bank = StoredBank.build(
         _urls(spark, 0, 2000), "url", str(tmp_path / "bank"),
-        kind="cuckoo", n_items=8000, n_shards=8,
+        n_items=8000, n_shards=8,
     )
     # the handle object carries no payload
     for v in vars(bank).values():
@@ -148,14 +150,13 @@ def test_driver_holds_no_payload_bytes(spark, tmp_path):
 def test_auto_compaction_bounds_versions_and_keeps_parity(spark, tmp_path):
     seen = _urls(spark, 0, 300)
     bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind="bloom",
-        n_items=8000, n_shards=4,
+        seen, "url", str(tmp_path / "bank"), n_items=8000, n_shards=4,
     )
     bank.compact_span = 3
     total = seen
     for i in range(6):
         d = _urls(spark, 300 + i * 25, 325 + i * 25)
-        bank.merge_delta(d, "url", "insert")
+        bank.merge_delta(d, "url")
         total = total.unionByName(d)
     live = set(bank.shard_versions.values())
     assert len(live) <= 3
@@ -182,40 +183,6 @@ def test_auto_compaction_bounds_versions_and_keeps_parity(spark, tmp_path):
     assert stored2 == exact
 
 
-def test_stored_cuckoo_delete_ages_cohort(spark, tmp_path):
-    keep = _urls(spark, 0, 400)
-    cohort = _urls(spark, 400, 600)
-    bank = StoredBank.build(
-        keep.unionByName(cohort), "url", str(tmp_path / "bank"),
-        kind="cuckoo", n_items=4000, n_shards=8,
-    )
-    bank.merge_delta(cohort, "url", "delete")
-    # deletion contract: the cohort left the exact table in the same
-    # move — the two-tier result vs the post-aging seen table is exact
-    cand = _urls(spark, 300, 700)
-    exact = {r["url"] for r in anti_join_seen(cand, keep).collect()}
-    stored = {
-        r["url"] for r in anti_join_seen(cand, keep, bloom=bank).collect()
-    }
-    assert stored == exact
-    # and the filter really forgot most of the cohort (not pass-through)
-    tagged = bank.probe(cohort, "url")
-    forgotten = tagged.where(~F.col("_maybe_seen")).count()
-    assert forgotten > 0
-    # retained urls keep their fingerprints (multiset-safe delete)
-    still = bank.probe(keep, "url").where(~F.col("_maybe_seen")).count()
-    assert still == 0
-
-
-def test_bloom_delete_raises(spark, tmp_path):
-    bank = StoredBank.build(
-        _urls(spark, 0, 100), "url", str(tmp_path / "bank"),
-        kind="bloom", n_items=400, n_shards=4,
-    )
-    with pytest.raises(ValueError):
-        bank.merge_delta(_urls(spark, 0, 10), "url", "delete")
-
-
 # --------------------------------------------------------------------------
 # wave-loop e2e
 
@@ -227,7 +194,7 @@ def _order(res, spark):
     }
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_crawl_stored_bank_e2e_parity(
     spark, pages_df, robots_df, tiny, tmp_path, kind
 ):
@@ -238,13 +205,13 @@ def test_crawl_stored_bank_e2e_parity(
     )
     r_tab = run_crawl(
         spark, pages_df, tiny["seeds"],
-        CrawlJob(**base, use_bloom=True, seen_filter=kind),
+        CrawlJob(**base, use_bloom=True),
         robots=robots_df, checkpoint_dir=str(tmp_path / "tab"),
     )
     assert _order(r_exact, spark) == _order(r_tab, spark)
     # the bank table lives inside the checkpoint dir and was
     # incrementally maintained (one build + per-wave delta merges)
-    assert StoredBank.exists(str(tmp_path / "tab" / "prefilter"))
+    assert StoredBank.open(str(tmp_path / "tab" / "prefilter")).kind == kind
     probe_actions = [t.get("prefilter", {}).get("action") for t in r_tab.timings]
     assert probe_actions.count("full_build") == 1
     upd = [t["prefilter_update"] for t in r_tab.timings if "prefilter_update" in t]
@@ -310,31 +277,6 @@ def test_crawl_stored_bank_reload_replays_missed_delta(
     assert _order(r2, spark) == _order(r_full, spark)
 
 
-def test_crawl_stored_cuckoo_horizon_aging_parity(
-    spark, pages_df, robots_df, tiny, tmp_path
-):
-    base = dict(politeness_budget=4, max_waves=6, seen_horizon_waves=2)
-    r_exact = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, use_bloom=False),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "ex"),
-    )
-    r_tab = run_crawl(
-        spark, pages_df, tiny["seeds"],
-        CrawlJob(
-            **base, use_bloom=True, seen_filter="cuckoo",
-            prefilter_capacity_factor=40.0, cuckoo_age_load=0.01,
-        ),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "tab"),
-    )
-    assert _order(r_exact, spark) == _order(r_tab, spark)
-    evicted = [
-        w
-        for t in r_tab.timings
-        for w in t.get("prefilter_update", {}).get("evicted_cohorts", [])
-    ]
-    assert evicted, f"no cohort eviction recorded: {r_tab.timings}"
-
-
 def test_crawl_full10_regime_parity(
     spark, pages_df, robots_df, tiny, tmp_path
 ):
@@ -351,8 +293,7 @@ def test_crawl_full10_regime_parity(
     r_f10 = run_crawl(
         spark, pages_df, tiny["seeds"],
         CrawlJob(
-            **base, use_bloom=True, seen_filter="bloom",
-            seen_horizon_waves=4,
+            **base, use_bloom=True, seen_horizon_waves=4,
         ),
         robots=robots_df, checkpoint_dir=str(tmp_path / "f10"),
     )
@@ -365,37 +306,33 @@ def test_crawl_full10_regime_parity(
 
 
 def test_merge_delta_meta_updates_single_atomic_save(spark, tmp_path, monkeypatch):
-    """Crawl lineage (merged_upto/cohorts/n_added) must land in the
-    SAME meta.json write that repoints the payloads — a crash between
-    two separate saves would let a resume replay the delta (double-
-    insert; double-DELETE on the aging path would create cuckoo false
-    negatives).  merge_delta(meta_updates=...) does exactly one save,
-    and a reopened bank sees payloads and lineage together."""
+    """Crawl lineage (merged_upto/n_added) must land in the SAME
+    meta.json write that repoints the payloads — a crash between two
+    separate saves would leave a bank whose blobs hold a delta its
+    lineage does not claim.  merge_delta(meta_updates=...) does exactly
+    one save, and a reopened bank sees payloads and lineage together."""
     seen = _urls(spark, 0, 300)
     bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind="cuckoo",
-        n_items=4000, n_shards=4,
+        seen, "url", str(tmp_path / "bank"), n_items=4000, n_shards=4,
     )
     saves = []
     orig = StoredBank.save
 
     def spy(self):
-        saves.append((self.merged_upto, dict(self.cohorts), self.n_added))
+        saves.append((self.merged_upto, self.n_added))
         orig(self)
 
     monkeypatch.setattr(StoredBank, "save", spy)
     delta = _urls(spark, 300, 360)
     bank.merge_delta(
-        delta, "url", "insert",
-        meta_updates={"n_added": 360, "cohorts": {3: 60}, "merged_upto": 3},
+        delta, "url", meta_updates={"n_added": 360, "merged_upto": 3},
     )
     assert len(saves) == 1
-    assert saves[0] == (3, {3: 60}, 360)  # lineage inside THE save
+    assert saves[0] == (3, 360)  # lineage inside THE save
     monkeypatch.setattr(StoredBank, "save", orig)
 
     reopened = StoredBank.open(str(tmp_path / "bank"))
     assert reopened.merged_upto == 3
-    assert reopened.cohorts == {3: 60}
     assert reopened.n_added == 360
     # and the payload repoint is in the same meta: the delta's urls
     # now probe maybe-seen through the reopened handle
@@ -404,9 +341,33 @@ def test_merge_delta_meta_updates_single_atomic_save(spark, tmp_path, monkeypatc
 
     # an EMPTY delta still advances the lineage atomically
     empty = _urls(spark, 0, 0)
-    reopened.merge_delta(
-        empty, "url", "insert",
-        meta_updates={"merged_upto": 4, "cohorts": {3: 60, 4: 0}},
-    )
+    reopened.merge_delta(empty, "url", meta_updates={"merged_upto": 4})
     again = StoredBank.open(str(tmp_path / "bank"))
-    assert again.merged_upto == 4 and again.cohorts == {3: 60, 4: 0}
+    assert again.merged_upto == 4 and again.n_added == 360
+
+
+def test_crawl_resume_rebuilds_a_non_bloom_bank(
+    spark, pages_df, robots_df, tiny, tmp_path
+):
+    """A stored bank whose meta.json kind is not "bloom" (an older
+    build's filter) cannot be read as bloom bits without false
+    negatives: the resume treats it as absent and does the one full
+    build instead of reloading it."""
+    base = dict(politeness_budget=4, use_bloom=True)
+    ck = str(tmp_path / "ck")
+    run_crawl(
+        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=2),
+        robots=robots_df, checkpoint_dir=ck,
+    )
+    meta_path = os.path.join(ck, "prefilter", "meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    meta["kind"] = "legacy"
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    r2 = run_crawl(
+        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=3),
+        robots=robots_df, checkpoint_dir=ck, resume=True,
+    )
+    assert r2.timings[0]["prefilter"]["action"] == "full_build"
+    assert StoredBank.open(os.path.join(ck, "prefilter")).kind == "bloom"

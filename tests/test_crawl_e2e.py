@@ -128,11 +128,11 @@ def test_metrics_match_simulator(spark, engine, sim):
         assert eng.get((w, "scheduled_bytes"), 0) == m["scheduled_bytes"], w
 
 
-@pytest.mark.parametrize("flt", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("flt", ["bloom"])
 def test_bloom_mode_identical(spark, pages_df, robots_df, tiny, sim, tmp_path_factory, flt):
     """Two-tier prefilter+anti-join must change nothing observable (J2 —
-    the bloom/cuckoo is a pre-filter, never a decider)."""
-    job = CrawlJob(**{**JOB.__dict__, "use_bloom": True, "seen_filter": flt})
+    the bloom is a pre-filter, never a decider)."""
+    job = CrawlJob(**{**JOB.__dict__, "use_bloom": True})
     ckpt = str(tmp_path_factory.mktemp(f"ckpt_{flt}"))
     res = run_crawl(
         spark, pages_df, tiny["seeds"], job, robots=robots_df, checkpoint_dir=ckpt

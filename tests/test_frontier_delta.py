@@ -9,14 +9,18 @@ A snapshot every wave (frontier_compact_every=1, "full" below) is the
 reference layout.  These tests pin (a) crawl-output equivalence with
 it, (b) exact replay equivalence per wave, (c) resume from a
 non-compaction wave, (d) replay under seen_horizon_waves aging, and
-(e) the write-volume reduction itself."""
+(e) the write-volume reduction itself — and that every crawl, including
+one whose wave raises, leaves no persisted block behind."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
 from fscrawler_spark.filters import DepthFilter, ExtensionFilter
 from fscrawler_spark.plans.job import CrawlJob
+from fscrawler_spark.plans.storage import CheckpointStore
 from fscrawler_spark.plans.wave_loop import (
     reconstruct_frontier,
     run_crawl,
@@ -173,3 +177,28 @@ def test_delta_mode_replay_under_seen_horizon_aging(
         checkpoint_dir=part_dir, resume=True,
     )
     assert _crawl_state(spark, resumed) == _crawl_state(spark, full)
+
+
+def test_raising_wave_releases_every_checkpoint(
+    spark, pages_df, robots_df, tiny, tmp_path, monkeypatch
+):
+    """A wave that raises frees what the crawl holds at that moment —
+    the pages-metadata and robots-rules caches, wave 0's frontier
+    checkpoint (JOB_DELTA: wave 0 is not a compaction) and wave 1's
+    four checkpoints — instead of leaving them to the context
+    cleaner."""
+    commit = CheckpointStore.commit_wave
+
+    def failing_commit(self, wave, *args, **kwargs):
+        if wave == 1:
+            raise RuntimeError("commit failed")
+        return commit(self, wave, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointStore, "commit_wave", failing_commit)
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        run_crawl(
+            spark, pages_df, tiny["seeds"], JOB_DELTA, robots=robots_df,
+            checkpoint_dir=str(tmp_path / "ck"),
+        )
+    assert _persisted(spark) - before == set()

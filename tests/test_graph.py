@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from fscrawler_spark.operators.graph import connected_components, dedup_clusters
@@ -191,13 +190,13 @@ def _resolve_py(edges):
     return out
 
 
-def _resolve_spark(spark, edges, **kw):
+def _resolve_spark(spark, edges):
     from fscrawler_spark.operators.graph import resolve_redirect_chains
 
     df = spark.createDataFrame(edges, "src long, dst long")
     return {
         r["src"]: (r["final_dst"], r["hops"])
-        for r in resolve_redirect_chains(df, "src", "dst", **kw).collect()
+        for r in resolve_redirect_chains(df, "src", "dst").collect()
     }
 
 
@@ -230,7 +229,24 @@ def test_redirects_duplicate_src_collapses_to_min_dst(spark):
     assert got[3] == (0, 1)
 
 
-def test_redirects_cycle_raises(spark):
-    edges = [(1, 2), (2, 3), (3, 1)]
-    with pytest.raises(RuntimeError, match="no fixed point"):
-        _resolve_spark(spark, edges, max_rounds=6)
+def test_redirects_cycles_flagged_acyclic_rows_exact(spark):
+    """A redirect loop ends as flagged rows, not an abort: sources on
+    the 3-cycle 1->2->3->1 and on the tails 5->4->1 and 50->3 into it
+    get cycle=true with null final_dst/hops; every acyclic chain
+    (19 hops long, close to the 27-source bound) resolves exactly as
+    the scalar walk does."""
+    from fscrawler_spark.operators.graph import resolve_redirect_chains
+
+    looping = [(1, 2), (2, 3), (3, 1), (4, 1), (5, 4), (50, 3)]
+    acyclic = [(i, i - 1) for i in range(11, 30)] + [(40, 41), (42, 41)]
+    df = spark.createDataFrame(looping + acyclic, "src long, dst long")
+    rows = {
+        r["src"]: (r["final_dst"], r["hops"], r["cycle"])
+        for r in resolve_redirect_chains(df, "src", "dst").collect()
+    }
+    assert {s: v for s, v in rows.items() if v[2]} == {
+        s: (None, None, True) for s, _ in looping
+    }
+    assert {
+        s: (fd, h) for s, (fd, h, c) in rows.items() if not c
+    } == _resolve_py(acyclic)

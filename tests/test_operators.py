@@ -130,8 +130,7 @@ def test_sharded_bloom_build_no_false_negatives(spark, tmp_path):
         [(f"http://s{i % 9}.example/p{i}",) for i in range(8000)], "url string"
     )
     bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"),
-        kind="bloom", n_items=8000, fpp=0.01, n_shards=8,
+        seen, "url", str(tmp_path / "bank"), n_items=8000, fpp=0.01, n_shards=8,
     )
     assert bank.n_shards == 8 and len(bank.shard_versions) == 8
     assert _maybe_seen_share(bank, seen) == 1.0, "sharded bloom false negative"
@@ -249,68 +248,6 @@ def test_results_to_json(spark):
     df = spark.createDataFrame([("u1", 3)], "url string, rating int")
     out = results_to_json(df, ["url", "rating"]).collect()[0]["json"]
     assert json.loads(out) == {"url": "u1", "rating": 3}
-
-
-def test_cuckoo_filter_membership_and_delete():
-    from fscrawler_spark.operators.dedup import CuckooFilter
-
-    rng = np.random.default_rng(3)
-    items = rng.integers(-(2**62), 2**62, 20000)
-    cf = CuckooFilter.sized_for(20000)
-    assert cf.add_hashes(items) == 0  # sized for the load: nothing dropped
-    assert cf.might_contain(items).all()  # zero false negatives
-    fresh = rng.integers(-(2**62), 2**62, 50000)
-    assert cf.might_contain(fresh).mean() < 0.02  # 16-bit fp -> low fpp
-    # deletion (the spill/aging primitive blooms lack)
-    victims = items[:5000]
-    assert cf.delete_hashes(victims) == 5000
-    assert cf.might_contain(items[5000:]).all()  # survivors unaffected
-    assert cf.might_contain(victims).mean() < 0.05  # victims mostly gone
-
-
-def test_anti_join_with_cuckoo_equals_exact(spark, tmp_path):
-    cand = spark.createDataFrame([(f"http://h/{i}",) for i in range(500)], "url string")
-    seen = spark.createDataFrame([(f"http://h/{i}",) for i in range(0, 500, 3)], "url string")
-    exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
-    cf = StoredBank.build(seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=200)
-    two_tier = {r["url"] for r in anti_join_seen(cand, seen, bloom=cf).collect()}
-    assert two_tier == exact
-
-
-def test_sharded_cuckoo_build_no_false_negatives(spark, tmp_path):
-    """Distributed sharded build (r01: the old build collected every
-    hash to the driver): every seen url must probe maybe-seen in the
-    sharded bank regardless of which executor built its shard."""
-    seen = spark.createDataFrame(
-        [(f"http://s{i % 7}.example/p{i}",) for i in range(5000)], "url string"
-    )
-    cf = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=5000, n_shards=8
-    )
-    assert cf.n_shards == 8 and len(cf.shard_versions) == 8
-    assert cf.bank_df(spark).where("saturated").count() == 0
-    assert _maybe_seen_share(cf, seen) == 1.0, "sharded build produced a false negative"
-    # unseen urls mostly negative (the pre-filter actually filters)
-    assert _maybe_seen_share(cf, _fresh_urls(spark, 20000)) < 0.05
-
-
-def test_sharded_cuckoo_saturation_degrades_safely(spark, tmp_path):
-    """A shard whose eviction chains exhaust (dropped items) must flip
-    to pass-through True — never claim 'definitely unseen' for an item
-    it may have dropped (r01 advisory: the dropped count was ignored)."""
-    seen = spark.createDataFrame(
-        [(f"http://h/{i}",) for i in range(3000)], "url string"
-    )
-    # lie about n_items so the one shard is sized for ~64 items but holds ~3000
-    cf = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), kind="cuckoo", n_items=1, n_shards=1
-    )
-    (row,) = cf.bank_df(spark).select("saturated").collect()
-    assert row["saturated"], "undersized filter must report saturation"
-    assert _maybe_seen_share(cf, seen) == 1.0
-    assert _maybe_seen_share(cf, _fresh_urls(spark, 1000)) == 1.0, (
-        "saturated shard must answer True for everything"
-    )
 
 
 def test_anchor_text_rollup_reference(spark):
