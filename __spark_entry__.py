@@ -4464,7 +4464,7 @@ def oracle_sql() -> dict[str, str]:
             j AS (SELECT toks.grp, toks.n_docs, toks.tok_sum,
                          tgt.target_share_e4::BIGINT AS target_share_e4,
                          sum(toks.tok_sum) OVER ()::BIGINT AS total
-                  FROM toks JOIN tgt USING (grp))
+                  FROM toks LEFT JOIN tgt USING (grp))
             SELECT grp AS lang, n_docs, tok_sum, target_share_e4,
                    (target_share_e4 * total * 100 // tok_sum)::BIGINT
                      AS weight_e6,

@@ -94,8 +94,6 @@ def cmd_crawl(args: argparse.Namespace) -> None:
         use_bloom=_flag_over_config(cfg, "use_bloom", args.bloom, False),
         bloom_fpp=cfg.get("bloom_fpp", 0.01),
         respect_robots=cfg.get("respect_robots", True),
-        salt_buckets=cfg.get("salt_buckets", 32),
-        small_wave_threshold=cfg.get("small_wave_threshold", 100_000),
         broadcast_wave_threshold=cfg.get("broadcast_wave_threshold", 2_000_000),
         frontier_compact_every=cfg.get("frontier_compact_every", 8),
     )

@@ -115,11 +115,12 @@ def mixture_weights(
     weights).
 
     ``targets_e4`` maps each group to its target share in 1e-4 units
-    (shares should sum to 10^4).  Output per group: n_docs, tok_sum,
-    target_share_e4, ``weight_e6`` = share_e4 * total_tokens * 100
-    DIV tok_sum (1e6 == keep as-is; >1e6 upsample/epochs; <1e6
-    downsample), and ``resampled_tok`` = tok_sum * weight_e6 DIV 1e6,
-    whose sum re-derives the target mass — all int64, engine-exact
+    (shares should sum to 10^4; an unlisted group keeps its row and its
+    tokens in the total, with null target columns).  Output per group:
+    n_docs, tok_sum, target_share_e4, ``weight_e6`` = share_e4 *
+    total_tokens * 100 DIV tok_sum (1e6 == keep as-is; >1e6 upsample/
+    epochs; <1e6 downsample), and ``resampled_tok`` = tok_sum *
+    weight_e6 DIV 1e6, whose sum re-derives the target mass — all int64, engine-exact
     (q79's oracle).  int64 headroom: total_tokens < 9.2e12 at the 1e6
     weight grid; pre-scale tok_sum to kilotokens above that.
 
@@ -142,7 +143,7 @@ def mixture_weights(
     wall = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    j = toks.join(F.broadcast(tgt), "grp").withColumn(
+    j = toks.join(F.broadcast(tgt), "grp", "left").withColumn(
         "_total", F.sum("tok_sum").over(wall)
     )
     return j.select(

@@ -30,6 +30,9 @@ class CrawlJob:
         of the exact anti-join (operators/dedup.py,
         operators/bankstore.py).
     respect_robots — apply robots deny prefixes before scheduling.
+
+    Physical-plan constants that change no output (SALT_BUCKETS,
+    SMALL_WAVE_ROWS, FLIP_SEEN_FACTOR) live in plans/wave_loop.py.
     """
 
     politeness_budget: int = 8
@@ -59,12 +62,6 @@ class CrawlJob:
     use_bloom: bool = False
     bloom_fpp: float = 0.01
     respect_robots: bool = True
-    salt_buckets: int = 32
-    # Waves whose pending frontier is below this row count take the
-    # small-wave physical path (no salt phase, single-window rank) —
-    # identical results, fewer shuffles.  At cluster scale leave as is;
-    # the crossover only matters for job-overhead-dominated waves.
-    small_wave_threshold: int = 100_000
     # Broadcast the scheduled set into the fetch join (and the rank map
     # back over the extracted cache) only when the wave's SCHEDULED set
     # is below this row count; above it the broadcast would be a hard

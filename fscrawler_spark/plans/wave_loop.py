@@ -30,9 +30,11 @@ from __future__ import annotations
 import os
 import tempfile
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fscrawler_spark.filters.builders import and_all, or_any
@@ -73,6 +75,13 @@ _FRONTIER_COLS = ["url", "host", "depth", "priority", "seed_id"]
 # seen:frontier ~ 2:1).  The frontier must also be under
 # CrawlJob.broadcast_wave_threshold for the flip to be safe.
 FLIP_SEEN_FACTOR = 4.0
+# Salt buckets of the politeness window's phase 1 on large waves.
+SALT_BUCKETS = 32
+# Waves whose pending frontier is below this row count take the
+# small-wave physical path (no salt phase, single-window rank) —
+# identical results, fewer shuffles.  The crossover only matters for
+# job-overhead-dominated waves.
+SMALL_WAVE_ROWS = 100_000
 
 
 @dataclass
@@ -80,25 +89,24 @@ class CrawlResult:
     store: CheckpointStore
     waves_run: int
     stats: dict = field(default_factory=dict)
-    # One dict per wave; wall seconds unless noted.  Phase timers, each
+    # One dict per wave; wall seconds unless noted.  Each phase key is
+    # one _phase interval (its Spark jobs are labelled "wave N / <key>"),
     # covering both building that phase's plan and materializing it:
-    #   admit          wave start -> `stat` checkpoint (bank open, seen
-    #                  anti-join, stat join, skip/robots classify)
-    #   schedule       -> `ranked` checkpoint (waterfill, politeness)
-    #   fetch_extract  -> `pre_rank` checkpoint (fetch join + UDFs)
-    #   rank           -> `extracted` checkpoint (wave_rank join-back)
-    # then
-    #   plan_build       wave start -> first materialization (the
-    #                    `stat` checkpoint); includes the bank open
+    #   admit            wave start -> `stat` checkpoint (bank open, seen
+    #                    anti-join, stat join, robots decision)
+    #   schedule         -> `ranked` checkpoint (waterfill, politeness)
+    #   fetch_extract    -> `pre_rank` checkpoint (fetch join + UDFs)
+    #   rank             -> `extracted` checkpoint (wave_rank join-back)
     #   collect_metrics  the per-status counter collect
-    #   write_results / write_seen / write_frontier  per-table writes
     #   write_phase      the three concurrent writes together
-    #   frontier_kind    "full" | "delta" (a string, not seconds)
     #   lineage_commit   lineage collect + metrics/marker commit
     #   reload_state     next frontier + seen view, checkpoint release
+    # and
+    #   write_results / write_seen / write_frontier  per-table writes
+    #   frontier_kind    "full" | "delta" (a string, not seconds)
     #   prefilter        bank open/reuse record {action, rows_hashed}
     #   prefilter_update bank maintenance record {action, rows_hashed,
-    #                    secs}
+    #                    secs} (its secs: the upkeep phase)
     #   wave             the wave number
     #   wall             wave start -> end of the wave's bookkeeping
     timings: list[dict] = field(default_factory=list)
@@ -119,13 +127,6 @@ def _release(checkpointed: DataFrame | None) -> None:
     not a cached relation, so the leaf's RDD is unpersisted instead."""
     if checkpointed is not None:
         checkpointed._jdf.logicalPlan().rdd().unpersist(False)
-
-
-def _lap(timings: dict, phase: str, since: float) -> float:
-    """Record `phase` as the wall seconds since `since`; return now."""
-    now = time.time()
-    timings[phase] = round(now - since, 3)
-    return now
 
 
 def seeds_to_frontier(spark: SparkSession, seed_rows: list[dict]) -> DataFrame:
@@ -212,8 +213,14 @@ def _committed_seen(
 ) -> DataFrame | None:
     """The seen-set view wave `wave_now`'s anti-join uses: committed
     per-wave deltas (restricted to waves <= upto when replaying
-    history) + the warm-start seen_init as a wave=-1 cohort, with
-    cohorts older than seen_horizon_waves aged out."""
+    history) + the warm-start seen_init as a wave=-1 cohort.
+
+    With a horizon k (seen_horizon_waves), only the last k cohorts block
+    re-scheduling (a URL seen in wave w is retained while
+    w >= wave_now - k): older URLs age out of the exact table and become
+    re-crawlable.  The bloom prefilter keeps them until its next
+    rebuild; meanwhile they are stale positives, which the exact tier
+    (this view) resolves as unseen."""
     committed = store.read_seen(spark, upto=upto)
     if committed is not None and horizon is not None:
         committed = committed.where(F.col("wave") >= F.lit(wave_now - horizon))
@@ -346,6 +353,436 @@ def _maintain_bank(
     return {"action": "delta_merge", "rows_hashed": delta_n}
 
 
+@dataclass(frozen=True)
+class _Crawl:
+    """What stays fixed for one run_crawl call."""
+
+    spark: SparkSession
+    store: CheckpointStore
+    job: CrawlJob
+    pages: DataFrame
+    pages_meta: DataFrame
+    rules_arr: DataFrame | None
+    host_budgets: DataFrame | None
+    seed_dim: DataFrame | None
+    seen_init: DataFrame | None
+    skip_pred: Column
+    notify_pred: Column
+
+
+@dataclass
+class WaveState:
+    """What one wave hands the next."""
+
+    frontier: DataFrame | None = None
+    # the frontier when it is a localCheckpoint (not a committed snapshot
+    # or the seed list); released once the next frontier exists
+    frontier_ckpt: DataFrame | None = None
+    frontier_n: int = 0
+    seen: DataFrame | None = None  # the anti-join's seen view, if any
+    # rows per seen cohort (its wave; seen_init is -1): the in-horizon
+    # sum sizes the bank and gates the flip, so aged-out cohorts stop
+    # counting (r03 advisory)
+    seen_cohorts: dict[int, int] = field(default_factory=dict)
+    # the prefilter bank: opened or built on the first filtered wave,
+    # then fed per-wave seen deltas; None after a capacity resize, so the
+    # next wave does a full build
+    bank: StoredBank | None = None
+    carry: int = 0  # global-budget carryover credit (reset on resume)
+    # this wave's materialization points (`stat`, `ranked`, `pre_rank`,
+    # `extracted`); released after commit_wave
+    ckpts: list[DataFrame] = field(default_factory=list)
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        self.ckpts.append(df.localCheckpoint(eager=True))
+        return self.ckpts[-1]
+
+    def release(self) -> None:
+        while self.ckpts:
+            _release(self.ckpts.pop())
+
+    def seen_count(self, wave: int, horizon: int | None) -> int:
+        """Rows of wave `wave`'s seen view (_committed_seen's bound)."""
+        return sum(
+            n for w, n in self.seen_cohorts.items()
+            if horizon is None or w >= wave - horizon
+        )
+
+
+@contextmanager
+def _phase(timings: dict, wave: int, name: str):
+    """One wave phase: its wall seconds go to timings[name], the Spark
+    jobs it starts carry the description "wave N / name", and the
+    caller's description is restored on exit, also on a raise.  Yields
+    the phase's start time."""
+    sc = SparkContext.getOrCreate()
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"wave {wave} / {name}")
+    t0 = time.time()
+    try:
+        yield t0
+    finally:
+        timings[name] = round(time.time() - t0, 3)
+        sc.setJobDescription(outer)
+
+
+def _robots_rules(robots: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(rules_arr, host_budgets) from the robots table; the caller
+    unpersists rules_arr.  REP longest-match precedence: BOTH allow and
+    deny prefixes participate, the longest matching prefix decides, an
+    allow winning ties ('Disallow: /' + 'Allow: /public' keeps /public
+    crawlable — r01 advisory).  Crawl-delay rows are budget metadata,
+    not path rules.  Shape (r03 — the r02 gate cost ~10% of the whole
+    crawl): rules collapse ONCE into one array row per DENY-governed
+    host (allow-only hosts can never deny); each wave broadcast-joins
+    the array and decides per URL with higher-order functions — a pure
+    projection, no per-wave groupBy shuffle and no hit-set join-backs."""
+    path_rules = robots.where(F.col("crawl_delay_tokens").isNull()).select(
+        "host", "path_prefix", "allow"
+    )
+    governed = path_rules.where(~F.col("allow")).select("host").distinct()
+    rules_arr = (
+        path_rules.join(governed, "host", "left_semi")
+        .groupBy("host")
+        .agg(F.collect_list(F.struct("path_prefix", "allow")).alias("_rules"))
+    ).persist()
+    host_budgets = (
+        robots.where(F.col("allow") & F.col("crawl_delay_tokens").isNotNull())
+        .groupBy("host")
+        .agg(F.min("crawl_delay_tokens").alias("tokens"))
+    )
+    return rules_arr, host_budgets
+
+
+def _with_rep_decision(stat: DataFrame, rules_arr: DataFrame) -> DataFrame:
+    """Longest-match REP as a projection: `_rep_denied` iff the longest
+    matching deny prefix is strictly longer than the longest matching
+    allow prefix (tie -> allow; no matching deny or no rules -> allow).
+    `_path` is computed once as a column BEFORE the lambdas — Catalyst
+    does no CSE inside higher-order-function lambdas, so inlining the
+    regex would re-run it per rule element."""
+
+    def longest(want_allow: bool):
+        return F.array_max(
+            F.transform(
+                F.filter(
+                    F.col("_rules"),
+                    lambda r: (r["allow"] == F.lit(want_allow))
+                    & F.col("_path").startswith(r["path_prefix"]),
+                ),
+                lambda r: F.length(r["path_prefix"]),
+            )
+        )
+
+    return (
+        stat.join(F.broadcast(rules_arr), "host", "left")
+        .withColumn("_path", url_path(F.col("url")))
+        .withColumn(
+            "_rep_denied",
+            F.coalesce(
+                longest(False) > F.coalesce(longest(True), F.lit(-1)), F.lit(False)
+            ),
+        )
+        .drop("_rules", "_path")
+    )
+
+
+def _start(c: _Crawl, st: WaveState, seed_rows: list[dict], resume: bool) -> int:
+    """Load the first wave's frontier, seen view and seen cohorts into
+    `st` (fresh, or after the last commit marker); return that wave.
+    One groupBy collect counts every cohort of the seen view."""
+    spark, store, job = c.spark, c.store, c.job
+    start_wave = 0
+    if resume and store.last_wave() is not None:
+        lw = store.last_wave()
+        start_wave = lw + 1
+        if store.has_full_frontier(lw):
+            st.frontier = store.read_frontier(spark, lw)
+        else:
+            # the last wave wasn't a compaction:
+            # replay (last snapshot + children deltas + seen anti-joins)
+            st.frontier = st.frontier_ckpt = reconstruct_frontier(
+                spark, store, lw, seeds_to_frontier(spark, seed_rows),
+                horizon=job.seen_horizon_waves, seen_init=c.seen_init,
+            ).localCheckpoint(eager=True)
+        st.frontier_n = st.frontier.count()  # parquet-footer count, cheap
+    else:
+        st.frontier = seeds_to_frontier(spark, seed_rows)
+        st.frontier_n = len(accept_seeds(seed_rows))
+    st.seen = _committed_seen(spark, store, start_wave, job.seen_horizon_waves, c.seen_init)
+    if st.seen is not None:
+        st.seen_cohorts = {
+            r["wave"]: r["count"] for r in st.seen.groupBy("wave").count().collect()
+        }
+    return start_wave
+
+
+def _admit(
+    c: _Crawl, st: WaveState, wave: int, t: dict, reload: bool
+) -> tuple[DataFrame, ...]:
+    """Seen anti-join (J2; two-tier with the bank) + stat join + the
+    robots decision, checkpointed as `stat`; returns (missing, skipped,
+    robots_denied, authorized), pure filters over that leaf.  A
+    skip-filter deny prunes the subtree; robots decide among the rows
+    the filters pass.  The REP decision is baked in BEFORE the
+    checkpoint, so the rules join + longest-match lambdas run exactly
+    once per row.  (r02's hit-set shape — broadcast joins + groupBy(url)
+    + semi/anti join-backs, re-executed per consumer — was re-measured
+    as the whole of round 2's crawl regression.)"""
+    job = c.job
+    new = st.frontier.select(*_FRONTIER_COLS)
+    if st.seen is not None:
+        seen_count = st.seen_count(wave, job.seen_horizon_waves)
+        if job.use_bloom and st.bank is None:
+            st.bank, t["prefilter"] = _open_bank(
+                c.spark, c.store, job, wave, reload, st.seen, seen_count
+            )
+        elif job.use_bloom:
+            t["prefilter"] = {"action": "reuse", "rows_hashed": 0}
+        # Exact-resolution strategy: when the pending frontier is
+        # broadcast-bounded AND the seen table dwarfs it
+        # (FLIP_SEEN_FACTOR), flip the anti-join so the seen table is
+        # scanned but NEVER shuffled (at 10^10 seen URLs the plain
+        # left_anti re-shuffles all of seen every wave — Spark cannot
+        # broadcast-build the left side of an anti).  At comparable
+        # sizes the plain SMJ is cheaper than two per-wave broadcasts,
+        # so the gate keeps it.
+        new = anti_join_seen(
+            new, st.seen, "url", st.bank,
+            flip_broadcast=(
+                st.frontier_n <= job.broadcast_wave_threshold
+                and seen_count >= FLIP_SEEN_FACTOR * max(st.frontier_n, 1)
+            ),
+        )
+    stat = _stat_join(new, c.pages_meta)
+    if c.rules_arr is None:
+        # a literal after the checkpoint: the robots-denied branches
+        # are empty relations Catalyst prunes from every plan
+        stat = st.checkpoint(stat).withColumn("_rep_denied", F.lit(False))
+    else:
+        stat = st.checkpoint(_with_rep_decision(stat, c.rules_arr))
+    keep = F.coalesce(c.skip_pred, F.lit(False))
+    present = stat.where(~F.col("is_missing")).drop("is_missing")
+    passed = present.where(keep)
+    return (
+        stat.where(F.col("is_missing")),
+        present.where(~keep).drop("_rep_denied"),
+        passed.where(F.col("_rep_denied")).drop("_rep_denied"),
+        passed.where(~F.col("_rep_denied")).drop("_rep_denied"),
+    )
+
+
+def _schedule(
+    c: _Crawl, st: WaveState, authorized: DataFrame, small: bool
+) -> tuple[DataFrame, int | None]:
+    """Politeness window, checkpointed as `ranked`; returns it with the
+    wave's effective global budget (None when off).  The optional
+    global tier water-fills ONE wave capacity across hosts (max-min
+    fair, operators/politeness.py) into per-host budgets, demand capped
+    first at each host's politeness/crawl-delay budget so no allocation
+    is unspendable; the demand rollup re-reads the checkpointed `stat`
+    leaf.  Small waves skip the salt phase (same results, fewer jobs)."""
+    job = c.job
+    budgets, gwb_eff = c.host_budgets, None
+    if job.global_wave_budget is not None:
+        from fscrawler_spark.operators.politeness import waterfill_budget
+
+        gwb_eff = job.global_wave_budget + st.carry
+        dem = authorized.groupBy("host").agg(F.count("*").cast("long").alias("_n"))
+        cap = F.lit(job.politeness_budget).cast("long")
+        if c.host_budgets is not None:
+            dem = dem.join(
+                F.broadcast(c.host_budgets.select("host", "tokens")), "host", "left"
+            )
+            cap = F.coalesce(F.col("tokens"), cap)
+        dem = dem.select("host", F.least(F.col("_n"), cap).alias("demand"))
+        budgets = waterfill_budget(dem, ["host"], "demand", gwb_eff).select(
+            "host", F.col("alloc").cast("int").alias("tokens")
+        )
+    ranked = st.checkpoint(politeness_take(
+        authorized, job.politeness_budget, budgets,
+        1 if small else SALT_BUCKETS, job.wave_cap,
+    ))
+    return ranked, gwb_eff
+
+
+def _fetch_extract(
+    c: _Crawl, st: WaveState, ranked: DataFrame
+) -> tuple[DataFrame, bool]:
+    """Fetch join + the processor chain (C4-C8), checkpointed as
+    `pre_rank` BEFORE ranking, so the html scan + UDFs run once per
+    wave; returns it with the broadcast decision.  The scheduled set
+    (<= hosts x budget) is broadcast so the pages scan is probed in
+    place, html never shuffled — but a broadcast is a HARD hint, so
+    resolve_can_broadcast bounds the SCHEDULED set (r02 advisory).
+    Above it a shuffled join exchanges the whole pages side, html
+    included, unless pages arrive hash-partitioned by url."""
+    can_broadcast = resolve_can_broadcast(
+        st.frontier_n, c.job.wave_cap, c.job.broadcast_wave_threshold,
+        lambda: ranked.where(F.col("scheduled")).count(),
+    )
+    scheduled = ranked.where(F.col("scheduled")).drop("scheduled", "host_rank")
+    fetched = fetch_join(c.pages, scheduled.drop("warc_ts", "size"), can_broadcast)
+    name = url_name(F.col("url"))
+    return st.checkpoint(
+        fetched.withColumn("size", F.length("html").cast("long"))
+        .withColumn("md5_hex", F.md5("html"))
+        .withColumn("xxhash", F.xxhash64("html"))
+        .withColumn("text", extract_text_udf(F.col("html")))
+        .withColumn("hrefs", extract_hrefs_udf(F.col("html")))
+        .withColumn("extension", url_extension(F.col("url")))
+        # C7: content-sniffed mime (magic bytes — only a 64-byte head
+        # enters Arrow), extension map as fallback
+        .withColumn(
+            "mime",
+            F.coalesce(
+                sniff_mime_udf(F.expr(f"substring(html, 1, {SNIFF_HEAD_BYTES})")),
+                mime_type(F.col("url")),
+            ),
+        )
+        .withColumn("keywords", keywords_udf(name))
+        .withColumn("rating", content_rating(name, F.col("url")))
+        .drop("html")  # the binary never crosses a shuffle
+    ), can_broadcast
+
+
+def _rank(
+    st: WaveState, pre_rank: DataFrame, wave: int, small: bool, can_broadcast: bool
+) -> DataFrame:
+    """Rank a SLIM projection and join it back, checkpointed as
+    `extracted`: text/hrefs never pass through the rank exchange, so
+    every consumer keeps the checkpoint's parallel partitioning.  The
+    rank map (<= hosts x budget slim rows) is broadcast under the same
+    decision as the fetch join."""
+    slim = wave_rank(
+        pre_rank.select("priority", "host", "url"), small=small
+    ).select("url", "rank_in_wave")
+    return st.checkpoint(
+        pre_rank.join(F.broadcast(slim) if can_broadcast else slim, "url")
+        .withColumn("wave", F.lit(wave))
+        .withColumn("n_links", F.size("hrefs"))
+    )
+
+
+def _commit(
+    c: _Crawl, st: WaveState, wave: int, t: dict, *, missing: DataFrame,
+    skipped: DataFrame, denied: DataFrame, ranked: DataFrame,
+    extracted: DataFrame, compact: bool, gwb_eff: int | None,
+) -> tuple[dict, DataFrame]:
+    """Results, seen delta and frontier written, counters collected,
+    then the commit marker.  Returns the wave's per-status stats and
+    the merged next frontier.  Every input reads checkpointed leaves:
+    the collects and the three concurrent writes each run only their
+    own operators on top, never the wave's upstream passes again."""
+    scheduled = ranked.where(F.col("scheduled"))
+    deferred = ranked.where(~F.col("scheduled")).select(*_FRONTIER_COLS)
+    results = extracted.where(
+        F.coalesce(c.notify_pred, F.lit(True))
+    ).withColumn("stage", F.lit("EXTRACTED"))
+    if c.seed_dim is None:
+        results = results.withColumn("target_table", F.lit(None).cast("string"))
+    else:
+        results = results.join(
+            F.broadcast(c.seed_dim.select("seed_id", "target_table")), "seed_id", "left"
+        )
+    results = results.select(
+        "url", "host", "depth", "wave", "rank_in_wave", "seed_id",
+        "warc_ts", "size", "md5_hex", "xxhash", "text", "lang",
+        "extension", "mime", "keywords", "rating", "n_links", "stage",
+        "target_table",
+    ).unionByName(
+        missing.select(
+            "url", "host", "depth", F.lit(wave).alias("wave"),
+            F.lit("ERROR").alias("stage"),
+        ),
+        allowMissingColumns=True,
+    )
+    # Non-compaction waves write only `children`: the consumed frontier
+    # rows are already recorded in the seen delta, so children are the
+    # wave's ONLY new frontier information — O(wave) write volume
+    # instead of O(|frontier|).
+    children = expand_from_hrefs(extracted.select("url", "hrefs", "depth", "seed_id"))
+    merged = _merge_frontier(children, deferred)
+    seen_delta = (
+        scheduled.select("url")
+        .unionByName(skipped.select("url"))
+        .unionByName(missing.select("url"))
+        .unionByName(denied.select("url"))
+        .distinct()
+        .withColumn("wave", F.lit(wave))
+    )
+
+    def tagged(df: DataFrame, status: str, size=F.col("size")) -> DataFrame:
+        return df.select(F.lit(status).alias("s"), size.alias("size"))
+
+    # One aggregation action yields every wave counter (A2 analog);
+    # 'fetched' duplicates 'scheduled' informationally — the metrics
+    # table carries it, the seen accounting skips it.
+    counts = (
+        tagged(scheduled, "scheduled")
+        .unionByName(tagged(extracted, "fetched"))
+        .unionByName(tagged(skipped, "skipped"))
+        .unionByName(tagged(missing, "missing"))
+        .unionByName(tagged(denied, "robots_denied"))
+        .unionByName(tagged(deferred, "deferred", F.lit(None).cast("long")))
+        .groupBy("s")
+        .agg(F.count("*").alias("n"), F.sum("size").alias("bytes"))
+    )
+    with _phase(t, wave, "collect_metrics"):
+        stats = {
+            r["s"]: {"n": r["n"], "bytes": r["bytes"] or 0} for r in counts.collect()
+        }
+    with _phase(t, wave, "write_phase"):
+        t.update(c.store.write_wave_data(
+            wave, results=results, seen_delta=seen_delta,
+            frontier=merged if compact else children,
+            frontier_kind="full" if compact else "delta",
+        ))
+    if gwb_eff is not None and c.job.global_budget_carryover:
+        # token-bucket credit: unspent capacity rolls forward, burst
+        # capped at one extra wave's budget
+        st.carry = min(
+            c.job.global_wave_budget,
+            max(0, gwb_eff - int(stats.get("scheduled", {}).get("n", 0))),
+        )
+    metrics_rows = [
+        (wave, f"{k}_{m}", int(v[m])) for k, v in stats.items() for m in ("n", "bytes")
+    ] or [(wave, "empty", 0)]
+    with _phase(t, wave, "lineage_commit"):
+        # per-partition lineage counters (north rule: checkpoints carry
+        # per-partition lineage) — one cheap agg over the extracted leaf
+        lineage_rows = [
+            (wave, int(r["pid"]), int(r["rows"]), int(r["bytes"] or 0))
+            for r in extracted.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("rows"), F.sum("size").alias("bytes"))
+            .collect()
+        ]
+        c.store.commit_wave(wave, metrics_rows, stats, lineage_rows)
+    return stats, merged
+
+
+def _reload(
+    c: _Crawl, st: WaveState, wave: int, compact: bool, merged: DataFrame
+) -> None:
+    """Next frontier + seen view, with frontier lineage truncated:
+    compaction waves re-read the committed snapshot (resume path ==
+    normal path); other waves localCheckpoint the merged frame (no second
+    full write) BEFORE the wave's checkpoints it reads are released.
+    Only then is the previous frontier released: commit_wave is past, so
+    nothing reads this wave's candidates again."""
+    if compact:
+        frontier = c.store.read_frontier(c.spark, wave)
+    else:
+        frontier = merged.localCheckpoint(eager=True)
+    _release(st.frontier_ckpt)
+    st.frontier, st.frontier_ckpt = frontier, None if compact else frontier
+    st.release()
+    st.frontier_n = frontier.count()  # footer / leaf count, cheap
+    st.seen = _committed_seen(
+        c.spark, c.store, wave + 1, c.job.seen_horizon_waves, c.seen_init
+    )
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -364,7 +801,11 @@ def run_crawl(
     speedup via the DB probe) becomes "every previously-examined URL
     drops at the first anti-join".
 
-    Each wave materializes at four points — `stat`, `ranked`,
+    Each wave runs the phases admit -> schedule -> fetch_extract ->
+    rank -> commit (collect_metrics, write_phase, lineage_commit) ->
+    reload_state, then bank upkeep (prefilter_update); each is timed
+    into CrawlResult.timings and labels its Spark jobs "wave N /
+    <phase>".  The wave materializes at four points — `stat`, `ranked`,
     `pre_rank`, `extracted` — with localCheckpoint(eager=True), so every
     later query of the wave plans over a one-node leaf instead of the
     nested DAG above it; non-compaction frontiers are checkpointed the
@@ -373,10 +814,7 @@ def run_crawl(
     it from the last commit marker (nothing of an uncommitted wave is
     ever read back).  All of them are released before this returns or
     raises."""
-    store = CheckpointStore(
-        checkpoint_dir or tempfile.mkdtemp(prefix="fsc_ckpt_")
-    )
-
+    store = CheckpointStore(checkpoint_dir or tempfile.mkdtemp(prefix="fsc_ckpt_"))
     # Page metadata view (no html) — Catalyst prunes the binary column out
     # of every pass except the fetch join.  `size` must still read html
     # (schema has no length column), so the metadata view is persisted
@@ -386,507 +824,61 @@ def run_crawl(
     pages_meta = pages.select(
         "url", "warc_ts", F.length("html").cast("long").alias("size")
     ).persist()
-    rules_arr = None
-    # the current frontier when it is a localCheckpoint (None when it
-    # is a committed snapshot or the seed list); released as soon as
-    # the next frontier exists
-    frontier_ckpt: DataFrame | None = None
-    # this wave's materialization points (`stat`, `ranked`, `pre_rank`,
-    # `extracted`); released after commit_wave
-    wave_ckpts: list[DataFrame] = []
-
-    def checkpoint(df: DataFrame) -> DataFrame:
-        wave_ckpts.append(df.localCheckpoint(eager=True))
-        return wave_ckpts[-1]
-
+    rules_arr = host_budgets = None
+    st = WaveState()
+    waves_run, all_timings = 0, []
     try:
-        host_budgets = None
         if robots is not None and job.respect_robots:
-            # REP longest-match precedence: BOTH allow and deny prefixes
-            # participate; per URL the longest matching prefix decides, an
-            # allow winning length ties ('Disallow: /' + 'Allow: /public'
-            # keeps /public crawlable — r01 advisory).  Crawl-delay carrier
-            # rows are budget metadata, not path rules.
-            #
-            # Shape (r03 — the r02 gate cost ~10% of the whole crawl): rules
-            # collapse ONCE, outside the loop, into one array row per
-            # DENY-governed host (allow-only hosts can never deny, so their
-            # rows carry no rules and decide instantly); each wave then
-            # broadcast-joins the array and decides per URL with
-            # higher-order functions — a pure projection, no per-wave
-            # groupBy shuffle and no hit-set join-backs.  At a 10^8-host
-            # rule table the broadcast would switch to a shuffled join on
-            # host, same plan shape otherwise.
-            path_rules = robots.where(F.col("crawl_delay_tokens").isNull()).select(
-                "host", "path_prefix", "allow"
-            )
-            governed = path_rules.where(~F.col("allow")).select("host").distinct()
-            rules_arr = (
-                path_rules.join(governed, "host", "left_semi")
-                .groupBy("host")
-                .agg(F.collect_list(F.struct("path_prefix", "allow")).alias("_rules"))
-            ).persist()
-            host_budgets = (
-                robots.where(F.col("allow") & F.col("crawl_delay_tokens").isNotNull())
-                .groupBy("host")
-                .agg(F.min("crawl_delay_tokens").alias("tokens"))
-            )
-
+            rules_arr, host_budgets = _robots_rules(robots)
         skip_pred = and_all(list(job.skip_filters))
         if job.invert:
             skip_pred = ~F.coalesce(skip_pred, F.lit(False))
-        notify_pred = or_any(list(job.notify_filters))
-
-        def _load_seen(wave_now: int) -> DataFrame | None:
-            """Committed seen-set plus the warm-start seen_init (if any).
-
-            With seen_horizon_waves=k set, only the last k cohorts block
-            re-scheduling (a URL seen in wave w is retained while
-            w >= wave_now - k): older URLs age out of the exact table and
-            become re-crawlable.  The bloom prefilter keeps them until its
-            next rebuild; meanwhile they are stale positives, which the
-            exact tier (this view) resolves as unseen.  The warm-start
-            seen_init ages as a wave=-1 cohort."""
-            return _committed_seen(
-                spark, store, wave_now, job.seen_horizon_waves, seen_init
-            )
-
-        start_wave = 0
-        seen_count = 0
-        if resume and store.last_wave() is not None:
-            lw = store.last_wave()
-            start_wave = lw + 1
-            if store.has_full_frontier(lw):
-                frontier = store.read_frontier(spark, lw)
-            else:
-                # the last wave wasn't a compaction:
-                # replay (last snapshot + children deltas + seen anti-joins)
-                frontier = reconstruct_frontier(
-                    spark, store, lw, seeds_to_frontier(spark, seed_rows),
-                    horizon=job.seen_horizon_waves, seen_init=seen_init,
-                ).localCheckpoint(eager=True)
-                frontier_ckpt = frontier
-            frontier_n = frontier.count()  # parquet-footer count, cheap
-            seen_df = _load_seen(start_wave)
-            seen_count = seen_df.count() if seen_df is not None else 0
-        else:
-            frontier = seeds_to_frontier(spark, seed_rows)
-            frontier_n = len(accept_seeds(seed_rows))
-            seen_df = _load_seen(start_wave)
-            seen_count = seen_df.count() if seen_df is not None else 0
-
-        # Under a re-crawl horizon, seen_count must TRACK the horizon-
-        # filtered view (r03 advisory: a monotone accumulator overstates
-        # the seen:frontier ratio once cohorts age out, engaging the flip
-        # and oversizing the bank).  Per-cohort counts reproduce it: the
-        # initial view count decomposes into committed-wave footer counts
-        # (+ seen_init as the wave=-1 cohort), later waves append theirs.
-        seen_wave_counts: dict[int, int] = {}
-        if job.seen_horizon_waves is not None:
-            lo = start_wave - job.seen_horizon_waves
-            seen_wave_counts = {
-                w: store.read_seen_delta(spark, w).count()
-                for w in store.committed_waves()
-                if w >= lo
-            }
-            if seen_init is not None and -1 >= lo:
-                seen_wave_counts[-1] = seen_init.count()
-
-        # Seen-prefilter bank: opened or built on the first filtered wave,
-        # then maintained incrementally from per-wave seen deltas; dropped
-        # (None) when a capacity resize needs the next wave's full build.
-        prefilter: StoredBank | None = None
-
-        waves_run = start_wave
-        all_timings: list[dict] = []
-
-        gwb_carry = 0  # carryover credit (driver state; reset on resume)
+        c = _Crawl(
+            spark, store, job, pages, pages_meta, rules_arr, host_budgets,
+            seed_dim, seen_init, skip_pred, or_any(list(job.notify_filters)),
+        )
+        waves_run = start_wave = _start(c, st, seed_rows, resume)
         for wave in range(start_wave, job.max_waves):
-            if frontier_n == 0:
+            if st.frontier_n == 0:
                 break
-            _wave_t0 = time.time()
-            phase_s: dict = {}  # phase timers (see CrawlResult.timings)
             waves_run = wave + 1
-            # Adaptive physical path: small pending frontiers skip the salt
-            # phase and use the single-window rank (same results, fewer jobs).
-            small = frontier_n < job.small_wave_threshold
-            salt_buckets = 1 if small else job.salt_buckets
-
-            queued = frontier.select(*_FRONTIER_COLS)
-
-            # --- seen anti-join (J2): two-tier when a pre-filter enabled -----
-            prefilter_probe_log: dict | None = None
-            if seen_df is not None:
-                if job.use_bloom and prefilter is None:
-                    prefilter, prefilter_probe_log = _open_bank(
-                        spark, store, job, wave, resume and wave == start_wave,
-                        seen_df, seen_count,
-                    )
-                elif job.use_bloom:
-                    prefilter_probe_log = {"action": "reuse", "rows_hashed": 0}
-                # Exact-resolution strategy: when the pending frontier is
-                # broadcast-bounded AND the seen table dwarfs it
-                # (FLIP_SEEN_FACTOR), flip the anti-join so the seen table
-                # is scanned but NEVER shuffled (at 10^10 seen URLs the
-                # plain left_anti re-shuffles all of seen every wave —
-                # Spark cannot broadcast-build the left side of an anti).
-                # At comparable sizes the plain SMJ is cheaper than two
-                # per-wave broadcasts, so the gate keeps it.
-                new = anti_join_seen(
-                    queued, seen_df, "url", prefilter,
-                    flip_broadcast=(
-                        frontier_n <= job.broadcast_wave_threshold
-                        and seen_count >= FLIP_SEEN_FACTOR * max(frontier_n, 1)
-                    ),
+            t: dict = {"wave": wave}  # see CrawlResult.timings
+            small = st.frontier_n < SMALL_WAVE_ROWS
+            with _phase(t, wave, "admit") as wave_t0:
+                missing, skipped, denied, authorized = _admit(
+                    c, st, wave, t, resume and wave == start_wave
                 )
-            else:
-                new = queued
-
-            # --- stat join + classification ----------------------------------
-            # checkpointed: consumed by missing/skipped/authorized branches,
-            # the seen delta and the metrics aggregate (one compute, many
-            # readers).  The REP decision is baked in as a boolean column
-            # BEFORE the checkpoint, so the rules join + longest-match
-            # lambdas run exactly once per row — every downstream branch is
-            # then a pure filter on a one-node leaf.  (r02's hit-set shape —
-            # broadcast joins + groupBy(url) + semi/anti join-backs,
-            # re-executed per consumer — was re-measured as the whole of
-            # round 2's crawl regression.)
-            stat_raw = _stat_join(new, pages_meta)
-            if rules_arr is not None:
-                # Longest-match REP as a projection: denied iff the longest
-                # matching deny prefix is strictly longer than the longest
-                # matching allow prefix (tie -> allow; no matching deny or
-                # no rules -> allow).  `_path` is computed once as a column
-                # BEFORE the lambdas — Catalyst does no CSE inside
-                # higher-order-function lambdas, so inlining the regex
-                # would re-run it per rule element.
-                def _longest(want_allow: bool):
-                    return F.array_max(
-                        F.transform(
-                            F.filter(
-                                F.col("_rules"),
-                                lambda r: (r["allow"] == F.lit(want_allow))
-                                & F.col("_path").startswith(r["path_prefix"]),
-                            ),
-                            lambda r: F.length(r["path_prefix"]),
-                        )
-                    )
-
-                stat_raw = (
-                    stat_raw.join(F.broadcast(rules_arr), "host", "left")
-                    .withColumn("_path", url_path(F.col("url")))
-                    .withColumn(
-                        "_rep_denied",
-                        F.coalesce(
-                            _longest(False) > F.coalesce(_longest(True), F.lit(-1)),
-                            F.lit(False),
-                        ),
-                    )
-                    .drop("_rules", "_path")
-                )
-            else:
-                stat_raw = stat_raw.withColumn("_rep_denied", F.lit(False))
-            # Driver-side lazy-DAG construction + any eager jobs before it
-            # (prefilter build) — everything between wave start and the
-            # first materialization.
-            _plan_build_s = round(time.time() - _wave_t0, 3)
-            stat = checkpoint(stat_raw)
-            t_phase = _lap(phase_s, "admit", _wave_t0)
-            missing = stat.where(F.col("is_missing"))
-            present = stat.where(~F.col("is_missing")).drop("is_missing")
-
-            skipped = present.where(~F.coalesce(skip_pred, F.lit(False))).drop(
-                "_rep_denied"
-            )
-            passed = present.where(F.coalesce(skip_pred, F.lit(False)))
-            robots_denied = None
-            if rules_arr is not None:
-                robots_denied = passed.where(F.col("_rep_denied")).drop("_rep_denied")
-            authorized = passed.where(~F.col("_rep_denied")).drop("_rep_denied")
-
-            # --- politeness window -------------------------------------------
-            # Optional global-budget tier: water-fill ONE wave capacity
-            # across hosts (max-min fair, operators/politeness.py) and feed
-            # the allocations to the per-host window as its budget dim.
-            # Demand is capped at each host's politeness/crawl-delay budget
-            # first, so waterfill never allocates tokens a host cannot
-            # spend.  The demand rollup re-reads the CHECKPOINTED `stat`
-            # frame (one leaf scan + map-side count per wave); the level
-            # search itself runs on distinct demand values only.
-            hb_wave = host_budgets
-            gwb_eff = None
-            if job.global_wave_budget is not None:
-                from fscrawler_spark.operators.politeness import waterfill_budget
-
-                gwb_eff = job.global_wave_budget + (
-                    gwb_carry if job.global_budget_carryover else 0
-                )
-                dem = authorized.groupBy("host").agg(
-                    F.count("*").cast("long").alias("_n")
-                )
-                if host_budgets is not None:
-                    dem = dem.join(
-                        F.broadcast(host_budgets.select("host", "tokens")),
-                        "host",
-                        "left",
-                    )
-                    cap = F.coalesce(
-                        F.col("tokens"), F.lit(job.politeness_budget)
-                    ).cast("long")
-                else:
-                    cap = F.lit(job.politeness_budget).cast("long")
-                dem = dem.select("host", F.least(F.col("_n"), cap).alias("demand"))
-                hb_wave = waterfill_budget(
-                    dem, ["host"], "demand", gwb_eff
-                ).select("host", F.col("alloc").cast("int").alias("tokens"))
-            ranked = checkpoint(politeness_take(
-                authorized,
-                job.politeness_budget,
-                hb_wave,
-                salt_buckets,
-                job.wave_cap,
-            ))
-            t_phase = _lap(phase_s, "schedule", t_phase)
-            scheduled = ranked.where(F.col("scheduled")).drop("scheduled", "host_rank")
-            deferred = ranked.where(~F.col("scheduled")).select(*_FRONTIER_COLS)
-
-            # --- fetch join + extraction (the only pass that reads html) -----
-            # The scheduled set is bounded by (hosts x budget) — typically far
-            # smaller than pages — broadcast it so the big pages scan is
-            # probed in place with no shuffle of the html bytes.  Broadcast
-            # is a HARD hint though: past the threshold it would OOM the
-            # driver.  The guard keys off the SCHEDULED set (r02 advisory):
-            # frontier_n bounds it cheaply; a tight wave_cap bounds it
-            # tighter; past both, one count over the checkpointed ranked
-            # frame decides exactly — so a huge frontier with a small
-            # budget keeps the fast broadcast probe.
-            # In the non-broadcast regime a shuffled join exchanges the
-            # ENTIRE pages side, html included, every wave, unless the
-            # caller passes pages already hash-partitioned by url (then
-            # only the slim side shuffles).
-            can_broadcast = resolve_can_broadcast(
-                frontier_n,
-                job.wave_cap,
-                job.broadcast_wave_threshold,
-                lambda: ranked.where(F.col("scheduled")).count(),
-            )
-            fetched = fetch_join(
-                pages, scheduled.drop("warc_ts", "size"), can_broadcast
-            )
-            name = url_name(F.col("url"))
-            extracted = (
-                fetched.withColumn("size", F.length("html").cast("long"))
-                .withColumn("md5_hex", F.md5("html"))
-                .withColumn("xxhash", F.xxhash64("html"))
-                .withColumn("text", extract_text_udf(F.col("html")))
-                .withColumn("hrefs", extract_hrefs_udf(F.col("html")))
-                .withColumn("extension", url_extension(F.col("url")))
-                # C7: content-sniffed mime (magic bytes — only a 64-byte
-                # head enters Arrow), extension map as fallback
-                .withColumn(
-                    "mime",
-                    F.coalesce(
-                        sniff_mime_udf(
-                            F.expr(f"substring(html, 1, {SNIFF_HEAD_BYTES})")
-                        ),
-                        mime_type(F.col("url")),
-                    ),
-                )
-                .withColumn("keywords", keywords_udf(name))
-                .withColumn("rating", content_rating(name, F.col("url")))
-                .drop("html")  # the binary never crosses a shuffle
-            )
-            # checkpointed BEFORE ranking: wave_rank's passes and the
-            # join-back both read the extracted set, and the html scan +
-            # UDFs must run exactly once per wave.
-            pre_rank = checkpoint(extracted)
-            t_phase = _lap(phase_s, "fetch_extract", t_phase)
-            # Rank a SLIM projection and join it back: the heavy text/hrefs
-            # columns never pass through the rank exchange (the single-
-            # partition sort at small waves, the range exchange at large
-            # ones), so every downstream consumer keeps the checkpoint's
-            # parallel partitioning.  The rank map is politeness-bounded
-            # (<= hosts x budget slim rows per wave) — broadcast below the
-            # same wave threshold as the fetch join; above it, plain
-            # equi-join (the rank map is 2 slim columns, so the shuffle is
-            # cheap relative to the wave itself).
-            slim_ranked = wave_rank(
-                pre_rank.select("priority", "host", "url"), small=small
-            ).select("url", "rank_in_wave")
-            extracted = checkpoint(
-                pre_rank.join(
-                    F.broadcast(slim_ranked) if can_broadcast else slim_ranked, "url"
-                )
-                .withColumn("wave", F.lit(wave))
-                .withColumn("n_links", F.size("hrefs"))
-            )
-            _lap(phase_s, "rank", t_phase)
-
-            results_wave = extracted.where(
-                F.coalesce(notify_pred, F.lit(True))
-            ).withColumn("stage", F.lit("EXTRACTED"))
-            if seed_dim is not None:
-                results_wave = results_wave.join(
-                    F.broadcast(seed_dim.select("seed_id", "target_table")),
-                    "seed_id",
-                    "left",
-                )
-            else:
-                results_wave = results_wave.withColumn(
-                    "target_table", F.lit(None).cast("string")
-                )
-            error_rows = missing.select(
-                "url", "host", "depth", F.lit(wave).alias("wave"),
-                F.lit("ERROR").alias("stage"),
-            )
-
-            # --- link expansion + next frontier -------------------------------
-            children = expand_from_hrefs(
-                extracted.select("url", "hrefs", "depth", "seed_id")
-            )
-            merged = _merge_frontier(children, deferred)
-            # Non-compaction waves checkpoint only `children`: the consumed
-            # frontier rows are already recorded in the seen delta, so
-            # children are the wave's ONLY new frontier information —
-            # O(wave) write volume instead of O(|frontier|).
+            with _phase(t, wave, "schedule"):
+                ranked, gwb_eff = _schedule(c, st, authorized, small)
+            with _phase(t, wave, "fetch_extract"):
+                pre_rank, can_broadcast = _fetch_extract(c, st, ranked)
+            with _phase(t, wave, "rank"):
+                extracted = _rank(st, pre_rank, wave, small, can_broadcast)
             compact = (wave + 1) % max(job.frontier_compact_every, 1) == 0
-
-            # --- commit wave ---------------------------------------------------
-            seen_delta_parts = [scheduled.select("url"), skipped.select("url"),
-                                missing.select("url")]
-            if robots_denied is not None:
-                seen_delta_parts.append(robots_denied.select("url"))
-            seen_delta = seen_delta_parts[0]
-            for p in seen_delta_parts[1:]:
-                seen_delta = seen_delta.unionByName(p)
-            seen_delta = seen_delta.distinct().withColumn("wave", F.lit(wave))
-
-            results_out = results_wave.select(
-                "url", "host", "depth", "wave", "rank_in_wave", "seed_id",
-                "warc_ts", "size", "md5_hex", "xxhash", "text", "lang",
-                "extension", "mime", "keywords", "rating", "n_links", "stage",
-                "target_table",
-            ).unionByName(error_rows, allowMissingColumns=True)
-
-            # One aggregation action yields every wave counter (A2 analog).
-            status_counts_df = (
-                scheduled.select(F.lit("scheduled").alias("s"), "size")
-                # 'fetched' duplicates 'scheduled' informationally; the
-                # metrics table carries it, the seen accounting skips it
-                .unionByName(extracted.select(F.lit("fetched").alias("s"), "size"))
-                .unionByName(skipped.select(F.lit("skipped").alias("s"), "size"))
-                .unionByName(missing.select(F.lit("missing").alias("s"), "size"))
-                .unionByName(
-                    robots_denied.select(F.lit("robots_denied").alias("s"), "size")
-                    if robots_denied is not None
-                    else spark.createDataFrame([], "s string, size long")
-                )
-                .unionByName(deferred.select(F.lit("deferred").alias("s"),
-                                             F.lit(None).cast("long").alias("size")))
-                .groupBy("s")
-                .agg(F.count("*").alias("n"), F.sum("size").alias("bytes"))
+            stats, merged = _commit(
+                c, st, wave, t, missing=missing, skipped=skipped, denied=denied,
+                ranked=ranked, extracted=extracted, compact=compact, gwb_eff=gwb_eff,
             )
-            # Every input below reads checkpointed leaves: the collect and
-            # the three concurrent writes each run only their own operators
-            # on top, never the wave's upstream passes again.
-            t_collect = time.time()
-            status_counts = status_counts_df.collect()
-            t_collect = round(time.time() - t_collect, 3)
-            t_write = time.time()
-            wave_timings = store.write_wave_data(
-                wave,
-                results=results_out,
-                seen_delta=seen_delta,
-                frontier=merged if compact else children,
-                frontier_kind="full" if compact else "delta",
-            )
-            wave_timings["write_phase"] = round(time.time() - t_write, 3)
-            wave_timings["collect_metrics"] = t_collect
-            wave_timings.update(phase_s)
-            wave_timings["wave"] = wave
-            stats = {
-                r["s"]: {"n": r["n"], "bytes": r["bytes"] or 0} for r in status_counts
-            }
-            if gwb_eff is not None and job.global_budget_carryover:
-                # token-bucket credit: unspent capacity rolls forward, burst
-                # capped at one extra wave's budget
-                _sched_n = stats.get("scheduled", {}).get("n", 0)
-                gwb_carry = min(
-                    job.global_wave_budget, max(0, gwb_eff - int(_sched_n))
-                )
-            metrics_rows = [
-                (wave, f"{k}_{m}", int(v[m]))
-                for k, v in stats.items()
-                for m in ("n", "bytes")
-            ] or [(wave, "empty", 0)]
-            # per-partition lineage counters (north rule: checkpoints carry
-            # per-partition lineage) — one cheap agg over the extracted leaf
-            t_lc = time.time()
-            lineage_rows = [
-                (wave, int(r["pid"]), int(r["rows"]), int(r["bytes"] or 0))
-                for r in extracted.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"), F.sum("size").alias("bytes"))
-                .collect()
-            ]
-            store.commit_wave(wave, metrics_rows, stats, lineage_rows)
-            wave_timings["lineage_commit"] = round(time.time() - t_lc, 3)
-
-            # Truncate frontier lineage (no exponential plan growth across
-            # waves).  Compaction waves re-read the committed snapshot
-            # (resume path == normal path).  Other waves localCheckpoint the
-            # merged frame instead — executor-local blocks, no second full
-            # write — BEFORE the wave's checkpoints it reads are released.
-            # Only then is the previous frontier released: commit_wave is
-            # past, so nothing reads this wave's candidates again.
-            t0 = time.time()
-            if compact:
-                frontier = store.read_frontier(spark, wave)
-            else:
-                frontier = merged.localCheckpoint(eager=True)
-            _release(frontier_ckpt)
-            frontier_ckpt = None if compact else frontier
-            while wave_ckpts:
-                _release(wave_ckpts.pop())
-            frontier_n = frontier.count()  # footer / leaf count, cheap
-            seen_df = _load_seen(wave + 1)
-            wave_timings["reload_state"] = round(time.time() - t0, 3)
-
-            # --- prefilter incremental maintenance ---------------------------
-            if prefilter is not None:
-                t0 = time.time()
-                upd_log = _maintain_bank(spark, store, prefilter, wave)
-                if upd_log["action"] == "rebuild_scheduled":
-                    prefilter = None
-                upd_log["secs"] = round(time.time() - t0, 3)
-                wave_timings["prefilter_update"] = upd_log
-            if prefilter_probe_log is not None:
-                wave_timings["prefilter"] = prefilter_probe_log
-            wave_timings["plan_build"] = _plan_build_s
-            wave_timings["wall"] = round(time.time() - _wave_t0, 3)
-            all_timings.append(wave_timings)
-            # bank sizing + flip gate: examined-this-wave = everything
-            # except deferred rows (still queued) and the 'fetched'
-            # duplicate of 'scheduled'.  With a horizon, the count is
-            # re-derived from the in-horizon cohorts so aged-out URLs stop
-            # counting (they ARE re-crawlable again).
-            wave_examined = sum(
+            with _phase(t, wave, "reload_state"):
+                _reload(c, st, wave, compact, merged)
+            if st.bank is not None:
+                with _phase(t, wave, "prefilter_update"):
+                    upkeep = _maintain_bank(spark, store, st.bank, wave)
+                if upkeep["action"] == "rebuild_scheduled":
+                    st.bank = None
+                t["prefilter_update"] = {**upkeep, "secs": t["prefilter_update"]}
+            # examined this wave = its seen-delta rows: every status but
+            # deferred (still queued) and 'fetched' (a copy of scheduled)
+            st.seen_cohorts[wave] = sum(
                 v["n"] for k, v in stats.items() if k not in ("deferred", "fetched")
             )
-            if job.seen_horizon_waves is None:
-                seen_count += wave_examined
-            else:
-                seen_wave_counts[wave] = wave_examined
-                lo = (wave + 1) - job.seen_horizon_waves
-                seen_count = sum(
-                    n for w, n in seen_wave_counts.items() if w >= lo
-                )
+            t["wall"] = round(time.time() - wave_t0, 3)
+            all_timings.append(t)
     finally:
         # also on the way out of a wave that raised: nothing is left
         # for the context cleaner
-        for ckpt in wave_ckpts:
-            _release(ckpt)
-        _release(frontier_ckpt)
+        st.release()
+        _release(st.frontier_ckpt)
         pages_meta.unpersist()
         if rules_arr is not None:
             rules_arr.unpersist()

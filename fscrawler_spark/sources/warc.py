@@ -115,9 +115,11 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
             out = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 out.extend(records_to_rows(p, bytes(content)))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in schemas.PAGES.fields]
-            )
+            pages = pd.DataFrame(out, columns=[f.name for f in schemas.PAGES.fields])
+            # UTC-aware, so Spark keeps the instant in any session time zone
+            # (a naive value would be read as session-local)
+            pages["warc_ts"] = pd.to_datetime(pages["warc_ts"], utc=True)
+            yield pages
 
     return files.mapInPandas(parse, schemas.PAGES)
 
@@ -170,13 +172,19 @@ def to_warc_records(
     http = F.concat(
         F.lit(b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"), body
     )
+    ts_s = F.lit("2026-01-01T00:00:00Z")
     if ts_col is not None:
-        ts_s = F.coalesce(
-            F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-            F.lit("2026-01-01T00:00:00Z"),
+        # UTC in any session time zone: built from the epoch, since
+        # date_format renders session-local time
+        secs = F.unix_seconds(F.col(ts_col))
+        tod = F.pmod(secs, F.lit(86400))
+        ts_s = F.when(secs.isNull(), ts_s).otherwise(
+            F.format_string(
+                "%sT%02d:%02d:%02dZ",
+                F.date_from_unix_date(((secs - tod) / 86400).cast("int")).cast("string"),
+                F.floor(tod / 3600), F.floor(tod / 60) % 60, tod % 60,
+            )
         )
-    else:
-        ts_s = F.lit("2026-01-01T00:00:00Z")
     rec = F.concat(
         F.lit(b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
         F.col(url_col).cast("binary"),
@@ -207,13 +215,15 @@ def write_warc_segments(
     filesystem every executor can reach (local dir in local mode, a
     DFS/NFS mount on a cluster — parquet-based archival stays the
     default checkpoint path; this sink is the interchange format).
-    Round-trips through read_warc byte-identically (pytest).
+    Round-trips through read_warc byte-identically (pytest).  Earlier
+    segments in ``out_dir`` are deleted when this is called, so the
+    directory holds only this write's (overwrite semantics).
     """
+    import glob
     import os
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+    for old in glob.glob(os.path.join(out_dir, "part-*.warc*")):
+        os.remove(old)
     recs = to_warc_records(df, url_col, body_col, ts_col).select("record")
 
     def write_part(batches):

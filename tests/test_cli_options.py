@@ -4,6 +4,12 @@ wiring that makes "not given" distinguishable (default=None)."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
+import duckdb
 import pytest
 
 from fscrawler_spark.cli import _flag_over_config, main
@@ -133,131 +139,134 @@ def test_media_meta_subcommand(spark, tmp_path, capsys, monkeypatch):
     capsys.readouterr()
 
 
-def test_cli_text_ops(tmp_path):
-    """`text` subcommand drives winnow/classify/prep end-to-end from a
-    fresh process (the spark-submit surface)."""
-    import json as _json
-    import subprocess
-    import sys
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF001 = "/root/testdata/sf0.001"
+DOCS = f"{SF001}/documents.parquet"
 
-    import duckdb
-
-    for op, min_rows in [("classify", 400), ("prep", 1)]:
-        out = tmp_path / f"text_{op}"
-        r = subprocess.run(
-            [sys.executable, "-m", "fscrawler_spark.cli", "--cores", "4",
-             "text", "--input", "/root/testdata/sf0.001/documents.parquet",
-             "--op", op, "--out", str(out)],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
-        )
-        assert r.returncode == 0, r.stderr[-2000:]
-        payload = _json.loads(r.stdout.strip().splitlines()[-1])
-        assert payload["rows"] >= min_rows, (op, payload)
-        n = duckdb.sql(
-            f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
-        ).fetchone()[0]
-        assert n == payload["rows"]
+# Runs cli.main once per op in one process, so the ops share one JVM
+# (main never stops the session); prints one tagged JSON line per op
+# with its stdout and the traceback it raised, if any.
+_RUN_OPS = """
+import contextlib, io, json, sys, traceback
+from fscrawler_spark.cli import main
+for key, argv in json.loads(sys.argv[1]).items():
+    out, err = io.StringIO(), None
+    try:
+        with contextlib.redirect_stdout(out):
+            main(argv)
+    except (Exception, SystemExit):
+        err = traceback.format_exc()
+    print("CLI-OP " + json.dumps({"key": key, "stdout": out.getvalue(), "error": err}))
+"""
 
 
-def test_cli_profile_ops(tmp_path):
-    """`profile` subcommand drives hll/cms/quantiles end-to-end from a
-    fresh process, and `text --op lmscore` rides the same surface."""
-    import json as _json
-    import subprocess
-    import sys
+@pytest.fixture(scope="module")
+def cli_ops(tmp_path_factory):
+    """Every op of the three CLI tests below, each through cli.main as
+    `python -m fscrawler_spark.cli` would run it, in ONE fresh process
+    (one JVM start instead of thirteen).  `python -m` itself stays
+    covered by test_cli_process_subcommand."""
+    base = tmp_path_factory.mktemp("cli_ops")
 
-    import duckdb
+    def text(op, *extra):
+        return ["text", "--input", DOCS, "--op", op, "--out", str(base / op), *extra]
 
-    for op, extra, min_rows in [
-        ("hll", [], 1),
-        ("cms", [], 30),  # sf0.001 has 15 distinct users -> <= 60 cells
-        ("quantiles", ["--lo", "0.0", "--hi", "1000.0", "--bins", "100"], 1),
-    ]:
-        out = tmp_path / f"profile_{op}"
-        r = subprocess.run(
-            [sys.executable, "-m", "fscrawler_spark.cli", "--cores", "4",
-             "profile", "--input", "/root/testdata/sf0.001/events.parquet",
-             "--op", op, "--out", str(out), *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
-        )
-        assert r.returncode == 0, r.stderr[-2000:]
-        payload = _json.loads(r.stdout.strip().splitlines()[-1])
-        assert payload["rows"] >= min_rows, (op, payload)
-        n = duckdb.sql(
-            f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
-        ).fetchone()[0]
-        assert n == payload["rows"]
+    def profile(op, *extra):
+        return ["profile", "--input", f"{SF001}/events.parquet", "--op", op,
+                "--out", str(base / f"profile_{op}"), *extra]
 
-    out = tmp_path / "text_lmscore"
+    ops = {
+        "classify": text("classify"),
+        "prep": text("prep"),
+        "hll": profile("hll"),
+        "cms": profile("cms"),
+        "quantiles": profile("quantiles", "--lo", "0.0", "--hi", "1000.0",
+                             "--bins", "100"),
+        "lmscore": text("lmscore"),
+        "pack": text("pack", "--cap", "64"),
+        "mixture": text("mixture", "--targets", "en=4000,de=1500,es=1500,fr=1500,zh=1500"),
+        "funnel": text("funnel"),
+        "segdedup": text("segdedup"),
+        "chunks": text("chunks", "--cap", "16", "--stride", "12"),
+        "containment": ["dedup", "--input", DOCS, "--method", "containment",
+                        "--threshold", "0.8", "--max-df", "100",
+                        "--out", str(base / "contain")],
+        "waterfill": ["frontier", "--input", DOCS, "--op", "waterfill",
+                      "--group-col", "source", "--budget", "100",
+                      "--out", str(base / "wf")],
+    }
     r = subprocess.run(
-        [sys.executable, "-m", "fscrawler_spark.cli", "--cores", "4",
-         "text", "--input", "/root/testdata/sf0.001/documents.parquet",
-         "--op", "lmscore", "--out", str(out)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        [sys.executable, "-c", _RUN_OPS,
+         json.dumps({k: ["--cores", "4", *v] for k, v in ops.items()})],
+        capture_output=True, text=True, cwd=ROOT, timeout=900,
+        env={**os.environ, "SPARK_DRIVER_MEM": "2g"},
     )
-    assert r.returncode == 0, r.stderr[-2000:]
-    payload = _json.loads(r.stdout.strip().splitlines()[-1])
-    assert payload["rows"] >= 40, payload
+    done = {}
+    for line in r.stdout.splitlines():
+        if line.startswith("CLI-OP "):
+            rec = json.loads(line[len("CLI-OP "):])
+            done[rec["key"]] = rec
+    return {"dir": base, "ops": done, "stderr": r.stderr[-2000:]}
 
 
-def test_cli_session8_ops(tmp_path):
-    """`text --op pack/mixture/funnel`, `dedup --method containment`,
-    and the new `frontier` subcommand, each end-to-end from a fresh
-    process (the spark-submit surface)."""
-    import json as _json
-    import subprocess
-    import sys
+def _payload(cli_ops, key):
+    """The op's final JSON line, as the CLI printed it."""
+    assert key in cli_ops["ops"], cli_ops["stderr"]
+    rec = cli_ops["ops"][key]
+    assert rec["error"] is None, rec["error"][-2000:]
+    return json.loads(rec["stdout"].strip().splitlines()[-1])
 
-    import duckdb
 
-    docs = "/root/testdata/sf0.001/documents.parquet"
+def _parquet_rows(path):
+    return duckdb.sql(f"SELECT count(*) FROM read_parquet('{path}/*.parquet')").fetchone()[0]
 
-    def run(argv):
-        r = subprocess.run(
-            [sys.executable, "-m", "fscrawler_spark.cli", "--cores", "4", *argv],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
-        )
-        assert r.returncode == 0, r.stderr[-2000:]
-        return _json.loads(r.stdout.strip().splitlines()[-1])
 
-    out = tmp_path / "pack"
-    p = run(["text", "--input", docs, "--op", "pack", "--cap", "64",
-             "--out", str(out)])
+def test_cli_text_ops(cli_ops):
+    """`text` subcommand drives classify/prep end-to-end (the
+    spark-submit surface)."""
+    for op, min_rows in [("classify", 400), ("prep", 1)]:
+        payload = _payload(cli_ops, op)
+        assert payload["rows"] >= min_rows, (op, payload)
+        assert _parquet_rows(cli_ops["dir"] / op) == payload["rows"]
+
+
+def test_cli_profile_ops(cli_ops):
+    """`profile` subcommand drives hll/cms/quantiles end-to-end, and
+    `text --op lmscore` rides the same surface."""
+    for op, min_rows in [
+        ("hll", 1),
+        ("cms", 30),  # sf0.001 has 15 distinct users -> <= 60 cells
+        ("quantiles", 1),
+    ]:
+        payload = _payload(cli_ops, op)
+        assert payload["rows"] >= min_rows, (op, payload)
+        assert _parquet_rows(cli_ops["dir"] / f"profile_{op}") == payload["rows"]
+    assert _payload(cli_ops, "lmscore")["rows"] >= 40
+
+
+def test_cli_session8_ops(cli_ops):
+    """`text --op pack/mixture/funnel/segdedup/chunks`, `dedup --method
+    containment` and the `frontier` subcommand, each end-to-end."""
+    base = cli_ops["dir"]
+    p = _payload(cli_ops, "pack")
     assert p["rows"] >= 16  # at least one sequence per bucket
     # every packed sequence holds >= 1 doc and the doc total re-adds
     tot = duckdb.sql(
-        f"SELECT sum(n_docs), min(n_docs) FROM read_parquet('{out}/*.parquet')"
+        f"SELECT sum(n_docs), min(n_docs) FROM read_parquet('{base / 'pack'}/*.parquet')"
     ).fetchone()
     assert tot[0] == 500 and tot[1] >= 1
 
-    p = run(["text", "--input", docs, "--op", "mixture",
-             "--targets", "en=4000,de=1500,es=1500,fr=1500,zh=1500",
-             "--out", str(tmp_path / "mix")])
-    assert p["rows"] == 5
+    assert _payload(cli_ops, "mixture")["rows"] == 5
+    assert _payload(cli_ops, "funnel")["rows"] == 3
+    assert _payload(cli_ops, "segdedup")["rows"] == 500  # report total over documents
+    assert _payload(cli_ops, "chunks")["rows"] >= 500
 
-    p = run(["text", "--input", docs, "--op", "funnel",
-             "--out", str(tmp_path / "funnel")])
-    assert p["rows"] == 3
-
-    p = run(["text", "--input", docs, "--op", "segdedup",
-             "--out", str(tmp_path / "segd")])
-    assert p["rows"] == 500  # report total over documents
-
-    p = run(["text", "--input", docs, "--op", "chunks", "--cap", "16",
-             "--stride", "12", "--out", str(tmp_path / "chunks")])
-    assert p["rows"] >= 500
-
-    p = run(["dedup", "--input", docs, "--method", "containment",
-             "--threshold", "0.8", "--max-df", "100",
-             "--out", str(tmp_path / "contain")])
+    p = _payload(cli_ops, "containment")
     assert p["pairs"] >= 0 and p["dropped"] <= p["pairs"]
 
-    p = run(["frontier", "--input", docs, "--op", "waterfill",
-             "--group-col", "source", "--budget", "100",
-             "--out", str(tmp_path / "wf")])
-    assert p["rows"] == 20
+    assert _payload(cli_ops, "waterfill")["rows"] == 20
     alloc = duckdb.sql(
-        f"SELECT sum(alloc) FROM read_parquet('{tmp_path / 'wf'}/*.parquet')"
+        f"SELECT sum(alloc) FROM read_parquet('{base / 'wf'}/*.parquet')"
     ).fetchone()[0]
     assert alloc <= 100
 

@@ -146,22 +146,19 @@ def test_bloom_mode_identical(spark, pages_df, robots_df, tiny, sim, tmp_path_fa
 
 
 def test_salted_path_parity_with_truncation(
-    spark, pages_df, robots_df, tiny, tmp_path_factory
+    spark, pages_df, robots_df, tiny, tmp_path_factory, monkeypatch
 ):
     """Engine==simulator with the salted politeness phase FORCED on
-    (small_wave_threshold=0) and budget=1 so phase-1 truncation really
-    happens (any host with >=3 queued URLs truncates at salt_buckets=2).
+    (SMALL_WAVE_ROWS=0) and budget=1 so phase-1 truncation really
+    happens (any host with >=3 queued URLs truncates at SALT_BUCKETS=2).
     r01 advisory (high): truncated rows used to vanish from the frontier
     — neither scheduled nor deferred — which this parity run would catch
     as a seen-set/order divergence in later waves."""
-    job = CrawlJob(
-        **{
-            **JOB.__dict__,
-            "politeness_budget": 1,
-            "small_wave_threshold": 0,
-            "salt_buckets": 2,
-        }
-    )
+    from fscrawler_spark.plans import wave_loop
+
+    monkeypatch.setattr(wave_loop, "SMALL_WAVE_ROWS", 0)
+    monkeypatch.setattr(wave_loop, "SALT_BUCKETS", 2)
+    job = CrawlJob(**{**JOB.__dict__, "politeness_budget": 1})
     sim2 = simulate_crawl(tiny["pages"], tiny["seeds"], job, tiny["robots"])
     assert any(m["deferred_n"] > 0 for m in sim2.metrics), (
         "fixture+budget must actually defer rows for this test to bite"

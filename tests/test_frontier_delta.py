@@ -186,19 +186,37 @@ def test_raising_wave_releases_every_checkpoint(
     the pages-metadata and robots-rules caches, wave 0's frontier
     checkpoint (JOB_DELTA: wave 0 is not a compaction) and wave 1's
     four checkpoints — instead of leaving them to the context
-    cleaner."""
+    cleaner.  The same crawl checks the phase job labels: the fetch join
+    runs under "wave N / fetch_extract", and the caller's own job
+    description is back after the raise."""
+    from fscrawler_spark.plans import wave_loop
+
+    sc = spark.sparkContext
     commit = CheckpointStore.commit_wave
+    fetch_join = wave_loop.fetch_join
+    labels = []
 
     def failing_commit(self, wave, *args, **kwargs):
         if wave == 1:
             raise RuntimeError("commit failed")
         return commit(self, wave, *args, **kwargs)
 
+    def labelled_fetch_join(*args, **kwargs):
+        labels.append(sc.getLocalProperty("spark.job.description"))
+        return fetch_join(*args, **kwargs)
+
     monkeypatch.setattr(CheckpointStore, "commit_wave", failing_commit)
+    monkeypatch.setattr(wave_loop, "fetch_join", labelled_fetch_join)
     before = _persisted(spark)
-    with pytest.raises(RuntimeError, match="commit failed"):
-        run_crawl(
-            spark, pages_df, tiny["seeds"], JOB_DELTA, robots=robots_df,
-            checkpoint_dir=str(tmp_path / "ck"),
-        )
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="commit failed"):
+            run_crawl(
+                spark, pages_df, tiny["seeds"], JOB_DELTA, robots=robots_df,
+                checkpoint_dir=str(tmp_path / "ck"),
+            )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert labels == ["wave 0 / fetch_extract", "wave 1 / fetch_extract"]
     assert _persisted(spark) - before == set()

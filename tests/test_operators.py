@@ -368,12 +368,17 @@ def test_mixture_weights_hits_target_mass(spark):
 
     docs = [
         (0, "a b c d", "en"), (1, "a b", "en"), (2, "x y z", "de"),
-        (3, "p q r s t u", "de"), (4, "m", "fr"),
+        (3, "p q r s t u", "de"), (4, "m", "fr"), (5, "k l", "xx"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
     targets = {"en": 5000, "de": 3000, "fr": 2000}
     rows = {r["lang"]: r for r in mixture_weights(df, "lang", "text", targets).collect()}
-    total = 4 + 2 + 3 + 6 + 1  # 16 tokens
+    # a group without a target keeps its row and its tokens in the total
+    xx = rows["xx"]
+    assert (xx["n_docs"], xx["tok_sum"]) == (1, 2)
+    assert xx["target_share_e4"] is None and xx["weight_e6"] is None
+    assert xx["resampled_tok"] is None
+    total = 4 + 2 + 3 + 6 + 1 + 2  # 18 tokens
     for lang, tok in [("en", 6), ("de", 9), ("fr", 1)]:
         w = targets[lang] * total * 100 // tok
         assert rows[lang]["weight_e6"] == w

@@ -55,6 +55,69 @@ def test_read_warc_spark_plain_and_gz(spark, tmp_path):
     assert got == sorted(want + want)
 
 
+def test_write_warc_segments_overwrites_earlier_segments(spark, tmp_path):
+    """Segments are named by partition id, so a second write into the
+    same directory must clear the first one's: read_warc then returns
+    exactly the second write's rows, not stale segments as well."""
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.sources.warc import write_warc_segments
+
+    rows = [(d["url"], d["warc_ts"], d["html"]) for d in ROWS]
+    df = spark.createDataFrame(  # one row per partition
+        spark.sparkContext.parallelize(rows, len(rows)),
+        "url string, warc_ts timestamp, html binary",
+    )
+    out = str(tmp_path / "segs")
+    assert write_warc_segments(df, out).count() == len(rows)
+    second = df.where(F.col("url") == ROWS[1]["url"]).coalesce(1)
+    assert write_warc_segments(second, out).count() == 1
+    got = [(r["url"], bytes(r["html"])) for r in read_warc(spark, out).collect()]
+    assert got == [(ROWS[1]["url"], ROWS[1]["html"])]
+
+
+def test_warc_date_is_utc_in_any_session_time_zone(spark, tmp_path):
+    """WARC-Date names the UTC instant whatever the session time zone,
+    and read_warc returns that instant: written and read back in a
+    New York session, then read again in a UTC one."""
+    from pyspark.sql import functions as F
+
+    from fscrawler_spark.sources.warc import to_warc_records, write_warc_segments
+
+    epoch = 1508888125  # 2017-10-24T23:35:25Z
+    df = spark.createDataFrame(
+        [("http://a.example/t", epoch), ("http://a.example/null", None)],
+        "url string, e long",
+    ).select(
+        "url",
+        F.timestamp_seconds("e").alias("warc_ts"),
+        F.lit(b"<html>t</html>").alias("html"),
+    )
+    out = str(tmp_path / "tz")
+
+    def read_epoch():
+        got = read_warc(spark, out).where(F.col("url") == "http://a.example/t")
+        return got.select(F.unix_seconds("warc_ts")).first()[0]
+
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        records = {r["url"]: bytes(r["record"]) for r in to_warc_records(df).collect()}
+        write_warc_segments(df, out, compress=False).collect()
+        local_epoch = read_epoch()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+    assert b"\r\nWARC-Date: 2017-10-24T23:35:25Z\r\n" in records["http://a.example/t"]
+    # a missing timestamp keeps the fixed default date
+    assert b"\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" in records["http://a.example/null"]
+    assert local_epoch == epoch
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        assert read_epoch() == epoch
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+
+
 def test_warc_roundtrip_property():
     """Hypothesis: arbitrary (url, body) sets survive the serialize ->
     parse roundtrip byte-for-byte, including bodies containing CRLF
