@@ -51,6 +51,37 @@ def _flag_over_config(cfg: dict, key: str, flag_value, default):
     return flag_value if flag_value is not None else cfg.get(key, default)
 
 
+# CrawlJob fields a crawl config may set (the filter chains are built
+# from their specs separately)
+_CRAWL_CONFIG_KEYS = (
+    "politeness_budget", "max_waves", "wave_cap", "global_wave_budget",
+    "global_budget_carryover", "invert", "use_bloom", "respect_robots",
+    "broadcast_wave_threshold", "frontier_compact_every",
+)
+_UNSET = object()
+
+
+def _crawl_job(cfg: dict, args: argparse.Namespace) -> CrawlJob:
+    """The crawl's CrawlJob from the config and the flags.  It gets only
+    the keys a flag or the config gives, so each default is decided in
+    one place (plans/job.py)."""
+    flags = {
+        "politeness_budget": args.budget,
+        "max_waves": args.waves,
+        "global_wave_budget": args.global_budget,
+        "use_bloom": args.bloom,
+    }
+    kw = {}
+    for key in _CRAWL_CONFIG_KEYS:
+        val = _flag_over_config(cfg, key, flags.get(key), _UNSET)
+        if val is not _UNSET:
+            kw[key] = val
+    for key in ("skip_filters", "notify_filters"):
+        if key in cfg:
+            kw[key] = tuple(build_filters(cfg[key]))
+    return CrawlJob(**kw)
+
+
 def cmd_crawl(args: argparse.Namespace) -> None:
     cfg = _load_config(args.config)
     spark = get_spark("fscrawler_crawl", cores=args.cores)
@@ -78,25 +109,7 @@ def cmd_crawl(args: argparse.Namespace) -> None:
     if not seed_rows:
         sys.exit("no seeds: pass --seeds parquet or config with seeds: [...]")
 
-    job = CrawlJob(
-        politeness_budget=_flag_over_config(
-            cfg, "politeness_budget", args.budget, 8
-        ),
-        max_waves=_flag_over_config(cfg, "max_waves", args.waves, 50),
-        wave_cap=cfg.get("wave_cap"),
-        global_wave_budget=_flag_over_config(
-            cfg, "global_wave_budget", args.global_budget, None
-        ),
-        global_budget_carryover=cfg.get("global_budget_carryover", False),
-        skip_filters=tuple(build_filters(cfg.get("skip_filters", []))),
-        notify_filters=tuple(build_filters(cfg.get("notify_filters", []))),
-        invert=cfg.get("invert", False),
-        use_bloom=_flag_over_config(cfg, "use_bloom", args.bloom, False),
-        bloom_fpp=cfg.get("bloom_fpp", 0.01),
-        respect_robots=cfg.get("respect_robots", True),
-        broadcast_wave_threshold=cfg.get("broadcast_wave_threshold", 2_000_000),
-        frontier_compact_every=cfg.get("frontier_compact_every", 8),
-    )
+    job = _crawl_job(cfg, args)
     res = run_crawl(
         spark,
         pages,

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from fscrawler_spark.functions.urls import mime_type, url_extension, url_name
+
 # Reference caps extraction at 10 MB (text_extractor_file_processor.py:27,37).
 MAX_TEXT_EXTRACT_BYTES = 10 * 1024 * 1024
 
@@ -239,3 +241,29 @@ def content_rating(name: Column, full: Column) -> Column:
     return F.when(run == "", F.lit(None).cast("int")).otherwise(
         F.least(F.length(run), F.lit(5))
     )
+
+
+def processor_columns() -> dict[str, Column]:
+    """The processor chain (C4-C8) over a page row's `url` and raw
+    `html` columns, as named Columns in plan order — the one definition
+    the batch wave loop and the streaming pipeline both project: C4
+    digests, C8 text, the link scrape, the extension, C7's
+    content-sniffed mime (magic bytes — only a SNIFF_HEAD_BYTES head
+    enters Arrow — with the extension map as fallback), C5 keywords
+    and C6 rating."""
+    url, html = F.col("url"), F.col("html")
+    name = url_name(url)
+    return {
+        "size": F.length(html).cast("long"),
+        "md5_hex": F.md5(html),
+        "xxhash": F.xxhash64(html),
+        "text": extract_text_udf(html),
+        "hrefs": extract_hrefs_udf(html),
+        "extension": url_extension(url),
+        "mime": F.coalesce(
+            sniff_mime_udf(F.expr(f"substring(html, 1, {SNIFF_HEAD_BYTES})")),
+            mime_type(url),
+        ),
+        "keywords": keywords_udf(name),
+        "rating": content_rating(name, url),
+    }

@@ -5,11 +5,10 @@ At 10^10 seen URLs a 1%-FPP bloom bank is ~12 GB: it neither fits on
 the driver nor should transit it every wave.  StoredBank keeps the
 bank in a parquet table of shard blobs inside the checkpoint directory:
 
-  {path}/v{K}/          parquet (shard int, payload binary) — one
-                        bloom bit array per shard
-  {path}/meta.json      kind ("bloom") + geometry + shard->version
-                        manifest + crawl bookkeeping (n_added,
-                        merged_upto)
+  {path}/v{version}/    parquet (shard int, payload binary) — one
+                        bloom bit array per shard; the ONE live version
+  {path}/meta.json      kind ("bloom") + geometry + the live version +
+                        crawl bookkeeping (n_added, merged_upto)
 
 and every operation is an executor-side Spark job over that table:
 
@@ -17,27 +16,30 @@ and every operation is an executor-side Spark job over that table:
               dedup.NumpyBloom locally -> .write.parquet(v0).  No
               collect — payload bytes go executor -> storage, never
               through the driver.
-  merge_delta the wave's seen-delta hashes COGROUP the bank scan
-              FILTERED to the delta's touched shards; updated blobs
-              land in a new version dir.  Job input ~ O(|delta| +
-              touched shard blobs); untouched shards keep their old
-              file (manifest pointer unchanged) — nothing is copied.
+  merge_delta the wave's seen-delta hashes COGROUP the whole live
+              version; a shard with delta rows ORs them into its blob,
+              a shard without passes its blob through unchanged, and
+              the result is the next version dir.  It rewrites every
+              shard: there are defaultParallelism shards, so a wave
+              delta of more than a few times that many URLs touches
+              all of them anyway (at 10^10 URLs every wave's delta
+              does); only a tail wave with fewer URLs than shards
+              copies blobs it did not change.
   probe       dedup.cogroup_probe fed by the bank-table scan: filter
               bytes flow storage -> executors.
-  compact     rewrites the latest blobs into one version dir when the
-              manifest spans too many (merge-on-read -> snapshot, the
-              same model as the delta frontier checkpoint).
 
-The driver holds ONLY meta.json content: geometry ints and a
-shard->version dict (O(n_shards) ints) — never a payload byte.
+The driver holds ONLY meta.json content (geometry and bookkeeping
+ints) — never a payload byte.
 
-Crash-consistency: meta.json is written atomically (tmp + rename)
-AFTER each version dir, and records `merged_upto` = the last wave
-whose seen-delta is merged in; a resume reopens the bank instead of
-rebuilding it and replays the committed seen-deltas it missed
-(wave_loop.py), so the bank lags the exact seen table by at most one
-recoverable step.  Reference parity: this is the durable analog of the
-reference's in-memory processed-paths set + DB probe
+Crash-consistency: a merge writes v{version+1} in full, THEN saves
+meta.json atomically (tmp + rename) with the new version and the crawl
+lineage together, THEN deletes every other version dir — a crash at
+any point leaves meta.json naming a complete version.  `merged_upto`
+is the last wave whose seen-delta is merged in; a resume reopens the
+bank instead of rebuilding it and replays the committed seen-deltas it
+missed (wave_loop.py), so the bank lags the exact seen table by at
+most one recoverable step.  Reference parity: this is the durable
+analog of the reference's in-memory processed-paths set + DB probe
 (app/crawler/file_system_crawler.py:70,412-415).
 """
 
@@ -78,15 +80,11 @@ class StoredBank:
         self.n_hashes = int(meta.get("n_hashes") or 0)
         self.capacity_items = int(meta["capacity_items"])
         self.n_added = int(meta.get("n_added", 0))
-        # shard -> version dir index holding that shard's LATEST blob
-        self.shard_versions: dict[int, int] = {
-            int(k): int(v) for k, v in meta.get("shard_versions", {}).items()
-        }
-        self.next_version = int(meta.get("next_version", 1))
+        # the live payload dir v{version}; None for a meta.json of an
+        # older layout (a per-shard version manifest), which a reader
+        # must treat as absent like a bank of another kind
+        self.version: int | None = meta.get("version")
         self.merged_upto = int(meta.get("merged_upto", -1))
-        # manifest spanning more live versions than this triggers an
-        # auto-compaction on the next merge (bounds read fan-out)
-        self.compact_span = int(meta.get("compact_span", 12))
 
     # -- persistence -------------------------------------------------------
     def _meta_path(self) -> str:
@@ -105,10 +103,8 @@ class StoredBank:
                 "n_hashes": self.n_hashes,
                 "capacity_items": self.capacity_items,
                 "n_added": self.n_added,
-                "shard_versions": {str(k): v for k, v in self.shard_versions.items()},
-                "next_version": self.next_version,
+                "version": self.version,
                 "merged_upto": self.merged_upto,
-                "compact_span": self.compact_span,
             },
         )
 
@@ -120,21 +116,6 @@ class StoredBank:
     @classmethod
     def exists(cls, path: str) -> bool:
         return os.path.isfile(os.path.join(path, "meta.json"))
-
-    def total_bytes(self) -> int:
-        """Payload bytes on storage (live versions only) — file sizes,
-        no payload read."""
-        live = set(self.shard_versions.values())
-        total = 0
-        for v in live:
-            d = self._vdir(v)
-            if os.path.isdir(d):
-                total += sum(
-                    os.path.getsize(os.path.join(d, f))
-                    for f in os.listdir(d)
-                    if f.endswith(".parquet")
-                )
-        return total
 
     # -- build -------------------------------------------------------------
     @classmethod
@@ -149,8 +130,8 @@ class StoredBank:
     ) -> "StoredBank":
         """Distributed build straight to storage: hash shards ->
         mapInPandas builds each shard's bloom locally -> parquet v0.
-        The only driver materialization is the shard-id manifest
-        read-back — payload column pruned by Catalyst."""
+        A shard no row hashed to gets no blob row; the probe answers
+        it definitely-unseen."""
         spark = df.sparkSession
         if n_shards is None:
             n_shards = max(1, spark.sparkContext.defaultParallelism)
@@ -180,12 +161,6 @@ class StoredBank:
                 rows.append((s, b.bits.tobytes()))
             yield pd.DataFrame(rows, columns=["shard", "payload"])
 
-        vdir = os.path.join(path, "v0")
-        parted.mapInPandas(build_shards, BANK_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(vdir)
-        # manifest read-back: shard ids only (payloads pruned)
-        built = spark.read.parquet(vdir).select("shard").collect()
         bank = cls(
             path,
             {
@@ -194,40 +169,23 @@ class StoredBank:
                 "n_bits": n_bits,
                 "n_hashes": n_hashes,
                 "capacity_items": n_items,
-                "shard_versions": {str(int(r["shard"])): 0 for r in built},
+                "version": 0,
             },
         )
+        parted.mapInPandas(build_shards, BANK_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(bank._vdir(0))
         bank.save()
         return bank
 
     # -- read views --------------------------------------------------------
-    def bank_df(
-        self, spark: SparkSession, shards: "list[int] | None" = None
-    ) -> DataFrame:
-        """Latest blob per shard (optionally restricted to `shards`):
-        per live version dir, scan it filtered to the shards whose
-        manifest pointer is that version — the isin predicate pushes
-        into the parquet scan, so a merge touching k shards reads ~k
-        blobs, not the bank.  Only (shard, payload) is read, so a blob
-        file carrying further columns reads the same."""
-        byver: dict[int, list[int]] = {}
-        want = None if shards is None else set(shards)
-        for s, v in self.shard_versions.items():
-            if want is None or s in want:
-                byver.setdefault(v, []).append(s)
-        parts = []
-        for v, ss in sorted(byver.items()):
-            parts.append(
-                spark.read.parquet(self._vdir(v))
-                .where(F.col("shard").isin(ss))
-                .select("shard", "payload")
-            )
-        if not parts:
-            return spark.createDataFrame([], BANK_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def bank_df(self, spark: SparkSession) -> DataFrame:
+        """The live version's blobs, one row per populated shard.  Only
+        (shard, payload) is read, so a blob file carrying further
+        columns reads the same."""
+        return spark.read.parquet(self._vdir(self.version)).select(
+            "shard", "payload"
+        )
 
     # -- probe -------------------------------------------------------------
     def probe(self, candidates: DataFrame, url_col: str) -> DataFrame:
@@ -252,44 +210,25 @@ class StoredBank:
         *,
         meta_updates: dict | None = None,
     ) -> None:
-        """Insert `delta`'s urls: cogroup their hashes with ONLY the
-        touched shards' blobs; write updated blobs to a new version
-        dir; repoint the manifest.
+        """Insert `delta`'s urls: cogroup their hashes with the live
+        version's blobs and write every shard to the next version dir
+        (a shard without delta rows passes its blob through), then
+        switch meta.json to it and delete every other version dir.
 
         meta_updates (attrs like merged_upto/n_added) are applied in
-        the SAME atomic meta.json write that repoints the payloads: a
+        the SAME atomic meta.json write that switches the version: a
         crash can never leave a bank whose blobs contain a delta its
         lineage does not claim, so a resume replays exactly the deltas
-        the bank is missing."""
-        spark = delta.sparkSession
-        # persisted: the touched-shard collect below and the cogroup
-        # write both consume it — without the cache the delta would be
-        # scanned + hashed twice per wave (the hot incremental path)
+        the bank is missing.  An empty delta rewrites the blobs as
+        they are and still advances the lineage."""
         hashed = _hash_cols(delta, col).withColumn(
             "_s", F.pmod(F.col("_h1"), F.lit(self.n_shards)).cast("int")
-        ).persist()
-        # touched-shard ids: config-scale collect (<= n_shards ints) so
-        # the bank side scans only those blobs
-        touched = [
-            int(r["_s"]) for r in hashed.select("_s").distinct().collect()
-        ]
-        if not touched:
-            hashed.unpersist()
-            if meta_updates:  # empty delta still advances the lineage
-                self._apply_meta(meta_updates)
-                self.save()
-            return
-        bank_side = self.bank_df(spark, shards=touched)
+        )
         n_bits, n_hashes = self.n_bits, self.n_hashes
 
         def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame(
-                    {
-                        "shard": pd.Series([], dtype="int32"),
-                        "payload": pd.Series([], dtype=object),
-                    }
-                )
+            if left.empty:  # no delta rows: the blob passes through
+                return right
             bits = (
                 None if right.empty
                 else np.frombuffer(right.iloc[0]["payload"], np.uint64).copy()
@@ -302,52 +241,25 @@ class StoredBank:
                 {"shard": [int(left["_s"].iloc[0])], "payload": [b.bits.tobytes()]}
             )
 
-        v = self.next_version
-        vdir = self._vdir(v)
-        try:
-            (
-                hashed.groupBy("_s")
-                .cogroup(bank_side.groupBy("shard"))
-                .applyInPandas(fn, BANK_SCHEMA)
-                .write.mode("overwrite")
-                .parquet(vdir)
-            )
-        finally:
-            hashed.unpersist()
-        written = spark.read.parquet(vdir).select("shard").collect()
-        for r in written:
-            self.shard_versions[int(r["shard"])] = v
-        self.next_version = v + 1
+        nxt = self.version + 1
+        (
+            hashed.groupBy("_s")
+            .cogroup(self.bank_df(delta.sparkSession).groupBy("shard"))
+            .applyInPandas(fn, BANK_SCHEMA)
+            .write.mode("overwrite")
+            .parquet(self._vdir(nxt))
+        )
+        self.version = nxt
         if meta_updates:
             self._apply_meta(meta_updates)
         self.save()
-        self._gc()
-        if len(set(self.shard_versions.values())) > self.compact_span:
-            self.compact(spark)
+        live = f"v{nxt}"
+        for d in os.listdir(self.path):
+            if d.startswith("v") and d != live:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def _apply_meta(self, updates: dict) -> None:
         for k, val in updates.items():
             if not hasattr(self, k):
                 raise AttributeError(f"unknown bank meta field {k!r}")
             setattr(self, k, val)
-
-    def _gc(self) -> None:
-        """Drop version dirs no shard references anymore (a merge that
-        repoints a dir's last shard fully supersedes it)."""
-        live = {f"v{v}" for v in set(self.shard_versions.values())}
-        for d in os.listdir(self.path):
-            if d.startswith("v") and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def compact(self, spark: SparkSession) -> None:
-        """Rewrite every shard's latest blob into one snapshot version
-        and drop superseded dirs — bounds bank_df's read fan-out the
-        same way the frontier's compaction snapshots bound the delta
-        replay."""
-        v = self.next_version
-        vdir = self._vdir(v)
-        self.bank_df(spark).write.mode("overwrite").parquet(vdir)
-        self.shard_versions = {s: v for s in self.shard_versions}
-        self.next_version = v + 1
-        self.save()
-        self._gc()

@@ -23,8 +23,9 @@ re-run speedup the reference reports (156x, README.md:111-115)
 becomes "anti-join input shrinks to the filter-positive fraction".
 
 This module holds the shard kernel (NumpyBloom), the routed probe
-plan and the exact tier; bankstore.py owns the bank's storage, build
-and incremental maintenance.
+plan and the exact tier; bankstore.py owns the bank's storage (one
+live version of shard blobs), its build and the per-wave delta merge
+that writes the next version.
 """
 
 from __future__ import annotations

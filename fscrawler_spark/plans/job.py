@@ -28,11 +28,13 @@ class CrawlJob:
         queue maxsize analog, app/config/config.py:129-131).
     use_bloom — two-tier seen-set probe: a stored bloom bank in front
         of the exact anti-join (operators/dedup.py,
-        operators/bankstore.py).
+        operators/bankstore.py); each wave's seen delta is merged into
+        the bank's next version.
     respect_robots — apply robots deny prefixes before scheduling.
 
     Physical-plan constants that change no output (SALT_BUCKETS,
-    SMALL_WAVE_ROWS, FLIP_SEEN_FACTOR) live in plans/wave_loop.py.
+    SMALL_WAVE_ROWS, FLIP_SEEN_FACTOR, and the bank's BLOOM_FPP and
+    PREFILTER_CAPACITY_FACTOR) live in plans/wave_loop.py.
     """
 
     politeness_budget: int = 8
@@ -60,7 +62,6 @@ class CrawlJob:
     notify_filters: tuple[FilterSpec, ...] = field(default_factory=tuple)
     invert: bool = False
     use_bloom: bool = False
-    bloom_fpp: float = 0.01
     respect_robots: bool = True
     # Broadcast the scheduled set into the fetch join (and the rank map
     # back over the extracted cache) only when the wave's SCHEDULED set
@@ -73,11 +74,6 @@ class CrawlJob:
     # the exact ranked count — not the pending frontier size, so a huge
     # frontier with a tight budget keeps the fast broadcast path.)
     broadcast_wave_threshold: int = 2_000_000
-    # The prefilter bank is built once sized for factor x current seen
-    # count, then maintained incrementally from per-wave deltas; a full
-    # rebuild happens only when the count outgrows capacity (geometric
-    # doubling -> O(log n) rebuilds over a crawl, amortized O(n)).
-    prefilter_capacity_factor: float = 8.0
     # Accepted only as "table" (the bank's one home: a parquet table of
     # shard blobs in the checkpoint dir, operators/bankstore.StoredBank);
     # any other value raises ValueError.

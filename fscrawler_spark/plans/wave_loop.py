@@ -38,23 +38,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fscrawler_spark.filters.builders import and_all, or_any
-from fscrawler_spark.functions.extract import (
-    SNIFF_HEAD_BYTES,
-    extract_text_udf,
-    keywords_udf,
-    content_rating,
-    sniff_mime_udf,
-)
+from fscrawler_spark.functions.extract import processor_columns
 from fscrawler_spark.functions.urls import (
-    mime_type,
     url_depth,
-    url_extension,
     url_host,
-    url_name,
     url_normalize,
     url_path,
 )
-from fscrawler_spark.functions.extract import extract_hrefs_udf
 from fscrawler_spark.operators.bankstore import StoredBank
 from fscrawler_spark.operators.dedup import anti_join_seen
 from fscrawler_spark.operators.links import expand_from_hrefs
@@ -75,6 +65,13 @@ _FRONTIER_COLS = ["url", "host", "depth", "priority", "seed_id"]
 # seen:frontier ~ 2:1).  The frontier must also be under
 # CrawlJob.broadcast_wave_threshold for the flip to be safe.
 FLIP_SEEN_FACTOR = 4.0
+# The prefilter bank is built once sized for PREFILTER_CAPACITY_FACTOR
+# x the current seen count at BLOOM_FPP, then maintained from per-wave
+# deltas; a full rebuild happens only when the count outgrows capacity
+# (geometric growth -> O(log n) rebuilds over a crawl, amortized O(n)).
+# A false positive only costs the exact tier a row, never an output.
+BLOOM_FPP = 0.01
+PREFILTER_CAPACITY_FACTOR = 8.0
 # Salt buckets of the politeness window's phase 1 on large waves.
 SALT_BUCKETS = 32
 # Waves whose pending frontier is below this row count take the
@@ -283,7 +280,6 @@ def reconstruct_frontier(
 def _open_bank(
     spark: SparkSession,
     store: CheckpointStore,
-    job: CrawlJob,
     wave: int,
     reload: bool,
     seen_df: DataFrame,
@@ -297,14 +293,15 @@ def _open_bank(
     which committed seen-deltas it already holds; any it missed (killed
     between wave commit and bank save) are replayed as ordinary delta
     merges.  A stored bank whose kind is not "bloom" (an older build's
-    other filter) counts as absent: read as bloom bits its payload
-    would give false negatives.  Otherwise (fresh crawl, such a bank,
-    or a capacity resize) this is the ONLY full build, sized with
-    prefilter_capacity_factor headroom."""
+    other filter) or whose meta names no live version (an older
+    build's per-shard manifest layout) counts as absent: read as this
+    layout's bloom bits it would give false negatives.  Otherwise
+    (fresh crawl, such a bank, or a capacity resize) this is the ONLY
+    full build, sized with PREFILTER_CAPACITY_FACTOR headroom."""
     path = os.path.join(store.root, "prefilter")
     if reload and StoredBank.exists(path):
         bank = StoredBank.open(path)
-        if bank.kind == "bloom":
+        if bank.kind == "bloom" and bank.version is not None:
             replayed = 0
             for w in store.committed_waves():
                 if bank.merged_upto < w < wave:
@@ -318,10 +315,8 @@ def _open_bank(
                     )
                     replayed += dn
             return bank, {"action": "loaded", "rows_hashed": replayed}
-    capacity = max(int(job.prefilter_capacity_factor * max(seen_count, 1)), 4096)
-    bank = StoredBank.build(
-        seen_df, "url", path, n_items=capacity, fpp=job.bloom_fpp,
-    )
+    capacity = max(int(PREFILTER_CAPACITY_FACTOR * max(seen_count, 1)), 4096)
+    bank = StoredBank.build(seen_df, "url", path, n_items=capacity, fpp=BLOOM_FPP)
     bank.n_added, bank.merged_upto = seen_count, wave - 1
     bank.save()
     return bank, {"action": "full_build", "rows_hashed": seen_count}
@@ -332,22 +327,22 @@ def _maintain_bank(
     store: CheckpointStore,
     bank: StoredBank,
     wave: int,
+    delta_n: int,
 ) -> dict:
-    """Fold wave `wave`'s committed seen delta into the bank and return
-    the log record.  The merge is an executor-side cogroup against the
-    touched shards' blobs only; the lineage (n_added, merged_upto —
-    what lets a resumed run reload instead of rebuild) rides the same
-    atomic meta write that repoints the payloads.  The O(|seen|) work
-    happens only on capacity resizes: action "rebuild_scheduled" tells
-    the caller to drop the bank so the next filtered wave does a full
-    build — which, built from the horizon-filtered seen view, is also
-    where URLs aged out by seen_horizon_waves leave the bank."""
-    delta = store.read_seen_delta(spark, wave)
-    delta_n = delta.count()  # footer count, cheap
+    """Fold wave `wave`'s committed seen delta (`delta_n` rows, the
+    wave's examined count) into the bank and return the log record.
+    The merge is one executor-side cogroup writing the bank's next
+    version; the lineage (n_added, merged_upto — what lets a resumed
+    run reload instead of rebuild) rides the same atomic meta write
+    that switches to it.  The O(|seen|) work happens only on capacity
+    resizes: action "rebuild_scheduled" tells the caller to drop the
+    bank so the next filtered wave does a full build — which, built
+    from the horizon-filtered seen view, is also where URLs aged out by
+    seen_horizon_waves leave the bank."""
     if bank.n_added + delta_n > bank.capacity_items:
         return {"action": "rebuild_scheduled", "rows_hashed": delta_n}
     bank.merge_delta(
-        delta, "url",
+        store.read_seen_delta(spark, wave), "url",
         meta_updates={"n_added": bank.n_added + delta_n, "merged_upto": wave},
     )
     return {"action": "delta_merge", "rows_hashed": delta_n}
@@ -535,7 +530,7 @@ def _admit(
         seen_count = st.seen_count(wave, job.seen_horizon_waves)
         if job.use_bloom and st.bank is None:
             st.bank, t["prefilter"] = _open_bank(
-                c.spark, c.store, job, wave, reload, st.seen, seen_count
+                c.spark, c.store, wave, reload, st.seen, seen_count
             )
         elif job.use_bloom:
             t["prefilter"] = {"action": "reuse", "rows_hashed": 0}
@@ -623,27 +618,10 @@ def _fetch_extract(
     )
     scheduled = ranked.where(F.col("scheduled")).drop("scheduled", "host_rank")
     fetched = fetch_join(c.pages, scheduled.drop("warc_ts", "size"), can_broadcast)
-    name = url_name(F.col("url"))
-    return st.checkpoint(
-        fetched.withColumn("size", F.length("html").cast("long"))
-        .withColumn("md5_hex", F.md5("html"))
-        .withColumn("xxhash", F.xxhash64("html"))
-        .withColumn("text", extract_text_udf(F.col("html")))
-        .withColumn("hrefs", extract_hrefs_udf(F.col("html")))
-        .withColumn("extension", url_extension(F.col("url")))
-        # C7: content-sniffed mime (magic bytes — only a 64-byte head
-        # enters Arrow), extension map as fallback
-        .withColumn(
-            "mime",
-            F.coalesce(
-                sniff_mime_udf(F.expr(f"substring(html, 1, {SNIFF_HEAD_BYTES})")),
-                mime_type(F.col("url")),
-            ),
-        )
-        .withColumn("keywords", keywords_udf(name))
-        .withColumn("rating", content_rating(name, F.col("url")))
-        .drop("html")  # the binary never crosses a shuffle
-    ), can_broadcast
+    for col_name, col in processor_columns().items():
+        fetched = fetched.withColumn(col_name, col)
+    # the binary never crosses a shuffle
+    return st.checkpoint(fetched.drop("html")), can_broadcast
 
 
 def _rank(
@@ -861,17 +839,19 @@ def run_crawl(
             )
             with _phase(t, wave, "reload_state"):
                 _reload(c, st, wave, compact, merged)
-            if st.bank is not None:
-                with _phase(t, wave, "prefilter_update"):
-                    upkeep = _maintain_bank(spark, store, st.bank, wave)
-                if upkeep["action"] == "rebuild_scheduled":
-                    st.bank = None
-                t["prefilter_update"] = {**upkeep, "secs": t["prefilter_update"]}
             # examined this wave = its seen-delta rows: every status but
             # deferred (still queued) and 'fetched' (a copy of scheduled)
             st.seen_cohorts[wave] = sum(
                 v["n"] for k, v in stats.items() if k not in ("deferred", "fetched")
             )
+            if st.bank is not None:
+                with _phase(t, wave, "prefilter_update"):
+                    upkeep = _maintain_bank(
+                        spark, store, st.bank, wave, st.seen_cohorts[wave]
+                    )
+                if upkeep["action"] == "rebuild_scheduled":
+                    st.bank = None
+                t["prefilter_update"] = {**upkeep, "secs": t["prefilter_update"]}
             t["wall"] = round(time.time() - wave_t0, 3)
             all_timings.append(t)
     finally:

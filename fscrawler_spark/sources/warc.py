@@ -209,7 +209,8 @@ def write_warc_segments(
 ) -> DataFrame:
     """Distributed WARC sink: every partition writes its own
     ``part-<pid>.warc[.gz]`` segment (per-record gzip members, the
-    Common Crawl layout) and reports (path, n_records, n_bytes) — one
+    Common Crawl layout) and reports (path, n_records, n_bytes), with
+    n_bytes the size of the segment file as written — one
     segment per task is exactly how CC shards a snapshot, so segment
     parallelism follows data parallelism.  ``out_dir`` must be a
     filesystem every executor can reach (local dir in local mode, a
@@ -240,11 +241,10 @@ def write_warc_segments(
         ext = "warc.gz" if compress else "warc"
         path = os.path.join(out_dir, f"part-{pid:05d}.{ext}")
         os.makedirs(out_dir, exist_ok=True)
-        n = 0
         with open(path, "wb") as fh:
             for raw in bufs:
                 fh.write(gzip.compress(raw) if compress else raw)
-                n += len(raw)
+            n = fh.tell()  # bytes in the segment file, gzip members included
         yield pd.DataFrame(
             {"path": [path], "n_records": [len(bufs)], "n_bytes": [n]}
         )

@@ -27,20 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fscrawler_spark import schemas
-from fscrawler_spark.functions.extract import (
-    SNIFF_HEAD_BYTES,
-    content_rating,
-    extract_hrefs_udf,
-    extract_text_udf,
-    keywords_udf,
-    sniff_mime_udf,
-)
-from fscrawler_spark.functions.urls import (
-    mime_type,
-    url_extension,
-    url_host,
-    url_name,
-)
+from fscrawler_spark.functions.extract import processor_columns
+from fscrawler_spark.functions.urls import url_host
 
 
 def read_pages_stream(
@@ -56,33 +44,26 @@ def read_pages_stream(
 
 
 def extract_stream(pages: DataFrame) -> DataFrame:
-    """Streaming extraction: same processors as the batch wave loop
-    (C4 hash, C8 text, link scrape, C5 keywords, C6 rating), plus
-    exact url-dedup standing in for the seen-set.
+    """Streaming extraction: the batch wave loop's processor columns
+    (functions/extract.processor_columns: C4 hash, C8 text, link
+    scrape, C7 mime, C5 keywords, C6 rating), plus exact url-dedup
+    standing in for the seen-set.
 
     Deliberately NO watermark on the dedup: web-archive timestamps span
     years, so an event-time watermark would discard re-ordered files as
     late data; the seen-set contract is exact (J2), which in streaming
     means unbounded dedup state (the state store plays the role the
     seen table + bloom play in the batch engine)."""
-    name = url_name(F.col("url"))
+    p = processor_columns()
     return (
         pages.dropDuplicates(["url"])  # streaming seen-set (state store)
         .select(
             "url",
             url_host(F.col("url")).alias("host"),
             F.col("warc_ts"),
-            F.length("html").cast("long").alias("size"),
-            F.md5("html").alias("md5_hex"),
-            extract_text_udf(F.col("html")).alias("text"),
-            F.size(extract_hrefs_udf(F.col("html"))).alias("n_links"),
-            url_extension(F.col("url")).alias("extension"),
-            F.coalesce(
-                sniff_mime_udf(F.expr(f"substring(html, 1, {SNIFF_HEAD_BYTES})")),
-                mime_type(F.col("url")),
-            ).alias("mime"),
-            keywords_udf(name).alias("keywords"),
-            content_rating(name, F.col("url")).alias("rating"),
+            *(p[k].alias(k) for k in ("size", "md5_hex", "text")),
+            F.size(p["hrefs"]).alias("n_links"),
+            *(p[k].alias(k) for k in ("extension", "mime", "keywords", "rating")),
             "lang",
         )
     )

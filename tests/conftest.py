@@ -35,3 +35,26 @@ def pages_df(spark, tiny):
 @pytest.fixture(scope="session")
 def robots_df(spark, tiny):
     return spark.createDataFrame(_rows(tiny["robots"], schemas.ROBOTS), schemas.ROBOTS)
+
+
+@pytest.fixture(scope="session")
+def assert_matches_simulator(spark, tiny):
+    """assert_matches_simulator(res, job): the engine crawl `res` equals
+    the scalar simulator (the reference implementation) running `job`
+    over the tiny fixture — every result row's (url, wave,
+    rank_in_wave, stage) and the seen set."""
+    from fscrawler_spark.plans.simulator import simulate_crawl
+
+    def check(res, job):
+        sim = simulate_crawl(tiny["pages"], tiny["seeds"], job, tiny["robots"])
+        got = {
+            (r["url"], r["wave"], r["rank_in_wave"], r["stage"])
+            for r in res.results(spark).collect()
+        }
+        assert got == {
+            (r["url"], r["wave"], r.get("rank_in_wave"), r["stage"])
+            for r in sim.results
+        }
+        assert {r["url"] for r in res.seen(spark).collect()} == sim.seen
+
+    return check

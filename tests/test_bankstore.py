@@ -4,15 +4,12 @@ home of the seen prefilter; the bank never transits the driver:
 * probe parity: the two-tier result (table-scan-fed cogroup probe +
   exact tier) equals the exact join;
 * one blob row per shard: a probe task holds 1/n_shards of the bank;
-* O(touched) maintenance: a delta merge writes ONLY the touched
-  shards' blobs to the new version dir and leaves every other shard's
-  file untouched on disk;
-* plan pruning: a shard-restricted bank read pushes the shard filter
-  into the parquet scan;
+* one live version: every merge writes the next version dir in full
+  and deletes the rest, and a reopened handle reads the same bank;
 * the driver never holds payload bytes (meta.json is ints only);
-* wave-loop e2e parity with the exact-only crawl + resume-reload (no
+* wave-loop e2e parity with the scalar simulator + resume-reload (no
   rebuild), and a full build instead of a reload for a stored bank that
-  is not bloom.
+  is not bloom or has an older layout.
 """
 
 from __future__ import annotations
@@ -74,62 +71,6 @@ def test_stored_bank_one_row_per_shard(spark, tmp_path):
     assert per_shard * 4 <= sum(len(r["payload"]) for r in rows)
 
 
-def test_stored_merge_touches_only_delta_shards(spark, tmp_path):
-    seen = _urls(spark, 0, 500)
-    bank = StoredBank.build(
-        seen, "url", str(tmp_path / "bank"), n_items=4000, n_shards=8
-    )
-    v0 = os.path.join(bank.path, "v0")
-    v0_state = {
-        f: os.path.getmtime(os.path.join(v0, f))
-        for f in os.listdir(v0)
-        if f.endswith(".parquet")
-    }
-    delta = _urls(spark, 500, 503)  # 3 urls -> at most 3 of 8 shards
-    expected_shards = {
-        int(r["_s"])
-        for r in delta.select(
-            F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("_s")
-        ).distinct().collect()
-    }
-    bank.merge_delta(delta, "url")
-    v1 = os.path.join(bank.path, "v1")
-    written = {
-        int(r["shard"]) for r in spark.read.parquet(v1).select("shard").collect()
-    }
-    assert written == expected_shards  # O(touched shards), not O(bank)
-    assert len(written) < 8, "delta touched every shard; test fixture too big"
-    # untouched shards' blobs were not rewritten
-    assert v0_state == {
-        f: os.path.getmtime(os.path.join(v0, f))
-        for f in os.listdir(v0)
-        if f.endswith(".parquet")
-    }
-    # manifest repointed exactly the touched shards
-    for s, v in bank.shard_versions.items():
-        assert v == (1 if s in written else 0)
-    # merged rows now probe as seen; two-tier stays exact
-    all_seen = seen.unionByName(delta)
-    cand = _urls(spark, 400, 700)
-    exact = {r["url"] for r in anti_join_seen(cand, all_seen).collect()}
-    stored = {
-        r["url"] for r in anti_join_seen(cand, all_seen, bloom=bank).collect()
-    }
-    assert stored == exact
-
-
-def test_bank_df_pushes_shard_filter_into_scan(spark, tmp_path):
-    bank = StoredBank.build(
-        _urls(spark, 0, 400), "url", str(tmp_path / "bank"),
-        n_items=1600, n_shards=8,
-    )
-    one = bank.bank_df(spark, shards=[3])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "shard" in plan
-    rows = one.select("shard").collect()
-    assert {int(r["shard"]) for r in rows} <= {3}
-
-
 def test_driver_holds_no_payload_bytes(spark, tmp_path):
     bank = StoredBank.build(
         _urls(spark, 0, 2000), "url", str(tmp_path / "bank"),
@@ -144,31 +85,24 @@ def test_driver_holds_no_payload_bytes(spark, tmp_path):
     with open(os.path.join(bank.path, "meta.json")) as fh:
         meta = json.load(fh)
     assert "payload" not in json.dumps(meta)
-    assert bank.total_bytes() > 0  # measured from file sizes, not reads
 
 
 def test_auto_compaction_bounds_versions_and_keeps_parity(spark, tmp_path):
+    """No compaction is needed: six merges leave exactly one version dir on disk, the one
+    meta.json names, and two-tier == exact through the handle and
+    through a reopened one."""
     seen = _urls(spark, 0, 300)
     bank = StoredBank.build(
         seen, "url", str(tmp_path / "bank"), n_items=8000, n_shards=4,
     )
-    bank.compact_span = 3
     total = seen
     for i in range(6):
         d = _urls(spark, 300 + i * 25, 325 + i * 25)
         bank.merge_delta(d, "url")
         total = total.unionByName(d)
-    live = set(bank.shard_versions.values())
-    assert len(live) <= 3
-    # version dirs no shard references anymore were GC'd from disk
+    assert bank.version == 6
     on_disk = {d for d in os.listdir(bank.path) if d.startswith("v")}
-    assert on_disk == {f"v{v}" for v in live}
-    # an explicit snapshot compaction collapses to one live version
-    bank.compact(spark)
-    assert len(set(bank.shard_versions.values())) == 1
-    assert {d for d in os.listdir(bank.path) if d.startswith("v")} == {
-        f"v{next(iter(bank.shard_versions.values()))}"
-    }
+    assert on_disk == {"v6"}
     cand = _urls(spark, 200, 600)
     exact = {r["url"] for r in anti_join_seen(cand, total).collect()}
     stored = {
@@ -177,6 +111,7 @@ def test_auto_compaction_bounds_versions_and_keeps_parity(spark, tmp_path):
     assert stored == exact
     # a reopened handle sees the same state (meta round-trip)
     re = StoredBank.open(bank.path)
+    assert re.version == 6
     stored2 = {
         r["url"] for r in anti_join_seen(cand, total, bloom=re).collect()
     }
@@ -187,28 +122,16 @@ def test_auto_compaction_bounds_versions_and_keeps_parity(spark, tmp_path):
 # wave-loop e2e
 
 
-def _order(res, spark):
-    return {
-        (r["url"], r["wave"], r["rank_in_wave"])
-        for r in res.results(spark).collect()
-    }
-
-
 @pytest.mark.parametrize("kind", ["bloom"])
 def test_crawl_stored_bank_e2e_parity(
-    spark, pages_df, robots_df, tiny, tmp_path, kind
+    spark, pages_df, robots_df, tiny, tmp_path, kind, assert_matches_simulator
 ):
-    base = dict(politeness_budget=4, max_waves=4)
-    r_exact = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, use_bloom=False),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "exact"),
-    )
+    job = CrawlJob(politeness_budget=4, max_waves=4, use_bloom=True)
     r_tab = run_crawl(
-        spark, pages_df, tiny["seeds"],
-        CrawlJob(**base, use_bloom=True),
+        spark, pages_df, tiny["seeds"], job,
         robots=robots_df, checkpoint_dir=str(tmp_path / "tab"),
     )
-    assert _order(r_exact, spark) == _order(r_tab, spark)
+    assert_matches_simulator(r_tab, job)
     # the bank table lives inside the checkpoint dir and was
     # incrementally maintained (one build + per-wave delta merges)
     assert StoredBank.open(str(tmp_path / "tab" / "prefilter")).kind == kind
@@ -219,7 +142,7 @@ def test_crawl_stored_bank_e2e_parity(
 
 
 def test_crawl_stored_bank_resume_reloads_not_rebuilds(
-    spark, pages_df, robots_df, tiny, tmp_path
+    spark, pages_df, robots_df, tiny, tmp_path, assert_matches_simulator
 ):
     base = dict(politeness_budget=4, use_bloom=True)
     ck = str(tmp_path / "ck")
@@ -227,24 +150,20 @@ def test_crawl_stored_bank_resume_reloads_not_rebuilds(
         spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=2),
         robots=robots_df, checkpoint_dir=ck,
     )
+    job = CrawlJob(**base, max_waves=5)
     r2 = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=5),
+        spark, pages_df, tiny["seeds"], job,
         robots=robots_df, checkpoint_dir=ck, resume=True,
     )
     actions = [t.get("prefilter", {}).get("action") for t in r2.timings]
     assert actions[0] == "loaded", f"resume rebuilt the bank: {actions}"
     assert "full_build" not in actions
-    # resumed run == one uninterrupted exact-only run
-    r_full = run_crawl(
-        spark, pages_df, tiny["seeds"],
-        CrawlJob(politeness_budget=4, max_waves=5, use_bloom=False),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "full"),
-    )
-    assert _order(r2, spark) == _order(r_full, spark)
+    # resumed run == one uninterrupted run
+    assert_matches_simulator(r2, job)
 
 
 def test_crawl_stored_bank_reload_replays_missed_delta(
-    spark, pages_df, robots_df, tiny, tmp_path
+    spark, pages_df, robots_df, tiny, tmp_path, assert_matches_simulator
 ):
     """Crash between wave commit and bank save: the bank's merged_upto
     lags the committed waves; the resume reconcile replays the missing
@@ -260,8 +179,9 @@ def test_crawl_stored_bank_reload_replays_missed_delta(
     assert bank.merged_upto == 2
     bank.merged_upto = 1
     bank.save()
+    job = CrawlJob(**base, max_waves=5)
     r2 = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base, max_waves=5),
+        spark, pages_df, tiny["seeds"], job,
         robots=robots_df, checkpoint_dir=ck, resume=True,
     )
     first = next(t["prefilter"] for t in r2.timings if "prefilter" in t)
@@ -269,16 +189,11 @@ def test_crawl_stored_bank_reload_replays_missed_delta(
     # the replayed delta re-inserts wave 2's cohort (idempotent for the
     # filter: double-inserted fingerprints only cost false-positive rate)
     assert first["rows_hashed"] > 0
-    r_full = run_crawl(
-        spark, pages_df, tiny["seeds"],
-        CrawlJob(politeness_budget=4, max_waves=5, use_bloom=False),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "full"),
-    )
-    assert _order(r2, spark) == _order(r_full, spark)
+    assert_matches_simulator(r2, job)
 
 
 def test_crawl_full10_regime_parity(
-    spark, pages_df, robots_df, tiny, tmp_path
+    spark, pages_df, robots_df, tiny, tmp_path, assert_matches_simulator
 ):
     """The COMPLETE 10^10-URL knob set, on together (VERDICT r3 #6):
     stored bloom bank + horizon aging machinery + flip-gated exact
@@ -286,10 +201,6 @@ def test_crawl_full10_regime_parity(
     cohort ages out inside the run, so the schedule must equal the
     all-defaults crawl exactly."""
     base = dict(politeness_budget=4, max_waves=4)
-    r_def = run_crawl(
-        spark, pages_df, tiny["seeds"], CrawlJob(**base),
-        robots=robots_df, checkpoint_dir=str(tmp_path / "def"),
-    )
     r_f10 = run_crawl(
         spark, pages_df, tiny["seeds"],
         CrawlJob(
@@ -297,7 +208,7 @@ def test_crawl_full10_regime_parity(
         ),
         robots=robots_df, checkpoint_dir=str(tmp_path / "f10"),
     )
-    assert _order(r_def, spark) == _order(r_f10, spark)
+    assert_matches_simulator(r_f10, CrawlJob(**base))
     # every feature actually engaged
     assert StoredBank.exists(str(tmp_path / "f10" / "prefilter"))
     assert {t.get("frontier_kind") for t in r_f10.timings} == {"delta"}
@@ -346,13 +257,23 @@ def test_merge_delta_meta_updates_single_atomic_save(spark, tmp_path, monkeypatc
     assert again.merged_upto == 4 and again.n_added == 360
 
 
+@pytest.mark.parametrize(
+    "stale_meta",
+    [
+        {"kind": "legacy"},
+        # an older build's per-shard version manifest, no live version
+        {"version": None, "shard_versions": {"0": 0}, "next_version": 1},
+    ],
+    ids=["non_bloom", "old_layout"],
+)
 def test_crawl_resume_rebuilds_a_non_bloom_bank(
-    spark, pages_df, robots_df, tiny, tmp_path
+    spark, pages_df, robots_df, tiny, tmp_path, stale_meta
 ):
     """A stored bank whose meta.json kind is not "bloom" (an older
-    build's filter) cannot be read as bloom bits without false
-    negatives: the resume treats it as absent and does the one full
-    build instead of reloading it."""
+    build's filter), or whose meta names no live version (an older
+    build's per-shard manifest layout), cannot be read as this layout's
+    bloom bits without false negatives: the resume treats it as absent
+    and does the one full build instead of reloading it."""
     base = dict(politeness_budget=4, use_bloom=True)
     ck = str(tmp_path / "ck")
     run_crawl(
@@ -362,7 +283,9 @@ def test_crawl_resume_rebuilds_a_non_bloom_bank(
     meta_path = os.path.join(ck, "prefilter", "meta.json")
     with open(meta_path) as fh:
         meta = json.load(fh)
-    meta["kind"] = "legacy"
+    meta.update(stale_meta)
+    if meta["version"] is None:
+        del meta["version"]
     with open(meta_path, "w") as fh:
         json.dump(meta, fh)
     r2 = run_crawl(
@@ -370,4 +293,5 @@ def test_crawl_resume_rebuilds_a_non_bloom_bank(
         robots=robots_df, checkpoint_dir=ck, resume=True,
     )
     assert r2.timings[0]["prefilter"]["action"] == "full_build"
-    assert StoredBank.open(os.path.join(ck, "prefilter")).kind == "bloom"
+    rebuilt = StoredBank.open(os.path.join(ck, "prefilter"))
+    assert rebuilt.kind == "bloom" and rebuilt.version is not None

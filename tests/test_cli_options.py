@@ -12,7 +12,7 @@ import sys
 import duckdb
 import pytest
 
-from fscrawler_spark.cli import _flag_over_config, main
+from fscrawler_spark.cli import _crawl_job, _flag_over_config, main
 from fscrawler_spark.plans.job import CrawlJob
 
 
@@ -24,6 +24,21 @@ def test_flag_beats_config_beats_default():
     assert _flag_over_config(cfg, "use_bloom", None, False) is True
     # neither -> default
     assert _flag_over_config({}, "use_bloom", None, False) is False
+
+
+def test_crawl_job_takes_only_given_keys():
+    """The crawl's CrawlJob restates no default: with no flag and no
+    config key it IS CrawlJob(); a config key, then a flag, override."""
+    import argparse
+
+    none = argparse.Namespace(budget=None, waves=None, global_budget=None, bloom=None)
+    assert _crawl_job({}, none) == CrawlJob()
+    cfg = {"max_waves": 7, "use_bloom": True, "wave_cap": 9}
+    assert _crawl_job(cfg, none) == CrawlJob(max_waves=7, use_bloom=True, wave_cap=9)
+    flags = argparse.Namespace(budget=2, waves=3, global_budget=None, bloom=False)
+    assert _crawl_job(cfg, flags) == CrawlJob(
+        politeness_budget=2, max_waves=3, use_bloom=False, wave_cap=9
+    )
 
 
 def test_frontier_flag_removed(monkeypatch):

@@ -4,7 +4,7 @@
   delta merge equals a full build over seen + delta; the per-wave
   filter job reads ONLY the wave's seen delta (never the full seen
   set), full rebuilds happen only on capacity resizes, and results
-  stay identical to the exact-only run;
+  stay identical to the scalar simulator's;
 - seen-horizon aging: re-crawl actually occurs, and the bank's stale
   positives for aged-out URLs resolve exactly (parity with the
   no-filter run);
@@ -71,27 +71,14 @@ def test_bloom_delta_merge_equals_full_rebuild(spark, tmp_path):
 
 
 def test_crawl_prefilter_delta_only_and_parity(
-    spark, pages_df, robots_df, tiny, tmp_path
+    spark, pages_df, robots_df, tiny, tmp_path, assert_matches_simulator
 ):
-    job_exact = CrawlJob(politeness_budget=4, max_waves=4, use_bloom=False)
     job_inc = CrawlJob(politeness_budget=4, max_waves=4, use_bloom=True)
-    r_exact = run_crawl(
-        spark, pages_df, tiny["seeds"], job_exact, robots=robots_df,
-        checkpoint_dir=str(tmp_path / "exact"),
-    )
     r_inc = run_crawl(
         spark, pages_df, tiny["seeds"], job_inc, robots=robots_df,
         checkpoint_dir=str(tmp_path / "inc"),
     )
-    a = {
-        (r["url"], r["wave"], r["rank_in_wave"])
-        for r in r_exact.results(spark).collect()
-    }
-    b = {
-        (r["url"], r["wave"], r["rank_in_wave"])
-        for r in r_inc.results(spark).collect()
-    }
-    assert a == b
+    assert_matches_simulator(r_inc, job_inc)
     # maintenance log: exactly one full build (first filtered wave);
     # every later update is a delta merge whose row count < total seen
     probe_actions = [t.get("prefilter", {}).get("action") for t in r_inc.timings]

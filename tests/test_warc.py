@@ -5,6 +5,8 @@ from __future__ import annotations
 import datetime
 import gzip
 
+import pytest
+
 from fscrawler_spark import schemas
 from fscrawler_spark.sources.warc import (
     iter_warc_records,
@@ -74,6 +76,26 @@ def test_write_warc_segments_overwrites_earlier_segments(spark, tmp_path):
     assert write_warc_segments(second, out).count() == 1
     got = [(r["url"], bytes(r["html"])) for r in read_warc(spark, out).collect()]
     assert got == [(ROWS[1]["url"], ROWS[1]["html"])]
+
+
+@pytest.mark.parametrize("compress", [True, False])
+def test_write_warc_segments_reports_file_bytes(spark, tmp_path, compress):
+    """n_bytes is what each segment file holds on disk — the gzip
+    members when compressed, not the uncompressed record bytes."""
+    import os
+
+    from fscrawler_spark.sources.warc import write_warc_segments
+
+    rows = [(d["url"], d["warc_ts"], d["html"]) for d in ROWS]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2),
+        "url string, warc_ts timestamp, html binary",
+    )
+    report = write_warc_segments(df, str(tmp_path / "segs"), compress=compress).collect()
+    assert report
+    assert sum(r["n_bytes"] for r in report) == sum(
+        os.path.getsize(r["path"]) for r in report
+    )
 
 
 def test_warc_date_is_utc_in_any_session_time_zone(spark, tmp_path):
